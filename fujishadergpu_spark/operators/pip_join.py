@@ -26,9 +26,9 @@ Physical shape (SURVEY.md §7.2 M2):
   coarse fields to workers, reference core/dask_processor.py:1011-1025);
   ``broadcast_build=False`` forces the sort-merge path for the
   polygons-too-big case.
-- **Refinement**: even-odd ray casting, boundary-inclusive, as an
-  Arrow pandas UDF vectorized per polygon group within each batch —
-  no per-row Python.
+- **Refinement**: even-odd ray casting, boundary-inclusive, as one
+  Arrow pandas UDF holding the padded ring matrices in its closure,
+  vectorized over each whole batch — no per-row Python.
 """
 
 from __future__ import annotations
@@ -48,8 +48,8 @@ from ..functions import cells
 def polygon_cover(polygons: DataFrame, res: int, ring_col: str = "ring") -> DataFrame:
     """Explode polygons to covering cells at ``res`` (bbox cover).
 
-    Adds ``cell_id`` plus flattened ``ring_lon``/``ring_lat`` arrays
-    (Arrow-friendlier than array<struct> for the refinement UDF).
+    Replaces the ring column with ``cell_id``: the refinement UDF
+    holds the rings itself (PipIndex), so build rows stay narrow.
     All JVM-side: bbox from transform/array_min, cover cells from
     sequence() explodes.
     """
@@ -80,17 +80,11 @@ def polygon_cover(polygons: DataFrame, res: int, ring_col: str = "ring") -> Data
         F.concat(
             F.lit("polygon_cover: ring crosses the antimeridian or has out-of-range "
                   "coords (split at ±180 first); ring_lon="),
-            F.col("ring_lon").cast("string"),
+            lons.cast("string"),
         ),
     )
-    out = (
+    return (
         polygons.withColumns(
-            {
-                "ring_lon": lons,
-                "ring_lat": lats,
-            }
-        )
-        .withColumns(
             {
                 "_x0": cx(F.array_min(lons)) + F.coalesce(guard.cast("long"), F.lit(0)),
                 "_x1": cx(F.array_max(lons)),
@@ -108,7 +102,6 @@ def polygon_cover(polygons: DataFrame, res: int, ring_col: str = "ring") -> Data
         )
         .drop("_x0", "_x1", "_y0", "_y1", "_cx", "_cy", ring_col)
     )
-    return out
 
 
 def auto_res(polygons: DataFrame, ring_col: str = "ring", lo: int = 3, hi: int = 12) -> int:
@@ -132,78 +125,6 @@ def auto_res(polygons: DataFrame, ring_col: str = "ring", lo: int = 3, hi: int =
 
 # ------------------------- exact refinement --------------------------
 
-def _raycast_group(px: np.ndarray, py: np.ndarray, rx: np.ndarray, ry: np.ndarray) -> np.ndarray:
-    """Even-odd ray cast of points (px=lon, py=lat) against one ring,
-    vectorized over points; boundary-inclusive (a point exactly on an
-    edge or vertex is inside — matches SQL BETWEEN semantics on
-    rectangles, which the DuckDB oracle uses)."""
-    inside = np.zeros(px.shape[0], dtype=bool)
-    onedge = np.zeros(px.shape[0], dtype=bool)
-    nv = rx.shape[0]
-    j = nv - 1
-    for i in range(nv):  # loop over ring vertices (4-8 typically), vectorized over points
-        xi, yi, xj, yj = rx[i], ry[i], rx[j], ry[j]
-        cond = (yi > py) != (yj > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = np.where(cond, (xj - xi) * (py - yi) / (yj - yi) + xi, 0.0)
-        inside ^= cond & (px < t)
-        cross = (xj - xi) * (py - yi) - (yj - yi) * (px - xi)
-        within = (
-            (px >= np.minimum(xi, xj)) & (px <= np.maximum(xi, xj))
-            & (py >= np.minimum(yi, yj)) & (py <= np.maximum(yi, yj))
-        )
-        onedge |= (cross == 0.0) & within
-        j = i
-    return inside | onedge
-
-
-@pandas_udf(BooleanType())
-def pip_contains_udf(
-    polygon_id: pd.Series, lat: pd.Series, lon: pd.Series,
-    ring_lon: pd.Series, ring_lat: pd.Series,
-) -> pd.Series:
-    """Arrow batch ray cast, fully vectorized over the whole batch:
-    rings are padded to the batch max vertex count (pad = repeat of
-    vertex 0, a degenerate edge that can never flip parity or add an
-    on-edge hit beyond the true vertex), then the vertex loop runs
-    (max_nv) vectorized passes over all rows at once — no per-polygon
-    grouping, no per-row Python."""
-    n = len(lat)
-    if n == 0:
-        return pd.Series(np.zeros(0, dtype=bool))
-    px = lon.to_numpy(dtype=np.float64)
-    py = lat.to_numpy(dtype=np.float64)
-    rings_x = ring_lon.to_numpy()
-    rings_y = ring_lat.to_numpy()
-    nv = np.fromiter((len(r) for r in rings_x), dtype=np.int64, count=n)
-    max_nv = int(nv.max())
-    rx = np.empty((n, max_nv), dtype=np.float64)
-    ry = np.empty((n, max_nv), dtype=np.float64)
-    for i in range(n):  # row fill only; the geometry below is columnar
-        k = nv[i]
-        rx[i, :k] = rings_x[i]
-        ry[i, :k] = rings_y[i]
-        rx[i, k:] = rings_x[i][0]
-        ry[i, k:] = rings_y[i][0]
-    inside = np.zeros(n, dtype=bool)
-    onedge = np.zeros(n, dtype=bool)
-    xj, yj = rx[:, max_nv - 1], ry[:, max_nv - 1]
-    for i in range(max_nv):
-        xi, yi = rx[:, i], ry[:, i]
-        cond = (yi > py) != (yj > py)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = np.where(cond, (xj - xi) * (py - yi) / (yj - yi) + xi, 0.0)
-        inside ^= cond & (px < t)
-        cross = (xj - xi) * (py - yi) - (yj - yi) * (px - xi)
-        within = (
-            (px >= np.minimum(xi, xj)) & (px <= np.maximum(xi, xj))
-            & (py >= np.minimum(yi, yj)) & (py <= np.maximum(yi, yj))
-        )
-        onedge |= (cross == 0.0) & within
-        xj, yj = xi, yi
-    return pd.Series(inside | onedge)
-
-
 def make_pip_closure_udf(ring_rows: list[tuple[int, np.ndarray, np.ndarray]]):
     """Refinement UDF with the ring table in the closure.
 
@@ -215,16 +136,15 @@ def make_pip_closure_udf(ring_rows: list[tuple[int, np.ndarray, np.ndarray]]):
     in the kernel allocator under 32-way concurrency).
 
     Scale note: this rides the same assumption as broadcasting the
-    build side (polygon table fits in executor memory). For
-    larger-than-memory polygon sets use pip_contains_udf with ring
-    columns instead (rings_in_closure=False).
+    build side (polygon table fits in executor memory). An empty ring
+    table is valid: its join has no candidates.
     """
     pids = np.array([r[0] for r in ring_rows], dtype=np.int64)
     if len(np.unique(pids)) != len(pids):
         raise ValueError("pip index: duplicate polygon_id in ring table")
     order = np.argsort(pids)
     pids = pids[order]
-    max_nv = max(len(ring_rows[i][1]) for i in range(len(ring_rows)))
+    max_nv = max((len(r[1]) for r in ring_rows), default=1)
     n_poly = len(ring_rows)
     RX = np.empty((n_poly, max_nv), dtype=np.float64)
     RY = np.empty((n_poly, max_nv), dtype=np.float64)
@@ -250,10 +170,10 @@ def make_pip_closure_udf(ring_rows: list[tuple[int, np.ndarray, np.ndarray]]):
         # -> IndexError) — possible when pip_join is called with an
         # index built from a different polygon table
         rows = np.minimum(rows, len(pids) - 1)
-        if not (pids[rows] == ids).all():
-            missing = ids[pids[rows] != ids][:5]
+        bad = pids[rows] != ids if len(pids) else np.ones(n, dtype=bool)
+        if bad.any():
             raise ValueError(
-                f"pip index/polygon-table mismatch: ids {missing.tolist()} not in index"
+                f"pip index/polygon-table mismatch: ids {ids[bad][:5].tolist()} not in index"
             )
         rx = RX[rows]
         ry = RY[rows]
@@ -327,7 +247,6 @@ def pip_join(
     broadcast_build: bool | None = None,
     salt: int | None = None,
     point_salt_col: str | None = None,
-    rings_in_closure: bool = True,
     index: PipIndex | None = None,
 ) -> DataFrame:
     """points ⋈ polygons on covering-cell equality + exact refinement.
@@ -340,21 +259,17 @@ def pip_join(
     over S shuffle partitions (use with broadcast_build=False; under
     broadcast there is no shuffle to skew).
 
-    ``rings_in_closure`` (default): the candidate rows carry only
-    polygon_id (narrow join output) and the refinement UDF holds the
-    padded ring matrices in its closure — the fast path whenever the
-    polygon table fits in memory (same condition as broadcasting).
-    Set False to stream ring arrays through the join instead
-    (arbitrarily large polygon tables).
+    The candidate rows carry only polygon_id (narrow join output); the
+    refinement UDF holds the padded ring matrices in its closure
+    (``index``, built here when not given). An empty polygon table
+    joins to zero rows.
     """
     if index is not None:
         res = index.res
     elif res is None:
         res = auto_res(polygons)
     build = polygon_cover(polygons, res)
-    if rings_in_closure:
-        contains_udf = (index or PipIndex(polygons, res, polygon_id_col)).contains_udf
-        build = build.drop("ring_lon", "ring_lat")
+    contains_udf = (index or PipIndex(polygons, res, polygon_id_col)).contains_udf
     probe = points.withColumn("cell_id", cells.cell_of(F.col(lat_col), F.col(lon_col), res))
 
     join_keys = ["cell_id"]
@@ -370,17 +285,5 @@ def pip_join(
         build = build.hint("merge")
 
     cand = probe.join(build, on=join_keys, how="inner")
-    if rings_in_closure:
-        refined = cand.filter(
-            contains_udf(F.col(polygon_id_col), F.col(lat_col), F.col(lon_col))
-        )
-        drop = ["cell_id"] + (["_salt"] if salt else [])
-    else:
-        refined = cand.filter(
-            pip_contains_udf(
-                F.col(polygon_id_col), F.col(lat_col), F.col(lon_col),
-                F.col("ring_lon"), F.col("ring_lat"),
-            )
-        )
-        drop = ["cell_id", "ring_lon", "ring_lat"] + (["_salt"] if salt else [])
-    return refined.drop(*drop)
+    refined = cand.filter(contains_udf(F.col(polygon_id_col), F.col(lat_col), F.col(lon_col)))
+    return refined.drop(*join_keys)

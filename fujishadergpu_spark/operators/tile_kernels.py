@@ -10,12 +10,31 @@ This is the direct re-expression of the reference's tile engine:
   halo-expanded window contains it, then ``groupBy(tile)`` — the
   shuffle IS the halo exchange (SURVEY.md §2.A A3/A5).
 - ``map_overlap(kernel, depth)`` stencils (reference
-  algorithms/_impl_hillshade.py:133-139) become
-  ``applyInPandas(kernel)`` over (256+2*halo)^2 NumPy grids; the
-  kernel crops the core exactly like the reference's GPU-side core
-  crop (reference core/tile_processor.py:944-971).
+  algorithms/_impl_hillshade.py:133-139) become a kernel run over
+  (256+2*halo)^2 NumPy grids that crops the core exactly like the
+  reference's GPU-side core crop (reference
+  core/tile_processor.py:944-971).
 - the COG overview pyramid (reference algorithms/_nan_utils.py:836-871)
   becomes LOD tables built by ``groupBy(parent_tile)`` aggregation.
+
+Every point-to-tile operator here (rasterize_tiles, tile_kernel,
+tile_kernel_stats and the census operators) is a thin caller of ONE
+per-tile executor, ``_per_tile``. Its contract:
+
+- one shuffle: points explode to packed 16-byte (``_tk``, ``_gk``)
+  rows (+ optional weight) and repartition on ``_tk``; the grouped
+  map on ``_tk`` reuses that partitioning, so each tile is exactly one
+  group;
+- per group, the tile key is decoded to (x, y) once and the halo grid
+  accumulated once, in the operator's dtype (float64 everywhere
+  except tile_kernel_stats, whose default is float32);
+- the operator's emit turns (grid, x, y) into the columns after
+  (z, x, y): one output row per group, or none when
+  ``skip_empty_core`` drops a tile that owns no points.
+
+The kernel operators share one kernel tail (``_kernel_tail``: log1p,
+per-tile metric pixel scale, kernel, core crop) and one stats reducer
+(``_tile_stats``) with void_fill_dist.tile_kernel_stats_filled.
 
 Determinism (SURVEY.md §7.3 hard part 3): rasterization accumulates
 integer counts (order-free) or sorts rows by (pixel, value) before
@@ -151,9 +170,10 @@ def _with_core_flag(packed: DataFrame) -> DataFrame:
 
 
 def _accumulate_grid(
-    pdf: pd.DataFrame, z: int, halo: int, weight_col: str | None, dtype=np.float64
+    pdf: pd.DataFrame, tx: int, ty: int, z: int, halo: int, weight_col: str | None,
+    dtype=np.float64,
 ) -> np.ndarray:
-    """Deterministic (W=256+2h)^2 accumulation grid for one tile group.
+    """Deterministic (W=256+2h)^2 accumulation grid for tile (tx, ty).
 
     gx/gy are global pixel coords; the tile origin is shifted by -halo.
     For wrapped halos (antimeridian) the offset is fixed up mod world
@@ -162,8 +182,6 @@ def _accumulate_grid(
     """
     w = TILE_PX + 2 * halo
     n_px = (1 << z) * TILE_PX
-    tk = int(pdf["_tk"].iloc[0])
-    tx, ty = tk >> 32, tk & _MASK32
     gk = pdf["_gk"].to_numpy(dtype=np.int64)
     lx = ((gk >> 32) - (tx * TILE_PX - halo)) % n_px
     ly = (gk & _MASK32) - (ty * TILE_PX - halo)
@@ -198,6 +216,52 @@ def unpack_grid(buf: bytes, w: int) -> np.ndarray:
     return np.frombuffer(buf, dtype=np.float64).reshape(w, w)
 
 
+_TILE_KEY = "z int, x long, y long"
+
+
+def _core(a: np.ndarray, halo: int) -> np.ndarray:
+    """The 256² core of a halo-expanded grid (a view)."""
+    return a[halo : halo + TILE_PX, halo : halo + TILE_PX]
+
+
+def _tile_row(z: int, tx: int, ty: int, cols: dict) -> pd.DataFrame:
+    """One output row: (z, x, y) + an emit's column values."""
+    return pd.DataFrame({"z": [z], "x": [tx], "y": [ty], **{k: [v] for k, v in cols.items()}})
+
+
+def _per_tile(
+    points: DataFrame,
+    z: int,
+    halo: int,
+    weight_col: str | None,
+    cols: str,
+    emit,
+    dtype=np.float64,
+    skip_empty_core: bool = False,
+) -> DataFrame:
+    """The tile engine's one grouped-map step: points -> one row per
+    tile, schema (z, x, y) + ``cols``.
+
+    One halo-exchange shuffle (``_packed_tiles``), one group per
+    ``_tk``. Per group the key is decoded to (tx, ty) once, the halo
+    grid is accumulated once in ``dtype``, and ``emit(grid, tx, ty)``
+    returns the ``cols`` values as a dict. skip_empty_core (A17) emits
+    no row for a tile owning no points (only halo spill-ins)."""
+    packed = _packed_tiles(points, z, halo, weight_col)
+    if skip_empty_core:
+        packed = _with_core_flag(packed)
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        if skip_empty_core and not pdf[_CORE_FLAG].to_numpy().any():
+            return pd.DataFrame()
+        tk = int(pdf["_tk"].iloc[0])
+        tx, ty = tk >> 32, tk & _MASK32
+        grid = _accumulate_grid(pdf, tx, ty, z, halo, weight_col, dtype)
+        return _tile_row(z, tx, ty, emit(grid, tx, ty))
+
+    return packed.groupBy("_tk").applyInPandas(fn, f"{_TILE_KEY}, {cols}")
+
+
 def rasterize_tiles(
     points: DataFrame,
     z: int,
@@ -212,23 +276,10 @@ def rasterize_tiles(
     log_scale applies log1p — the density->elevation transform used
     before terrain-style kernels.
     """
-    pts = _packed_tiles(points, z, halo, weight_col)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = _accumulate_grid(pdf, z, halo, weight_col)
-        if log_scale:
-            grid = np.log1p(grid)
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "grid": [pack_grid(grid)],
-            }
-        )
-
-    schema = "z int, x long, y long, grid binary"
-    return pts.groupBy("_tk").applyInPandas(fn, schema)
+    return _per_tile(
+        points, z, halo, weight_col, "grid binary",
+        lambda grid, tx, ty: {"grid": pack_grid(np.log1p(grid) if log_scale else grid)},
+    )
 
 
 # --------------------------- window kernels --------------------------
@@ -435,6 +486,73 @@ def kernel_halo(kernel: str, params: dict | None = None) -> int:
     return min(int(h), TILE_PX - 1)
 
 
+def _kernel_tail(
+    kernel: str, z: int, halo: int | None, log_scale: bool, metric_scale: bool, kernel_params: dict
+):
+    """Resolve one kernel run for an operator: check the metric-scale
+    arguments, resolve the halo, and return ``(h, tail)``.
+
+    ``tail(grid, tile_y)`` is the per-tile kernel tail, run on the
+    halo grid after any void fill: log1p (log_scale), the tile row's
+    metric pixel scale (metric_scale), the kernel, the core crop. It
+    is the one tail of tile_kernel, tile_kernel_stats, filled-tile
+    synthesis and void_fill_dist.tile_kernel_stats_filled."""
+    fn_kernel, _ = KERNELS[kernel]
+    if metric_scale:
+        if kernel not in METRIC_SCALE_KERNELS:
+            raise ValueError(
+                f"kernel {kernel!r} does not consume metric pixel scales; "
+                f"supported: {sorted(METRIC_SCALE_KERNELS)}"
+            )
+        if "pixel_scale" in kernel_params:
+            raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
+    h = kernel_halo(kernel, kernel_params) if halo is None else halo
+
+    def tail(grid: np.ndarray, tile_y: int) -> np.ndarray:
+        if log_scale:
+            grid = np.log1p(grid)
+        params = kernel_params
+        if metric_scale:
+            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tile_y, z))
+        return _core(fn_kernel(grid, **params), h)
+
+    return h, tail
+
+
+_STATS_COLS = "shade_sum double, shade_max double, lit_pixels long"
+
+
+def _tile_stats(core: np.ndarray, lit_threshold: float) -> dict:
+    """The stats reduction of one kernel core (``_STATS_COLS``): float64
+    sum, max, and the count of pixels above lit_threshold."""
+    return {
+        "shade_sum": float(core.sum(dtype=np.float64)),
+        "shade_max": float(core.max()),
+        "lit_pixels": int((core > lit_threshold).sum()),
+    }
+
+
+def _kernel_tiles(
+    points, z, h, weight_col, tail, fill_surface, reduce, cols, dtype=np.float64,
+    skip_empty_core=False,
+) -> DataFrame:
+    """tile_kernel / tile_kernel_stats body: per tile, fill (if any)
+    -> kernel tail -> ``reduce(core)``, plus the synthesized rows of
+    fillable tiles that own no points."""
+
+    def emit(grid, tx, ty):
+        if fill_surface is not None:
+            grid = fill_surface.apply(grid, tx, ty, z, h)
+        return reduce(tail(grid, ty))
+
+    out = _per_tile(points, z, h, weight_col, cols, emit, dtype, skip_empty_core)
+    if fill_surface is None:
+        return out
+    return out.unionByName(
+        _synth_filled_tiles(points, z, h, fill_surface, emit, f"{_TILE_KEY}, {cols}")
+    )
+
+
 def tile_kernel(
     points: DataFrame,
     z: int,
@@ -472,15 +590,7 @@ def tile_kernel(
     log_scale + kernel (applied to the full halo-expanded grid, so the
     fill is seam-free like everything else).
     """
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale:
-        if kernel not in METRIC_SCALE_KERNELS:
-            raise ValueError(
-                f"kernel {kernel!r} does not consume metric pixel scales; "
-                f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-            )
-        if "pixel_scale" in kernel_params:
-            raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
+    h, tail = _kernel_tail(kernel, z, halo, log_scale, metric_scale, kernel_params)
     if skip_empty_core and fill_surface is not None:
         # the skip path returns empty for groups holding only halo
         # spill-ins, and _synth_filled_tiles excludes those tiles as
@@ -489,104 +599,39 @@ def tile_kernel(
         # points. The combination is contradictory (skip wants to drop
         # sparse tiles, fill wants to repair them), so refuse it.
         raise ValueError("skip_empty_core=True cannot be combined with fill_surface")
-    h = kernel_halo(kernel, kernel_params) if halo is None else halo
-    pts = _packed_tiles(points, z, h, weight_col)
-    if skip_empty_core:
-        pts = _with_core_flag(pts)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if skip_empty_core:
-            if not pdf[_CORE_FLAG].to_numpy().any():
-                return pd.DataFrame(
-                    {
-                        "z": pd.Series(dtype="int32"),
-                        "x": pd.Series(dtype="int64"),
-                        "y": pd.Series(dtype="int64"),
-                        "result": pd.Series(dtype="object"),
-                    }
-                )
-            pdf = pdf.drop(columns=[_CORE_FLAG])
-        tk = int(pdf["_tk"].iloc[0])
-        grid = _accumulate_grid(pdf, z, h, weight_col)
-        if fill_surface is not None:
-            grid = fill_surface.apply(grid, tk >> 32, tk & _MASK32, z, h)
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tk & _MASK32, z))
-        out = fn_kernel(grid, **params)
-        core = out[h : h + TILE_PX, h : h + TILE_PX] if h else out
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tk >> 32],
-                "y": [tk & _MASK32],
-                "result": [core.ravel()],
-            }
-        )
-
-    schema = "z int, x long, y long, result array<double>"
-    out = pts.groupBy("_tk").applyInPandas(fn, schema)
-    if fill_surface is None:
-        return out
-    return out.unionByName(
-        _synth_filled_tiles(
-            points, pts, z, h, fill_surface, log_scale, metric_scale,
-            fn_kernel, kernel_params, schema, stats=False,
-        )
+    return _kernel_tiles(
+        points, z, h, weight_col, tail, fill_surface,
+        lambda core: {"result": core.ravel()}, "result array<double>",
+        skip_empty_core=skip_empty_core,
     )
 
 
-def _synth_filled_tiles(
-    points, pts, z, h, fill_surface, log_scale, metric_scale,
-    fn_kernel, kernel_params, schema, stats, lit_threshold=0.75,
-):
+def _synth_filled_tiles(points, z, h, fill_surface, emit, schema):
     """Kernel output for fillable tiles that own NO points (core or
     halo): such tiles have no shuffle rows, so no group ever forms and
     the membrane would silently not materialize there (whole-tile
     enclosed voids). Candidates come from the broadcast surface
     (driver-enumerated, bounded), minus the tiles the point path
-    already produced — deterministic, partition-independent."""
+    already produced — deterministic, partition-independent. Each
+    runs the point path's ``emit`` on an all-zero float64 grid."""
     spark = points.sparkSession
     tks = fill_surface.fillable_tile_keys(z)
     if tks.size == 0:
         return spark.createDataFrame([], schema)
     cand = spark.createDataFrame(pd.DataFrame({"_tk": tks}))
-    present = pts.select("_tk").distinct()
+    present = _packed_tiles(points, z, h, None).select("_tk").distinct()
     missing = cand.join(present, "_tk", "left_anti").repartition(
         max(2, spark.sparkContext.defaultParallelism)
     )
+    w = TILE_PX + 2 * h
 
     def fn_missing(it):
         for pdf in it:
-            cols: dict[str, list] = (
-                {"z": [], "x": [], "y": [], "shade_sum": [], "shade_max": [], "lit_pixels": []}
-                if stats
-                else {"z": [], "x": [], "y": [], "result": []}
-            )
+            rows = []
             for tk in pdf["_tk"].astype("int64"):
-                tk = int(tk)
-                tx, ty = tk >> 32, tk & _MASK32
-                w_ = TILE_PX + 2 * h
-                grid = fill_surface.apply(np.zeros((w_, w_)), tx, ty, z, h)
-                if log_scale:
-                    grid = np.log1p(grid)
-                params = kernel_params
-                if metric_scale:
-                    params = dict(kernel_params, pixel_scale=tile_pixel_scales(ty, z))
-                o = fn_kernel(grid, **params)
-                core = o[h : h + TILE_PX, h : h + TILE_PX] if h else o
-                cols["z"].append(z)
-                cols["x"].append(tx)
-                cols["y"].append(ty)
-                if stats:
-                    cols["shade_sum"].append(float(core.sum(dtype=np.float64)))
-                    cols["shade_max"].append(float(core.max()))
-                    cols["lit_pixels"].append(int((core > lit_threshold).sum()))
-                else:
-                    cols["result"].append(core.ravel())
-            yield pd.DataFrame(cols)
+                tx, ty = int(tk) >> 32, int(tk) & _MASK32
+                rows.append({"z": z, "x": tx, "y": ty, **emit(np.zeros((w, w)), tx, ty)})
+            yield pd.DataFrame(rows)
 
     return missing.mapInPandas(fn_missing, schema)
 
@@ -611,66 +656,22 @@ def tile_kernel_stats(
     discipline (reference core/tile_processor.py:983-996).
 
     grid_dtype: the accumulation/kernel dtype — float32 by default
-    (the production bandwidth choice; stats never leave the UDF).
-    The ORACLE-ONLY alternative is float64: the cross-engine hash
-    gate's DuckDB twin computes in float64, and float32 kernel noise
-    (~1e-7 relative) would leak above the quantized-sum tolerance;
-    production renders never need it (cf. normalize_acctbal's
-    oracle-only exact percentile)."""
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale:
-        if kernel not in METRIC_SCALE_KERNELS:
-            raise ValueError(
-                f"kernel {kernel!r} does not consume metric pixel scales; "
-                f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-            )
-        if "pixel_scale" in kernel_params:
-            raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
-    h = kernel_halo(kernel, kernel_params) if halo is None else halo
-    pts = _packed_tiles(points, z, h, weight_col)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # float32 end-to-end: the stats path never leaves the UDF, so
-        # halving memory traffic is free accuracy-wise (sums are done
-        # in float64) — the reference's quantize-before-transfer
-        # discipline applied to bandwidth instead of PCIe
-        tk = int(pdf["_tk"].iloc[0])
-        dt = np.float32 if grid_dtype is None else grid_dtype
-        grid = _accumulate_grid(pdf, z, h, weight_col, dtype=dt)
-        if fill_surface is not None:
-            grid = fill_surface.apply(grid, tk >> 32, tk & _MASK32, z, h).astype(dt)
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tk & _MASK32, z))
-        out = fn_kernel(grid, **params)
-        core = out[h : h + TILE_PX, h : h + TILE_PX] if h else out
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tk >> 32],
-                "y": [tk & _MASK32],
-                "shade_sum": [float(core.sum(dtype=np.float64))],
-                "shade_max": [float(core.max())],
-                "lit_pixels": [int((core > lit_threshold).sum())],
-            }
-        )
-
-    schema = "z int, x long, y long, shade_sum double, shade_max double, lit_pixels long"
-    out = pts.groupBy("_tk").applyInPandas(fn, schema)
-    if fill_surface is None:
-        return out
-    return out.unionByName(
-        _synth_filled_tiles(
-            points, pts, z, h, fill_surface, log_scale, metric_scale,
-            fn_kernel, kernel_params, schema, stats=True, lit_threshold=lit_threshold,
-        )
+    (the production bandwidth choice; stats never leave the UDF, and
+    sums are done in float64). The ORACLE-ONLY alternative is float64:
+    the cross-engine hash gate's DuckDB twin computes in float64, and
+    float32 kernel noise (~1e-7 relative) would leak above the
+    quantized-sum tolerance; production renders never need it (cf.
+    normalize_acctbal's oracle-only exact percentile)."""
+    h, tail = _kernel_tail(kernel, z, halo, log_scale, metric_scale, kernel_params)
+    return _kernel_tiles(
+        points, z, h, weight_col, tail, fill_surface,
+        lambda core: _tile_stats(core, lit_threshold), _STATS_COLS,
+        dtype=np.float32 if grid_dtype is None else grid_dtype,
     )
 
 
 # ------------------- halo-contract census operators ------------------
-# These two reduce the REAL halo machinery (explode_to_tiles -> packed
+# These reduce the REAL halo machinery (explode_to_tiles -> packed
 # shuffle -> _accumulate_grid, i.e. A3+A5's transport layer) to exact
 # integers, so the driver's DuckDB hash gate can check the halo
 # exchange end-to-end — the per-kernel float math stays on the pytest
@@ -685,22 +686,10 @@ def tile_halo_census(points: DataFrame, z: int, halo: int) -> DataFrame:
     (x wrapped at the antimeridian, y clipped at the world edge);
     core_pts counts the owned points. Both exact BIGINTs.
     """
-    pts = _packed_tiles(points, z, halo, None)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = _accumulate_grid(pdf, z, halo, None)
-        core = grid[halo : halo + TILE_PX, halo : halo + TILE_PX] if halo else grid
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "win_pts": [int(grid.sum())],
-                "core_pts": [int(core.sum())],
-            }
-        )
-
-    return pts.groupBy("_tk").applyInPandas(fn, "z int, x long, y long, win_pts long, core_pts long")
+    return _per_tile(
+        points, z, halo, None, "win_pts long, core_pts long",
+        lambda grid, tx, ty: {"win_pts": int(grid.sum()), "core_pts": int(_core(grid, halo).sum())},
+    )
 
 
 def tile_weighted_census(
@@ -711,23 +700,11 @@ def tile_weighted_census(
     accumulation, _accumulate_grid's weight branch) under the exact
     hash gate: integer-valued weights accumulate exactly in float64,
     so the sums cast to BIGINT bit-stably on any engine."""
-    pts = _packed_tiles(points, z, halo, weight_col)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = _accumulate_grid(pdf, z, halo, weight_col)
-        core = grid[halo : halo + TILE_PX, halo : halo + TILE_PX] if halo else grid
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "win_weight": [int(grid.sum())],
-                "core_weight": [int(core.sum())],
-            }
-        )
-
-    return pts.groupBy("_tk").applyInPandas(
-        fn, "z int, x long, y long, win_weight long, core_weight long"
+    return _per_tile(
+        points, z, halo, weight_col, "win_weight long, core_weight long",
+        lambda grid, tx, ty: {
+            "win_weight": int(grid.sum()), "core_weight": int(_core(grid, halo).sum())
+        },
     )
 
 
@@ -741,23 +718,13 @@ def tile_box_total(points: DataFrame, z: int, r: int) -> DataFrame:
     """
     from .multiscale import np_box_total
 
-    pts = _packed_tiles(points, z, r, None)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        grid = _accumulate_grid(pdf, z, r, None)
-        tot = np_box_total(grid, r)[r : r + TILE_PX, r : r + TILE_PX]
-        core = grid[r : r + TILE_PX, r : r + TILE_PX]
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [int(pdf["_tk"].iloc[0]) >> 32],
-                "y": [int(pdf["_tk"].iloc[0]) & _MASK32],
-                "box_total": [int(tot.sum())],
-                "core_pts": [int(core.sum())],
-            }
-        )
-
-    return pts.groupBy("_tk").applyInPandas(fn, "z int, x long, y long, box_total long, core_pts long")
+    return _per_tile(
+        points, z, r, None, "box_total long, core_pts long",
+        lambda grid, tx, ty: {
+            "box_total": int(_core(np_box_total(grid, r), r).sum()),
+            "core_pts": int(_core(grid, r).sum()),
+        },
+    )
 
 
 # ----------------------------- LOD pyramid ---------------------------
@@ -770,6 +737,8 @@ def pyramid_level(tiles: DataFrame, agg: str = "sum") -> DataFrame:
     groupBy(parent) aggregation (reference io/cog_builder.py overviews;
     NaN-aware coarsen algorithms/_nan_utils.py:604-668).
     """
+    if agg not in ("sum", "mean"):
+        raise ValueError(f"unknown agg {agg!r} (sum/mean)")  # fail at plan time, not in executors
     half = TILE_PX // 2
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -316,7 +316,6 @@ def _membrane_axis(g: np.ndarray, s: int, n_coarse: int) -> tuple[np.ndarray, np
 
 _REQ_SCHEMA = "ck long, tk long, y0 long, y1 long, x0 long, x1 long"
 _PIECE_SCHEMA2 = "tk long, ry0 long, rx0 long, nr int, nc int, piece binary"
-_STATS_SCHEMA = "z int, x long, y long, shade_sum double, shade_max double, lit_pixels long"
 
 
 def tile_kernel_stats_filled(
@@ -344,8 +343,9 @@ def tile_kernel_stats_filled(
     membrane tiles cogroup with requests and ship CROPPED pieces; the
     kernel cogroups point rows with pieces, reproducing
     void_fill.VoidFillSurface.apply bit-for-bit (same wrap/clip/clamp
-    arithmetic via the shared helpers above) before log1p + kernel +
-    stats — pinned against the broadcast path by
+    arithmetic via the shared helpers above) before tile_kernels' shared
+    kernel tail (log1p + metric scale + kernel + core crop) and stats
+    reduction — pinned against the broadcast path by
     tests/test_void_fill_dist.py. Fillable-but-pointless tiles appear
     as piece-only cogroups, replacing _synth_filled_tiles' driver
     enumeration of missing groups (the candidate keys themselves stay
@@ -357,28 +357,21 @@ def tile_kernel_stats_filled(
     patch pieces (≤ a few tile-bytes each, shrinking 4^s with the
     zoom gap); no all-pairs, no unbounded collect."""
     from .tile_kernels import (
-        KERNELS,
-        METRIC_SCALE_KERNELS,
         _MASK32,
+        _STATS_COLS,
+        _TILE_KEY,
         _accumulate_grid,
+        _kernel_tail,
         _packed_tiles,
-        kernel_halo,
-        tile_pixel_scales,
+        _tile_row,
+        _tile_stats,
     )
 
     if mode not in ("enclosed", "all"):
         raise ValueError(f"unknown void-fill mode {mode!r} (enclosed/all)")
     if zc > z:
         raise ValueError(f"zc={zc} must be <= z={z}")
-    fn_kernel, _ = KERNELS[kernel]
-    if metric_scale and kernel not in METRIC_SCALE_KERNELS:
-        raise ValueError(
-            f"kernel {kernel!r} does not consume metric pixel scales; "
-            f"supported: {sorted(METRIC_SCALE_KERNELS)}"
-        )
-    if metric_scale and "pixel_scale" in kernel_params:
-        raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
-    h = kernel_halo(kernel, kernel_params) if halo is None else halo
+    h, tail = _kernel_tail(kernel, z, halo, log_scale, metric_scale, kernel_params)
     w = TILE_PX + 2 * h
     s = z - zc
     n_coarse = (1 << zc) * TILE_PX
@@ -480,7 +473,7 @@ def tile_kernel_stats_filled(
         tk = int(key[0])
         tx, ty = tk >> 32, tk & _MASK32
         if len(pdf):
-            grid = _accumulate_grid(pdf, z, h, None, dtype=dt)
+            grid = _accumulate_grid(pdf, tx, ty, z, h, None, dtype=dt)
         else:
             # piece-only group: a fillable tile owning no points — the
             # cogroup analog of _synth_filled_tiles (same float64 zeros)
@@ -515,28 +508,12 @@ def tile_kernel_stats_filled(
             out = grid.copy()
             np.copyto(out, memb, where=(grid == 0) & gate_of(tx, ty))
             grid = out.astype(dt) if len(pdf) else out
-        if log_scale:
-            grid = np.log1p(grid)
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(ty, z))
-        o = fn_kernel(grid, **params)
-        core = o[h : h + TILE_PX, h : h + TILE_PX] if h else o
-        return pd.DataFrame(
-            {
-                "z": [z],
-                "x": [tx],
-                "y": [ty],
-                "shade_sum": [float(core.sum(dtype=np.float64))],
-                "shade_max": [float(core.max())],
-                "lit_pixels": [int((core > lit_threshold).sum())],
-            }
-        )
+        return _tile_row(z, tx, ty, _tile_stats(tail(grid, ty), lit_threshold))
 
     return (
         pts.groupBy("_tk")
         .cogroup(pieces.groupBy("tk"))
-        .applyInPandas(run, _STATS_SCHEMA)
+        .applyInPandas(run, f"{_TILE_KEY}, {_STATS_COLS}")
     )
 
 

@@ -112,6 +112,19 @@ def test_index_table_mismatch_raises(spark):
         pip_join(pts, other, index=PipIndex(good)).count()
 
 
+def test_empty_polygon_table_joins_to_nothing(spark, points_df):
+    """An empty polygon table is a valid input: the index builds and
+    the join returns zero rows."""
+    from fujishadergpu_spark.operators.pip_join import PipIndex
+
+    empty = spark.createDataFrame(
+        [], "polygon_id long, ring array<struct<lon:double,lat:double>>"
+    )
+    assert PipIndex(empty).ring_rows == []
+    assert pip_join(points_df, empty).count() == 0
+    assert pip_join(points_df, empty, index=PipIndex(empty, res=5)).count() == 0
+
+
 def test_repeat_pip_query_issues_no_driver_jobs(spark):
     """r3 verdict wrong #1: the registry path used to rebuild the
     PipIndex (auto_res median + ring collect — two driver jobs) on

@@ -97,11 +97,25 @@ def test_exact_dedup_shuffles_hash_not_text(spark):
 
 
 def test_halo_census_single_shuffle(spark, points_df):
-    """The hash-oracle census operators ride the same one-Exchange
-    halo transport as the kernels (16-byte packed rows)."""
-    from fujishadergpu_spark.operators.tile_kernels import tile_box_total, tile_halo_census
+    """The hash-oracle census operators, weighted rasterization and the
+    array kernel all ride the per-tile executor's one-Exchange halo
+    transport (16-byte packed rows, + the weight when one is given)."""
+    from fujishadergpu_spark.operators.tile_kernels import (
+        rasterize_tiles,
+        tile_box_total,
+        tile_halo_census,
+        tile_kernel,
+        tile_weighted_census,
+    )
 
-    for df in (tile_halo_census(points_df, 6, 3), tile_box_total(points_df, 6, 2)):
+    weighted = points_df.withColumn("w", (F.col("id") % 7 + 1).cast("double"))
+    for df in (
+        tile_halo_census(points_df, 6, 3),
+        tile_box_total(points_df, 6, 2),
+        rasterize_tiles(weighted, 6, halo=3, weight_col="w"),
+        tile_weighted_census(weighted, 6, 3, "w"),
+        tile_kernel(points_df, 6),
+    ):
         plan = _plan(df)
         assert plan.count("Exchange hashpartitioning") == 1
         ex = plan[plan.index("Exchange hashpartitioning"):]

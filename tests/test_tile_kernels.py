@@ -13,8 +13,10 @@ from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel, tile_pix
 from fujishadergpu_spark.operators.tile_kernels import (
     build_pyramid,
     np_hillshade,
+    pyramid_level,
     rasterize_tiles,
     tile_kernel,
+    tile_kernel_stats,
 )
 
 Z = 3  # 8x8 tiles -> 2048px world; test data spans tiles 3..4 only
@@ -114,6 +116,25 @@ def test_new_kernels_seam_free_via_spark(spark, points_df):
             assert np.array_equal(g, sl), f"{name}: seam in tile {(t['x'], t['y'])}"
 
 
+def test_kernel_and_stats_entry_points_agree(spark, points_df):
+    """tile_kernel and tile_kernel_stats (float64) run one kernel tail:
+    the stats of tile_kernel's metric-scaled cores equal the stats
+    path's per tile."""
+    full = {
+        (t["x"], t["y"]): np.asarray(t["result"])
+        for t in tile_kernel(points_df, Z, "hillshade", metric_scale=True).collect()
+    }
+    stats = tile_kernel_stats(
+        points_df, Z, "hillshade", grid_dtype=np.float64, metric_scale=True
+    ).collect()
+    assert len(stats) > 1 and {(s["x"], s["y"]) for s in stats} == set(full)
+    for s in stats:
+        core = full[(s["x"], s["y"])]
+        assert s["lit_pixels"] == int((core > 0.75).sum())
+        assert s["shade_max"] == float(core.max())
+        assert math.isclose(s["shade_sum"], float(core.sum()), rel_tol=1e-12, abs_tol=0.0)
+
+
 def test_skip_empty_core_drops_halo_only_tiles(spark):
     """A17: one point 2px from a tile edge with a large halo spills
     into the neighbor tile; with skip_empty_core the neighbor (which
@@ -146,3 +167,15 @@ def test_pyramid_mass_conservation(spark, points_df):
     n = points_df.count()
     for z_, total in totals.items():
         assert abs(total - n) < 1e-6, f"mass lost at z={z_}"
+
+
+def test_pyramid_unknown_agg_raises_at_plan_time(spark, points_df):
+    """An unknown agg is refused when the plan is built — it must not
+    silently average (only sum and mean exist)."""
+    import pytest
+
+    base = rasterize_tiles(points_df, Z)
+    with pytest.raises(ValueError, match="sum/mean"):
+        pyramid_level(base, agg="max")
+    with pytest.raises(ValueError, match="sum/mean"):
+        build_pyramid(base, Z, 0, agg="max")
