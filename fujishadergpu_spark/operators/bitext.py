@@ -84,6 +84,9 @@ def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
     production feeds ANN candidates into the same margin algebra and
     never materializes a full side)."""
     rows = tgt.select("vec_id", "embedding").collect()
+    schema = "src_id long, tgt_id long, qcos long"
+    if not rows:  # no tgt rows, no pairs (and no matrix to normalize)
+        return src.sparkSession.createDataFrame([], schema)
     t_ids = np.fromiter((r["vec_id"] for r in rows), np.int64, count=len(rows))
     t_unit = _unit_np(np.array([r["embedding"] for r in rows], dtype=np.float64))
     bc = src.sparkSession.sparkContext.broadcast((t_ids, t_unit))
@@ -110,7 +113,7 @@ def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
     par = src.sparkSession.sparkContext.defaultParallelism
     if sel.rdd.getNumPartitions() < par:
         sel = sel.repartition(par)
-    return sel.mapInPandas(fn, "src_id long, tgt_id long, qcos long")
+    return sel.mapInPandas(fn, schema)
 
 
 def _unit_rows(df: DataFrame, id_alias: str, emb_alias: str) -> DataFrame:

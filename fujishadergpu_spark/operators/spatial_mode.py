@@ -14,15 +14,23 @@ radius-less kernels, _nan_utils.py:527-547):
   is bounded again — then bilinearly upsampled;
 - the per-radius responses combine with the shared weights/agg rule.
 
-Spark shape (the same split multiscale.multiscale_usm pioneered for
-box means, generalized to every kernel):
+Spark shape: ``spatial_kernel`` is a thin caller of the one
+multi-radius executor, ``multiscale._multi_radius`` (its contract is
+in that module's docstring: fine rasterization with halo = max
+small-radius support, one coarse LOD level per decimation exponent
+broadcast-joined back on the ancestor key, per-tile upsample, stack or
+combine, grid/stats rows). What spatial mode passes:
 
-- fine tiles rasterized once with halo = max small-radius support; the
-  finish UDF computes ALL small-radius responses from that one grid;
-- one coarse LOD level per decimation exponent (independent
-  rasterization at z-s = exact block sums), kernel run per coarse
-  tile, broadcast-joined back on the ancestor key, upsampled in the
-  finish UDF. Catalyst broadcasts the coarse side (4^s× smaller).
+- the response: ``np_spatial_response`` at radius r on the fine grid
+  and at r/2^s on the coarse level, with ``spatial_response_halo`` as
+  its support (a fine-path halo over the tile budget is refused);
+- the field transform: ``log1p`` of the density when ``log_scale``;
+- the response itself (not a residual), cropped to the core or
+  upsampled from the coarse level;
+- a mean that renormalizes by the weights of the responses present in
+  a tile, because a large radius whose coarse ancestor row is missing
+  is skipped;
+- the ``result`` / ``resp_*`` output columns.
 
 No halo ever exceeds the tile size and no shuffle grows with the
 radius — the same scaling law as the reference's rewrite (its
@@ -33,16 +41,14 @@ reference ARCHITECTURE.md:556-560).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.spatial import auto_spatial_profile
 from ..functions.tiles import TILE_PX
-from .multiscale import coarse_sample_coords, np_bilinear_sample
+from .multiscale import _multi_radius
 from .np_filters import nan_gaussian, restore_nan
 from .np_kernels import _halo_gauss
-from .tile_kernels import KERNELS, kernel_halo, pack_grid, rasterize_tiles, unpack_grid
+from .tile_kernels import KERNELS, kernel_halo
 
 # kernels whose response takes the radius as a named param; everything
 # else uses the pre-smooth convention (sigma = radius/2). specular's
@@ -97,26 +103,6 @@ def spatial_response_halo(kernel: str, radius: float, params: dict) -> int:
     return _halo_gauss(float(radius) / 2.0) + base
 
 
-def _combine(responses: list[tuple[float, np.ndarray]], agg: str) -> np.ndarray:
-    """Per-pixel combine across radii (reference _nan_utils.py:182-213)."""
-    if agg == "mean":
-        tot = sum(w for w, _ in responses)
-        out = np.zeros_like(responses[0][1])
-        for w, r in responses:
-            out += (w / tot) * r
-        return out
-    if agg == "sum":
-        out = np.zeros_like(responses[0][1])
-        for _, r in responses:
-            out += r
-        return out
-    op = np.minimum if agg == "min" else np.maximum
-    out = responses[0][1]
-    for _, r in responses[1:]:
-        out = op(out, r)
-    return out
-
-
 def _plan_radii(
     radii: list[float], threshold: float, max_s: int | None = None
 ) -> tuple[list[float], dict[float, int]]:
@@ -157,9 +143,8 @@ def spatial_kernel(
     raw per-radius responses as one row per (tile, radius) with a
     ``radius`` column instead of combining — the reference's multi-band
     stack output as rows (reference _nan_utils.py:182-213,
-    core/dask_processor.py:1594-1599)."""
-    if agg not in ("mean", "min", "max", "sum", "stack"):
-        raise ValueError(f"unknown agg {agg!r} (mean/min/max/sum/stack)")
+    core/dask_processor.py:1594-1599). agg='mean' renormalizes by the
+    weights of the responses present in each tile."""
     if kernel not in KERNELS:
         raise KeyError(kernel)
     if kernel in MULTISCALE_INTRINSIC:
@@ -174,136 +159,11 @@ def spatial_kernel(
         if weights is None:
             weights = tuple(auto_w)
     radii = [float(r) for r in radii]
-    if weights is not None and len(weights) != len(radii):
-        raise ValueError(
-            f"{len(weights)} weights for {len(radii)} radii — counts must match"
-        )  # silent uniform fallback would render something the user did not ask for
-    if weights is None:
-        weights = [1.0 / len(radii)] * len(radii)
-    w_by_r = dict(zip(radii, weights))
-
     small, large = _plan_radii(radii, overview_threshold, max_s=max(0, z))
-    rkey = {r: f"r{i}" for i, r in enumerate(sorted(radii))}  # SQL-safe column token per radius
-    halo = max((spatial_response_halo(kernel, r, kernel_params) for r in small), default=0)
-    if halo > TILE_PX - 1:
-        # clamping would silently truncate the kernel's support and
-        # seam every tile edge; the caller must lower the overview
-        # threshold (routing the radius via the coarse path) or shrink
-        # the kernel's own support params
-        raise ValueError(
-            f"fine-path halo {halo} exceeds the tile budget {TILE_PX - 1} for kernel "
-            f"{kernel!r} at radii {small}; lower overview_threshold or the kernel's support"
-        )
-    fine = rasterize_tiles(points, z, halo=halo)
-
-    # one coarse response level per decimation exponent
-    joined = fine
-    coarse_cols: dict[float, str] = {}
-    for s in sorted({v for v in large.values()}):
-        rcs = [(r, r / (1 << s)) for r, rs in large.items() if rs == s]
-        h_c = min(
-            max(spatial_response_halo(kernel, rc, kernel_params) for _, rc in rcs) + 1,
-            TILE_PX - 1,
-        )
-        coarse = rasterize_tiles(points, z - s, halo=h_c)
-
-        def mk_resp(rcs=tuple(rcs), h_c=h_c, s=s):
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                out = {"x": pdf["x"], "y": pdf["y"]}
-                for r, rc in rcs:
-                    rows = []
-                    for g in pdf["grid"]:
-                        gg = unpack_grid(g, TILE_PX + 2 * h_c)
-                        # coarse counts are block SUMS; the field is the
-                        # block-mean density (then the display transform)
-                        gg = gg * 0.25 ** s
-                        if log_scale:
-                            gg = np.log1p(gg)
-                        resp = np_spatial_response(gg, kernel, rc, **kernel_params)
-                        rows.append(
-                            pack_grid(resp[h_c - 1 : h_c + TILE_PX + 1, h_c - 1 : h_c + TILE_PX + 1])
-                        )
-                    out[rkey[r]] = rows
-                return pd.DataFrame(out)
-
-            return fn
-
-        schema = "x long, y long, " + ", ".join(f"{rkey[r]} binary" for r, _ in rcs)
-        resp_df = (
-            coarse.select("x", "y", "grid")
-            .repartition(max(2, points.sparkSession.sparkContext.defaultParallelism), "x", "y")
-            .groupBy("x", "y")
-            .applyInPandas(mk_resp(), schema)
-        )
-        ren = resp_df.select(
-            F.col("x").alias(f"_cx{s}"), F.col("y").alias(f"_cy{s}"),
-            *[F.col(rkey[r]).alias(f"resp{s}_{rkey[r]}") for r, _ in rcs],
-        )
-        joined = joined.join(
-            F.broadcast(ren),
-            (F.shiftright(joined["x"], s) == ren[f"_cx{s}"])
-            & (F.shiftright(joined["y"], s) == ren[f"_cy{s}"]),
-            "left",
-        ).drop(f"_cx{s}", f"_cy{s}")
-        for r, rs in large.items():
-            if rs == s:
-                coarse_cols[r] = f"resp{s}_{rkey[r]}"
-
-    large_items = sorted(large.items())
-
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        out_rows = {k: [] for k in ("z", "x", "y")}
-        if agg == "stack":
-            out_rows["radius"] = []
-        payload = []
-        for _, row in pdf.iterrows():
-            g = unpack_grid(row["grid"], TILE_PX + 2 * halo)
-            if log_scale:
-                g = np.log1p(g)
-            responses: list[tuple[float, np.ndarray]] = []
-            rads: list[float] = []
-            for r in small:
-                resp = np_spatial_response(g, kernel, r, **kernel_params)
-                core = resp[halo : halo + TILE_PX, halo : halo + TILE_PX] if halo else resp
-                responses.append((w_by_r[r], core))
-                rads.append(r)
-            for r, s in large_items:
-                cg = row[coarse_cols[r]]
-                if cg is None:
-                    continue
-                cgrid = unpack_grid(cg, TILE_PX + 2)
-                cy, cx = coarse_sample_coords(int(row["x"]), int(row["y"]), s)
-                up = np_bilinear_sample(cgrid, cy[:, None], cx[None, :])
-                responses.append((w_by_r[r], up))
-                rads.append(r)
-            if agg == "stack":
-                for r, (_, resp) in zip(rads, responses):
-                    out_rows["z"].append(z)
-                    out_rows["x"].append(int(row["x"]))
-                    out_rows["y"].append(int(row["y"]))
-                    out_rows["radius"].append(float(r))
-                    payload.append(resp)
-                continue
-            combined = _combine(responses, agg)
-            out_rows["z"].append(z)
-            out_rows["x"].append(int(row["x"]))
-            out_rows["y"].append(int(row["y"]))
-            payload.append(combined)
-        if output == "grid":
-            return pd.DataFrame({**out_rows, "result": [c.ravel() for c in payload]})
-        return pd.DataFrame(
-            {
-                **out_rows,
-                "resp_sum": [float(c.sum()) for c in payload],
-                "resp_min": [float(c.min()) for c in payload],
-                "resp_max": [float(c.max()) for c in payload],
-            }
-        )
-
-    rad_col = "radius double, " if agg == "stack" else ""
-    schema = (
-        f"z int, x long, y long, {rad_col}result array<double>"
-        if output == "grid"
-        else f"z int, x long, y long, {rad_col}resp_sum double, resp_min double, resp_max double"
+    return _multi_radius(
+        points, z, radii, weights, small, {r: (s, r / (1 << s)) for r, s in large.items()},
+        agg, output, "result", "resp",
+        respond=lambda field, r: np_spatial_response(field, kernel, r, **kernel_params),
+        support=lambda r: spatial_response_halo(kernel, r, kernel_params),
+        log_scale=log_scale, renormalize=True,
     )
-    return joined.mapInPandas(lambda it: (finish(pdf) for pdf in it), schema)

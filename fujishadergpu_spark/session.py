@@ -59,12 +59,66 @@ def _local_dirs() -> str | None:
     return None
 
 
+def _phys_mem_bytes() -> int | None:
+    """Physical RAM of this host in bytes, or None where sysconf
+    cannot tell."""
+    try:
+        return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return None
+
+
+def _session_confs(extra_confs: dict[str, str] | None = None) -> dict[str, str]:
+    """The confs ``get_spark`` applies: DEFAULT_CONFS, the shuffle
+    width and local dirs for this host, the caller's ``extra_confs``
+    (which win), then the heap pre-touch options when they apply."""
+    confs = dict(DEFAULT_CONFS)
+    # scale shuffle width with the configured parallelism (2 waves;
+    # AQE coalesces small stages back down) — a fixed 32 starves
+    # local[8]-style runs of shuffle parallelism headroom and caps
+    # bigger ones at one wave per 32 cores
+    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
+    if cpus_env.isdigit():
+        confs["spark.sql.shuffle.partitions"] = str(max(32, 2 * int(cpus_env)))
+    local_dirs = _local_dirs()
+    if local_dirs:
+        confs["spark.local.dir"] = local_dirs
+    extra_confs = extra_confs or {}
+    confs.update(extra_confs)
+    # Commit + pre-fault the whole heap at JVM start (-Xms=driver mem,
+    # AlwaysPreTouch). Root-caused in round 7: with a growable heap,
+    # G1's incremental commits landed page-fault storms INSIDE timed
+    # queries — a slow rep showed 60%+ kernel time and +3 GB RSS while
+    # the same rep re-run at stable RSS took 1.5 s (the round-6
+    # "tiles/sec regression" signature). Pre-touching moves that cost
+    # to session startup (~40 s for 24 GB on a 32-core host), outside
+    # every timed region; on a real cluster Xms=Xmx is standard
+    # practice for exactly this reason. SPARK_GRAFT_PRETOUCH=0 opts
+    # out (e.g. for short-lived CLI invocations). A caller that sets
+    # its own driver memory or JVM options owns the heap, and a host
+    # with less RAM than the heap cannot commit it (the JVM would die
+    # at start), so neither gets the pre-touch.
+    heap = confs["spark.driver.memory"]
+    phys = _phys_mem_bytes()
+    if (
+        os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0"
+        and not {"spark.driver.memory", "spark.driver.extraJavaOptions"} & set(extra_confs)
+        and (phys is None or phys >= int(heap[:-1]) << {"m": 20, "g": 30}[heap[-1]])
+    ):
+        gc_threads = os.cpu_count() or 8
+        confs["spark.driver.extraJavaOptions"] = (
+            f"-Xms{heap} -XX:+AlwaysPreTouch -XX:ParallelGCThreads={gc_threads}"
+        )
+    return confs
+
+
 def get_spark(
     app_name: str = "fujishadergpu_spark",
     master: str | None = None,
     extra_confs: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) the canonical SparkSession.
+    """Build (or fetch) the canonical SparkSession with
+    ``_session_confs(extra_confs)``.
 
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (fallback
     ``local[*]``) so the same entry point serves tests, bench runs at
@@ -77,37 +131,7 @@ def get_spark(
         master = f"local[{cpus}]"
     if master:
         builder = builder.master(master)
-    confs = dict(DEFAULT_CONFS)
-    # scale shuffle width with the configured parallelism (2 waves;
-    # AQE coalesces small stages back down) — a fixed 32 starves
-    # local[8]-style runs of shuffle parallelism headroom and caps
-    # bigger ones at one wave per 32 cores
-    cpus_env = os.environ.get("SPARK_GRAFT_CPUS", "")
-    if cpus_env.isdigit():
-        confs["spark.sql.shuffle.partitions"] = str(max(32, 2 * int(cpus_env)))
-    # Commit + pre-fault the whole heap at JVM start (-Xms=driver mem,
-    # AlwaysPreTouch). Root-caused in round 7: with a growable heap,
-    # G1's incremental commits landed page-fault storms INSIDE timed
-    # queries — a slow rep showed 60%+ kernel time and +3 GB RSS while
-    # the same rep re-run at stable RSS took 1.5 s (the round-6
-    # "tiles/sec regression" signature). Pre-touching moves that cost
-    # to session startup (~40 s for 24 GB in this sandbox), outside
-    # every timed region; on a real cluster Xms=Xmx is standard
-    # practice for exactly this reason. SPARK_GRAFT_PRETOUCH=0 opts
-    # out (e.g. for short-lived CLI invocations).
-    if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") != "0":
-        heap = confs.get("spark.driver.memory", "24g")
-        gc_threads = os.cpu_count() or 8
-        confs.setdefault(
-            "spark.driver.extraJavaOptions",
-            f"-Xms{heap} -XX:+AlwaysPreTouch -XX:ParallelGCThreads={gc_threads}",
-        )
-    local_dirs = _local_dirs()
-    if local_dirs:
-        confs["spark.local.dir"] = local_dirs
-    if extra_confs:
-        confs.update(extra_confs)
-    for k, v in confs.items():
+    for k, v in _session_confs(extra_confs).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
 

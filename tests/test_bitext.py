@@ -96,6 +96,15 @@ def test_candidate_scores_arrow_equals_expr(spark):
     assert len(a) == 20 * 20
 
 
+@pytest.mark.parametrize("impl", ["arrow", "expr"])
+def test_candidate_scores_empty_tgt_is_empty(spark, impl):
+    src = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
+    cand = candidate_scores(src, _emb_df(spark, []), impl=impl)
+    assert cand.columns == ["src_id", "tgt_id", "qcos"]
+    assert cand.count() == 0
+    assert mine_bitext(cand, k=2, margin_threshold=0.0).count() == 0
+
+
 def test_candidate_scores_impl_validation(spark):
     df = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
     with pytest.raises(ValueError, match="unknown impl"):

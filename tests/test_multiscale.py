@@ -10,9 +10,9 @@ from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel
 from fujishadergpu_spark.operators.multiscale import (
     global_abs_p99,
     multiscale_usm,
-    np_bilinear_sample,
     np_box_mean,
 )
+from fujishadergpu_spark.operators.np_filters import bilinear_sample
 
 Z = 3
 RADII = (2, 8, 64)  # 64 > threshold 16 -> overview path with s=3
@@ -46,7 +46,7 @@ def _world_oracle(pdf, z, radii, threshold=16):
             smooth = np_box_mean(coarse, r >> s)
             p = np.arange(n)
             c = (p + 0.5) / (1 << s) - 0.5
-            up = np_bilinear_sample(smooth, c[:, None], c[None, :])
+            up = bilinear_sample(smooth, c[:, None], c[None, :])
             usm += w * (world - up)
     return usm
 
@@ -150,7 +150,7 @@ def test_overview_box_total_matches_world_oracle_exactly(spark, points_df):
     btring = btp[pad - 1 : pad + nc + 1, pad - 1 : pad + nc + 1]  # world coords -1..nc
     p = np.arange(n)
     c = (p + 0.5) / (1 << s) - 0.5 + 1.0  # +1 for the ring offset
-    up = np_bilinear_sample(btring, c[:, None], c[None, :])
+    up = bilinear_sample(btring, c[:, None], c[None, :])
     got = {(t["x"], t["y"]): (t["up_total_q"], t["core_pts"])
            for t in overview_box_total(points_df, z, r).collect()}
     assert got

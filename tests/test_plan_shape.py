@@ -44,6 +44,27 @@ def test_tile_kernel_single_shuffle(spark, points_df):
     assert plan.count("Exchange hashpartitioning") == 1
 
 
+def test_overview_path_single_broadcast_join(spark, points_df):
+    """The large-radius overview rewrite: the coarse level is
+    broadcast-joined back on the ancestor key exactly once (one level
+    for one large radius), never sort-merged or nested-looped, and the
+    plan keeps its three hash exchanges (fine halo exchange, coarse
+    halo exchange, coarse (x, y) repartition)."""
+    from fujishadergpu_spark.operators.multiscale import multiscale_usm, overview_box_total
+    from fujishadergpu_spark.operators.spatial_mode import spatial_kernel
+
+    for df in (
+        multiscale_usm(points_df, 3, radii=(2, 64)),
+        spatial_kernel(points_df, 3, "hillshade", radii=(2.0, 64.0)),
+        overview_box_total(points_df, 3, 64),
+    ):
+        plan = _plan(df)
+        assert plan.count("BroadcastHashJoin") == 1
+        assert "SortMergeJoin" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert plan.count("Exchange hashpartitioning") == 3
+
+
 def test_knn_probe_broadcasts_queries(spark, points_df):
     """The per-round candidate join must broadcast the (small) exploded
     query side so the points table is scanned, never shuffled."""

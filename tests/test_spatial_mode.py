@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel
-from fujishadergpu_spark.operators.multiscale import np_bilinear_sample
+from fujishadergpu_spark.operators.np_filters import bilinear_sample
 from fujishadergpu_spark.operators.spatial_mode import (
     _plan_radii,
     np_spatial_response,
@@ -43,7 +43,7 @@ def _world_oracle(pdf, z, kernel, radii, agg="mean", threshold=24.0, **params):
         resp = np_spatial_response(cfield, kernel, r / (1 << s), **params)
         p = np.arange(n)
         c = (p + 0.5) / (1 << s) - 0.5
-        responses.append((w, np_bilinear_sample(resp, c[:, None], c[None, :])))
+        responses.append((w, bilinear_sample(resp, c[:, None], c[None, :])))
     if agg == "mean":
         tot = sum(w_ for w_, _ in responses)
         out = sum((w_ / tot) * r_ for w_, r_ in responses)
@@ -121,10 +121,20 @@ def test_spatial_kernel_rejects_intrinsically_multiscale(spark, points_df):
 
 
 def test_spatial_kernel_rejects_mismatched_weights(spark, points_df):
+    """Both callers of the multi-radius executor refuse a weights/radii
+    count mismatch and an unknown output when the plan is built."""
     import pytest
+
+    from fujishadergpu_spark.operators.multiscale import multiscale_usm
 
     with pytest.raises(ValueError, match="counts must match"):
         spatial_kernel(points_df, 3, "hillshade", radii=(2.0, 8.0), weights=(1.0,))
+    with pytest.raises(ValueError, match="counts must match"):
+        multiscale_usm(points_df, 3, radii=(2, 8), weights=(1.0,))
+    with pytest.raises(ValueError, match="stats/grid"):
+        spatial_kernel(points_df, 3, "hillshade", radii=(2.0, 8.0), output="foo")
+    with pytest.raises(ValueError, match="stats/grid"):
+        multiscale_usm(points_df, 3, radii=(2, 8), output="foo")
 
 
 def test_spatial_stack_matches_single_radius_runs(spark, points_df):
