@@ -14,7 +14,7 @@ lakehouse scale on the PySpark DataFrame API:
   (operators.pip_join),
 - kNN via ring expansion over cell neighbors (operators.knn),
 - XYZ 256x256 tile assignment + halo-correct per-tile window kernels
-  as grouped-map pandas UDFs (functions.tiles, operators.tile_kernels)
+  in one batched pandas UDF pass (functions.tiles, operators.tile_kernels)
   mirroring the reference's tile/halo model
   (reference core/tile_processor.py:1609-1627, map_overlap stencils),
 - LOD pyramid tables replacing COG overviews

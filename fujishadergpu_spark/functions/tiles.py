@@ -8,7 +8,7 @@ standard slippy-map XYZ pyramid and each point lands in tile
 
 All math is plain column arithmetic (floor / ln / tan) so it is
 (1) JVM-side / codegen'd and (2) mirrored 1:1 in DuckDB oracle SQL.
-A NumPy twin serves the grouped-map kernels in operators.tile_kernels.
+A NumPy twin serves the per-tile kernels in operators.tile_kernels.
 
 Latitude is clamped to the WebMercator limit ±85.05112878 like every
 slippy-map implementation.
@@ -79,7 +79,7 @@ def tile_xy_sql(lat_expr: str, lon_expr: str, z: int) -> tuple[str, str]:
 # ---------------------------- NumPy twin ----------------------------
 
 def np_tile_pixel(lat: np.ndarray, lon: np.ndarray, z: int):
-    """(x, y, px, py) arrays; used inside grouped-map tile kernels."""
+    """(x, y, px, py) arrays; used inside per-tile kernels."""
     lat = np.clip(np.asarray(lat, dtype=np.float64), -MERC_LAT_MAX, MERC_LAT_MAX)
     lon = np.asarray(lon, dtype=np.float64)
     n = float((1 << z) * TILE_PX)

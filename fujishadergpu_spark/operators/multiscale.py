@@ -135,23 +135,24 @@ def _join_coarse_level(
     tile's (256+2h_c)² grid of block SUMS, keep its 1-px crop ring
     (258² around the core) as binary column ``col``, and broadcast
     left-join the level on the ancestor key (x >> s, y >> s). A fine
-    tile whose ancestor has no points gets None."""
+    tile whose ancestor has no points gets None. rasterize_tiles already
+    yields one row per coarse tile, so the responses map its rows where
+    they stand (no regrouping)."""
     ring = slice(h_c - 1, h_c + TILE_PX + 1)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = {"_cx": pdf["x"], "_cy": pdf["y"], **{c: [] for c in responses}}
-        for g in pdf["grid"]:
-            gg = unpack_grid(g, TILE_PX + 2 * h_c)
-            for c, respond in responses.items():
-                out[c].append(pack_grid(respond(gg)[ring, ring]))
-        return pd.DataFrame(out)
+    def fn(frames):
+        for pdf in frames:
+            out = {"_cx": pdf["x"], "_cy": pdf["y"], **{c: [] for c in responses}}
+            for g in pdf["grid"]:
+                gg = unpack_grid(g, TILE_PX + 2 * h_c)
+                for c, respond in responses.items():
+                    out[c].append(pack_grid(respond(gg)[ring, ring]))
+            yield pd.DataFrame(out)
 
     level = (
         rasterize_tiles(points, z - s, halo=h_c)
         .select("x", "y", "grid")
-        .repartition(max(2, points.sparkSession.sparkContext.defaultParallelism), "x", "y")
-        .groupBy("x", "y")
-        .applyInPandas(fn, "_cx long, _cy long, " + ", ".join(f"{c} binary" for c in responses))
+        .mapInPandas(fn, "_cx long, _cy long, " + ", ".join(f"{c} binary" for c in responses))
     )
     return fine.join(
         F.broadcast(level),

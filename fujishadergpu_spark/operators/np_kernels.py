@@ -9,7 +9,7 @@ same-shape float array; ``HALO_RULES`` gives each kernel's required
 halo depth as a function of its params — mirroring the reference's
 per-algorithm ``map_overlap(depth=...)`` rules
 (reference core/tile_processor.py:207-383). The Spark execution is
-the grouped-map halo-exchange in tile_kernels.tile_kernel; these
+the halo exchange + per-tile executor in tile_kernels.tile_kernel; these
 functions are engine-free NumPy so the tiled==whole seam tests can
 evaluate them directly.
 

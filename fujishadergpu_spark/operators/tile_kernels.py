@@ -1,5 +1,5 @@
 """Raster<->vector tile pipeline: rasterize points onto the XYZ grid,
-run per-tile window kernels as grouped-map pandas UDFs, build LOD
+run per-tile window kernels in one batched pandas UDF pass, build LOD
 pyramids.
 
 This is the direct re-expression of the reference's tile engine:
@@ -7,7 +7,7 @@ This is the direct re-expression of the reference's tile engine:
 - tile enumeration + core/halo windows
   (reference core/tile_processor.py:1609-1627) becomes *halo
   duplication*: each point is exploded into every tile whose
-  halo-expanded window contains it, then ``groupBy(tile)`` — the
+  halo-expanded window contains it, then shuffled on the tile key — the
   shuffle IS the halo exchange (SURVEY.md §2.A A3/A5).
 - ``map_overlap(kernel, depth)`` stencils (reference
   algorithms/_impl_hillshade.py:133-139) become a kernel run over
@@ -22,15 +22,20 @@ tile_kernel_stats and the census operators) is a thin caller of ONE
 per-tile executor, ``_per_tile``. Its contract:
 
 - one shuffle: points explode to packed 16-byte (``_tk``, ``_gk``)
-  rows (+ optional weight) and repartition on ``_tk``; the grouped
-  map on ``_tk`` reuses that partitioning, so each tile is exactly one
-  group;
-- per group, the tile key is decoded to (x, y) once and the halo grid
+  rows (+ optional weight) and repartition on ``_tk``, so every row of
+  a tile lands in one partition;
+- each partition is sorted on ``_tk`` and streamed through one
+  ``mapInPandas``: each Arrow batch is split at ``_tk`` changes with
+  NumPy, many tiles per batch, and a tile that straddles batches is
+  carried into the next one (``_tile_batches``), so no pandas frame
+  is built per tile;
+- per tile, the key is decoded to (x, y) once and the halo grid
   accumulated once, in the operator's dtype (float64 everywhere
   except tile_kernel_stats, whose default is float32);
 - the operator's emit turns (grid, x, y) into the columns after
-  (z, x, y): one output row per group, or none when
-  ``skip_empty_core`` drops a tile that owns no points.
+  (z, x, y): one output row per tile, or none when
+  ``skip_empty_core`` drops a tile that owns no points. Output frames
+  hold at most ``_FLUSH_ROWS`` rows.
 
 The kernel operators share one kernel tail (``_kernel_tail``: log1p,
 per-tile metric pixel scale, kernel, core crop) and one stats reducer
@@ -56,7 +61,7 @@ from ..functions.tiles import TILE_PX, merc_xy_norm
 
 
 def _kernel_parallelism(df: DataFrame) -> int:
-    """Partition count for CPU-bound grouped-map stages.
+    """Partition count for CPU-bound per-tile stages.
 
     AQE's byte-based coalescing would pack a small-but-CPU-heavy
     kernel stage into one partition (bytes are tiny, work is not); an
@@ -65,10 +70,10 @@ def _kernel_parallelism(df: DataFrame) -> int:
     the analog of the reference's worker-throttling-by-compute (not
     by bytes) sizing (reference config/auto_tune.py:159-192).
 
-    2 waves: measured per-partition grouped-map overhead (Arrow stream
-    + python eval setup) makes 4 waves ~1.5x slower than 1 at bench
-    scale, while heavy-tailed per-tile cost (dense urban tiles) still
-    wants more than one task per core for balance.
+    2 waves: each partition pays a fixed cost (Arrow stream + Python
+    eval setup) that made 4 waves ~1.5x slower than 1 at bench scale,
+    while heavy-tailed per-tile cost (dense urban tiles) still wants
+    more than one task per core for balance.
     """
     return df.sparkSession.sparkContext.defaultParallelism * 2
 
@@ -90,7 +95,7 @@ def explode_to_tiles(
     A point duplicates into a neighbor tile iff it falls inside that
     tile's halo window — at halo<=255 that is at most the 8-neighbors,
     expressed as a static array of candidate offsets + filter (JVM-
-    side; the groupBy shuffle then routes duplicates to their tiles).
+    side; the ``_tk`` shuffle then routes duplicates to their tiles).
     Tile x wraps (antimeridian); tile y clamps at the mercator edge.
     """
     if not 0 <= halo < TILE_PX:
@@ -155,10 +160,11 @@ def _packed_tiles(points: DataFrame, z: int, halo: int, weight_col: str | None) 
 # A17 skip-filter note: the reference skips all-NoData tile windows
 # before running the kernel (reference core/tile_processor.py:864-874).
 # Here that case is structurally free — a tile with zero points in
-# core+halo has no shuffle rows, so no group exists and the kernel
-# never runs. ``skip_empty_core`` extends the skip to tiles whose CORE
-# is empty (only halo spill-ins): their output is pure boundary bleed
-# of neighbors, the analog of the reference's nodata-tile shortcut.
+# core+halo has no shuffle rows, so the executor never sees it and the
+# kernel never runs. ``skip_empty_core`` extends the skip to tiles
+# whose CORE is empty (only halo spill-ins): their output is pure
+# boundary bleed of neighbors, the analog of the reference's nodata-tile
+# shortcut.
 _CORE_FLAG = "_core"
 
 
@@ -170,10 +176,10 @@ def _with_core_flag(packed: DataFrame) -> DataFrame:
 
 
 def _accumulate_grid(
-    pdf: pd.DataFrame, tx: int, ty: int, z: int, halo: int, weight_col: str | None,
-    dtype=np.float64,
+    gk, weights, tx: int, ty: int, z: int, halo: int, dtype=np.float64,
 ) -> np.ndarray:
-    """Deterministic (W=256+2h)^2 accumulation grid for tile (tx, ty).
+    """Deterministic (W=256+2h)^2 accumulation grid for tile (tx, ty)
+    from the tile's packed ``_gk`` column and its weights (None: counts).
 
     gx/gy are global pixel coords; the tile origin is shifted by -halo.
     For wrapped halos (antimeridian) the offset is fixed up mod world
@@ -182,18 +188,18 @@ def _accumulate_grid(
     """
     w = TILE_PX + 2 * halo
     n_px = (1 << z) * TILE_PX
-    gk = pdf["_gk"].to_numpy(dtype=np.int64)
+    gk = np.asarray(gk, dtype=np.int64)
     lx = ((gk >> 32) - (tx * TILE_PX - halo)) % n_px
     ly = (gk & _MASK32) - (ty * TILE_PX - halo)
     keep = (lx >= 0) & (lx < w) & (ly >= 0) & (ly < w)
     lx, ly = lx[keep], ly[keep]
     idx = ly * w + lx
-    if weight_col is None:
+    if weights is None:
         grid = np.bincount(idx, minlength=w * w).astype(dtype)
     else:
         # float64 accumulation in sorted order regardless of output
         # dtype (bit-reproducible), downcast after
-        vals = pdf[weight_col].to_numpy(dtype=np.float64)[keep]
+        vals = np.asarray(weights, dtype=np.float64)[keep]
         order = np.lexsort((vals, idx))
         grid = np.zeros(w * w, dtype=np.float64)
         np.add.at(grid, idx[order], vals[order])
@@ -229,6 +235,63 @@ def _tile_row(z: int, tx: int, ty: int, cols: dict) -> pd.DataFrame:
     return pd.DataFrame({"z": [z], "x": [tx], "y": [ty], **{k: [v] for k, v in cols.items()}})
 
 
+# Output rows per yielded frame, at most: rasterize_tiles and
+# tile_kernel rows carry a 0.5 MB grid or result each, so a batch of
+# many small tiles must not become one huge frame.
+_FLUSH_ROWS = 64
+
+
+def _tile_batches(frames, z, halo, weight_col, emit, dtype=np.float64, skip_empty_core=False):
+    """The per-tile body over a ``_tk``-sorted partition, as a pure
+    generator: Arrow batches (pandas frames of ``_tk``, ``_gk`` [+
+    weight] [+ core flag]) in, output frames of (z, x, y) + emit
+    columns out.
+
+    Each batch is split at ``_tk`` changes; every run is one tile, or
+    a piece of one when a tile straddles batches. The last run of a
+    batch stays open and its chunks are concatenated once, when the
+    tile closes. One frame is yielded per batch that closed a tile,
+    and early once ``_FLUSH_ROWS`` rows are pending."""
+    cols = ["_gk"] + ([weight_col] if weight_col else []) + ([_CORE_FLAG] if skip_empty_core else [])
+    rows: list[dict] = []
+    open_tk, chunks = None, []
+
+    def close():
+        tile = {c: np.concatenate([ch[c] for ch in chunks]) for c in cols}
+        if skip_empty_core and not tile[_CORE_FLAG].any():
+            return
+        tx, ty = open_tk >> 32, open_tk & _MASK32
+        grid = _accumulate_grid(tile["_gk"], tile.get(weight_col), tx, ty, z, halo, dtype)
+        rows.append({"z": z, "x": tx, "y": ty, **emit(grid, tx, ty)})
+
+    def frame():
+        out = pd.DataFrame({k: [r[k] for r in rows] for k in rows[0]})
+        rows.clear()
+        return out
+
+    for pdf in frames:
+        tk = pdf["_tk"].to_numpy(dtype=np.int64)
+        if not tk.size:
+            continue
+        arrs = {c: pdf[c].to_numpy() for c in cols}
+        bounds = [0, *(np.flatnonzero(tk[1:] != tk[:-1]) + 1).tolist(), tk.size]
+        for a, b in zip(bounds[:-1], bounds[1:]):
+            key = int(tk[a])
+            if key != open_tk:
+                if chunks:
+                    close()
+                    if len(rows) >= _FLUSH_ROWS:
+                        yield frame()
+                open_tk, chunks = key, []
+            chunks.append({c: v[a:b] for c, v in arrs.items()})
+        if rows:
+            yield frame()
+    if chunks:
+        close()
+        if rows:
+            yield frame()
+
+
 def _per_tile(
     points: DataFrame,
     z: int,
@@ -239,27 +302,24 @@ def _per_tile(
     dtype=np.float64,
     skip_empty_core: bool = False,
 ) -> DataFrame:
-    """The tile engine's one grouped-map step: points -> one row per
+    """The tile engine's one per-tile step: points -> one row per
     tile, schema (z, x, y) + ``cols``.
 
-    One halo-exchange shuffle (``_packed_tiles``), one group per
-    ``_tk``. Per group the key is decoded to (tx, ty) once, the halo
-    grid is accumulated once in ``dtype``, and ``emit(grid, tx, ty)``
-    returns the ``cols`` values as a dict. skip_empty_core (A17) emits
-    no row for a tile owning no points (only halo spill-ins)."""
+    One halo-exchange shuffle (``_packed_tiles``); each partition is
+    sorted on ``_tk`` and streamed through ``mapInPandas``, many tiles
+    per Arrow batch (``_tile_batches``). Per tile the key is decoded to
+    (tx, ty) once, the halo grid is accumulated once in ``dtype``, and
+    ``emit(grid, tx, ty)`` returns the ``cols`` values as a dict.
+    skip_empty_core (A17) emits no row for a tile owning no points
+    (only halo spill-ins)."""
     packed = _packed_tiles(points, z, halo, weight_col)
     if skip_empty_core:
         packed = _with_core_flag(packed)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if skip_empty_core and not pdf[_CORE_FLAG].to_numpy().any():
-            return pd.DataFrame()
-        tk = int(pdf["_tk"].iloc[0])
-        tx, ty = tk >> 32, tk & _MASK32
-        grid = _accumulate_grid(pdf, tx, ty, z, halo, weight_col, dtype)
-        return _tile_row(z, tx, ty, emit(grid, tx, ty))
+    def fn(frames):
+        return _tile_batches(frames, z, halo, weight_col, emit, dtype, skip_empty_core)
 
-    return packed.groupBy("_tk").applyInPandas(fn, f"{_TILE_KEY}, {cols}")
+    return packed.sortWithinPartitions("_tk").mapInPandas(fn, f"{_TILE_KEY}, {cols}")
 
 
 def rasterize_tiles(
@@ -576,8 +636,8 @@ def tile_kernel(
     across y tile boundaries (adjacent tile rows differ by the
     latitude step's cos factor — the documented approximation).
 
-    The grouped-map UDF receives the halo-expanded grid, applies the
-    kernel, and crops the core — seam-free by the same construction as
+    The per-tile executor hands the kernel the halo-expanded grid, and
+    the kernel tail crops the core — seam-free by the same construction as
     the reference's map_overlap/tile pipeline (test-enforced: tiled
     output == whole-raster output on the core, the reference's
     tile-stability pattern tests/test_visual_saliency_tile_stability.py).
@@ -592,7 +652,7 @@ def tile_kernel(
     """
     h, tail = _kernel_tail(kernel, z, halo, log_scale, metric_scale, kernel_params)
     if skip_empty_core and fill_surface is not None:
-        # the skip path returns empty for groups holding only halo
+        # the skip path emits no row for tiles holding only halo
         # spill-ins, and _synth_filled_tiles excludes those tiles as
         # "present" — the membrane would silently never materialize
         # for exactly the tiles whose window holds only neighbors'
@@ -608,8 +668,8 @@ def tile_kernel(
 
 def _synth_filled_tiles(points, z, h, fill_surface, emit, schema):
     """Kernel output for fillable tiles that own NO points (core or
-    halo): such tiles have no shuffle rows, so no group ever forms and
-    the membrane would silently not materialize there (whole-tile
+    halo): such tiles have no shuffle rows, so the executor never sees
+    them and the membrane would silently not materialize there (whole-tile
     enclosed voids). Candidates come from the broadcast surface
     (driver-enumerated, bounded), minus the tiles the point path
     already produced — deterministic, partition-independent. Each

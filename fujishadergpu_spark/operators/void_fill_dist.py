@@ -473,7 +473,7 @@ def tile_kernel_stats_filled(
         tk = int(key[0])
         tx, ty = tk >> 32, tk & _MASK32
         if len(pdf):
-            grid = _accumulate_grid(pdf, tx, ty, z, h, None, dtype=dt)
+            grid = _accumulate_grid(pdf["_gk"], None, tx, ty, z, h, dt)
         else:
             # piece-only group: a fillable tile owning no points — the
             # cogroup analog of _synth_filled_tiles (same float64 zeros)

@@ -38,18 +38,22 @@ def test_tile_kernel_single_shuffle(spark, points_df):
     from fujishadergpu_spark.operators.tile_kernels import tile_kernel_stats
 
     plan = _plan(tile_kernel_stats(points_df, 5))
-    # exactly one exchange: the halo-exchange repartition feeding the
-    # grouped-map kernel (no second shuffle for the groupBy — Catalyst
-    # reuses the explicit hash partitioning)
+    # exactly one exchange: the halo-exchange repartition on _tk,
+    # sorted within partitions and streamed through one batched
+    # MapInPandas (no grouped map, so no second shuffle and no
+    # per-tile pandas frame)
     assert plan.count("Exchange hashpartitioning") == 1
+    ex = plan[plan.index("Exchange hashpartitioning"):]
+    assert "_tk" in ex[: ex.index("\n")]
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
 
 
 def test_overview_path_single_broadcast_join(spark, points_df):
     """The large-radius overview rewrite: the coarse level is
     broadcast-joined back on the ancestor key exactly once (one level
     for one large radius), never sort-merged or nested-looped, and the
-    plan keeps its three hash exchanges (fine halo exchange, coarse
-    halo exchange, coarse (x, y) repartition)."""
+    plan has two hash exchanges: the fine and the coarse halo exchange
+    (the coarse responses map the coarse tiles where they stand)."""
     from fujishadergpu_spark.operators.multiscale import multiscale_usm, overview_box_total
     from fujishadergpu_spark.operators.spatial_mode import spatial_kernel
 
@@ -62,7 +66,7 @@ def test_overview_path_single_broadcast_join(spark, points_df):
         assert plan.count("BroadcastHashJoin") == 1
         assert "SortMergeJoin" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
-        assert plan.count("Exchange hashpartitioning") == 3
+        assert plan.count("Exchange hashpartitioning") == 2
 
 
 def test_knn_probe_broadcasts_queries(spark, points_df):
@@ -96,7 +100,7 @@ def test_events_window_partial_aggregation(spark):
 def test_extended_kernels_single_shuffle(spark, points_df):
     """The halo-exchange contract holds for the ported inventory, not
     just hillshade: one hashpartitioning exchange feeding the
-    grouped-map kernel."""
+    batched per-tile kernel."""
     from fujishadergpu_spark.operators.tile_kernels import tile_kernel_stats
 
     for kernel, params in [("openness", {"max_distance": 8}), ("tv_decomposition", {"iterations": 12})]:
@@ -120,7 +124,8 @@ def test_exact_dedup_shuffles_hash_not_text(spark):
 def test_halo_census_single_shuffle(spark, points_df):
     """The hash-oracle census operators, weighted rasterization and the
     array kernel all ride the per-tile executor's one-Exchange halo
-    transport (16-byte packed rows, + the weight when one is given)."""
+    transport (16-byte packed rows, + the weight when one is given)
+    into one batched MapInPandas, never a per-tile grouped map."""
     from fujishadergpu_spark.operators.tile_kernels import (
         rasterize_tiles,
         tile_box_total,
@@ -142,6 +147,7 @@ def test_halo_census_single_shuffle(spark, points_df):
         ex = plan[plan.index("Exchange hashpartitioning"):]
         head = ex[: ex.index("\n")]
         assert "_tk" in head and "lat" not in head and "url" not in head
+        assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
 
 
 def test_ngram_jaccard_shuffles_hashes_not_text(spark):
