@@ -66,8 +66,12 @@ def _unit_np(mat: np.ndarray) -> np.ndarray:
 
 def _round_half_up(y: np.ndarray) -> np.ndarray:
     """F.round(double) twin: HALF_UP (away from zero). Exact for
-    |y| < 2^51 where adding 0.5 is itself exact."""
-    return np.where(y >= 0, np.floor(y + 0.5), np.ceil(y - 0.5)).astype(np.int64)
+    |y| < 2^52. There y ± 0.5 is exact except just inside ±0.5, where
+    0.5 - 2^-54 + 0.5 rounds (ties-to-even) up to 1; |y| < 0.5 is
+    therefore 0 explicitly. Callers stay far inside the bound
+    (|y| <= QUANT)."""
+    r = np.where(y >= 0, np.floor(y + 0.5), np.ceil(y - 0.5))
+    return np.where(np.abs(y) < 0.5, 0.0, r).astype(np.int64)
 
 
 def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:

@@ -146,21 +146,35 @@ def median3x3(a: np.ndarray, mode: str = "nearest") -> np.ndarray:
     return np.median(stack, axis=0)
 
 
-def bilinear_sample(img: np.ndarray, y: np.ndarray, x: np.ndarray) -> np.ndarray:
-    """map_coordinates(order=1, mode='nearest'): bilinear with clamped
-    coordinates."""
+def bilinear_axis(c: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """One axis of a clamped bilinear sample on an axis of length n:
+    (i0, frac) with the coordinate clamped to [0, n-1] and i0 <= n-2,
+    so taps i0 and i0+1 both exist (i0 = 0 when n == 1)."""
+    cc = np.clip(c, 0.0, n - 1.0)
+    i0 = np.minimum(cc.astype(np.int64), n - 2) if n > 1 else np.zeros_like(cc, dtype=np.int64)
+    return i0, cc - i0
+
+
+def bilinear_taps(img: np.ndarray, y0, fy, x0, fx) -> np.ndarray:
+    """The 4-tap bilinear blend at (y0 + fy, x0 + fx); the arguments
+    broadcast against each other (per-axis vectors as [:, None] and
+    [None, :] give a separable grid). Indices are into ``img``, which
+    may be a patch of a larger image as long as it holds both taps."""
     h, w = img.shape
-    yc = np.clip(y, 0.0, h - 1.0)
-    xc = np.clip(x, 0.0, w - 1.0)
-    y0 = np.minimum(yc.astype(np.int64), h - 2) if h > 1 else np.zeros_like(yc, dtype=np.int64)
-    x0 = np.minimum(xc.astype(np.int64), w - 2) if w > 1 else np.zeros_like(xc, dtype=np.int64)
-    fy = yc - y0
-    fx = xc - x0
     tl = img[y0, x0]
     tr = img[y0, x0 + 1] if w > 1 else tl
     bl = img[y0 + 1, x0] if h > 1 else tl
     br = img[y0 + 1, x0 + 1] if h > 1 and w > 1 else tl
     return tl * (1 - fy) * (1 - fx) + tr * (1 - fy) * fx + bl * fy * (1 - fx) + br * fy * fx
+
+
+def bilinear_sample(img: np.ndarray, y: np.ndarray, x: np.ndarray) -> np.ndarray:
+    """map_coordinates(order=1, mode='nearest'): bilinear with clamped
+    coordinates."""
+    h, w = img.shape
+    y0, fy = bilinear_axis(y, h)
+    x0, fx = bilinear_axis(x, w)
+    return bilinear_taps(img, y0, fy, x0, fx)
 
 
 # ------------------------- NaN-aware wrappers ------------------------
@@ -273,9 +287,7 @@ def pushpull_core(vw0: np.ndarray, w0: np.ndarray) -> np.ndarray:
         vws.append(nvw)
         ws.append(nw)
     # pull: synthesize from coarsest up; fill only unsupported cells
-    filled = np.where(
-        ws[-1] > PUSHPULL_EPS, vws[-1] / np.maximum(ws[-1], PUSHPULL_EPS), 0.0
-    )
+    filled = pushpull_pull_step(vws[-1], ws[-1], 0.0)
     for lvl in range(len(vws) - 2, -1, -1):
         th, tw = vws[lvl].shape
         up = zoom_bilinear(filled, th, tw)

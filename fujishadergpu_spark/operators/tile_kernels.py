@@ -789,6 +789,31 @@ def tile_box_total(points: DataFrame, z: int, r: int) -> DataFrame:
 
 # ----------------------------- LOD pyramid ---------------------------
 
+def _parent_tiles(tiles: DataFrame, grid_cols: tuple[str, ...], halve, schema: str) -> DataFrame:
+    """The one children -> parent step of the LOD pyramid and of the
+    void-fill push: group tiles by (x>>1, y>>1), halve each child's
+    ``grid_cols`` with ``halve(*grids) -> 128² grids`` and place them
+    in the parent quadrant (x&1, y&1); absent children stay zero. A
+    ``z`` column, when present, steps to z-1."""
+    half = TILE_PX // 2
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        parents = [np.zeros((TILE_PX, TILE_PX), dtype=np.float64) for _ in grid_cols]
+        for cx_, cy_, *bufs in zip(pdf["x"], pdf["y"], *(pdf[c] for c in grid_cols)):
+            qy, qx = (int(cy_) & 1) * half, (int(cx_) & 1) * half
+            for parent, d in zip(parents, halve(*(unpack_grid(b, TILE_PX) for b in bufs))):
+                parent[qy : qy + half, qx : qx + half] = d
+        row = {"z": int(pdf["z"].iloc[0]) - 1} if "z" in pdf else {}
+        row.update(x=int(pdf["x"].iloc[0]) >> 1, y=int(pdf["y"].iloc[0]) >> 1)
+        return pd.DataFrame([{**row, **{c: pack_grid(p) for c, p in zip(grid_cols, parents)}}])
+
+    return (
+        tiles.withColumns({"_px": F.shiftright(F.col("x"), 1), "_py": F.shiftright(F.col("y"), 1)})
+        .groupBy("_px", "_py")
+        .applyInPandas(fn, schema)
+    )
+
+
 def pyramid_level(tiles: DataFrame, agg: str = "sum") -> DataFrame:
     """One LOD step: (z, x, y, grid 256²) -> (z-1, x>>1, y>>1, grid 256²).
 
@@ -799,28 +824,12 @@ def pyramid_level(tiles: DataFrame, agg: str = "sum") -> DataFrame:
     """
     if agg not in ("sum", "mean"):
         raise ValueError(f"unknown agg {agg!r} (sum/mean)")  # fail at plan time, not in executors
-    half = TILE_PX // 2
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        parent = np.zeros((TILE_PX, TILE_PX), dtype=np.float64)
-        z = int(pdf["z"].iloc[0]) - 1
-        px_ = int(pdf["x"].iloc[0]) >> 1
-        py_ = int(pdf["y"].iloc[0]) >> 1
-        for cx_, cy_, buf in zip(pdf["x"], pdf["y"], pdf["grid"]):
-            g = unpack_grid(buf, TILE_PX)
-            d = g.reshape(half, 2, half, 2)
-            d = d.sum(axis=(1, 3)) if agg == "sum" else d.mean(axis=(1, 3))
-            qx = (int(cx_) & 1) * half
-            qy = (int(cy_) & 1) * half
-            parent[qy : qy + half, qx : qx + half] = d
-        return pd.DataFrame({"z": [z], "x": [px_], "y": [py_], "grid": [pack_grid(parent)]})
+    def halve(g: np.ndarray) -> tuple[np.ndarray]:
+        d = g.reshape(TILE_PX // 2, 2, TILE_PX // 2, 2)
+        return (d.sum(axis=(1, 3)) if agg == "sum" else d.mean(axis=(1, 3)),)
 
-    schema = "z int, x long, y long, grid binary"
-    return (
-        tiles.withColumns({"_px": F.shiftright(F.col("x"), 1), "_py": F.shiftright(F.col("y"), 1)})
-        .groupBy("_px", "_py")
-        .applyInPandas(fn, schema)
-    )
+    return _parent_tiles(tiles, ("grid",), halve, "z int, x long, y long, grid binary")
 
 
 def build_pyramid(tiles: DataFrame, z_from: int, z_to: int, agg: str = "sum") -> DataFrame:

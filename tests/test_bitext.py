@@ -109,3 +109,21 @@ def test_candidate_scores_impl_validation(spark):
     df = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
     with pytest.raises(ValueError, match="unknown impl"):
         candidate_scores(df, df, impl="bogus")
+
+
+def test_round_half_up_matches_decimal_half_up_near_half():
+    """The Arrow path's F.round twin on the values where floor(y + 0.5)
+    goes wrong (y + 0.5 rounds up to 1 just below 0.5) and on its exact
+    neighbours: decimal HALF_UP of the value's shortest repr, which is
+    what F.round(double) computes. No JVM needed."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    from fujishadergpu_spark.operators.bitext import _round_half_up
+
+    ys = [0.49999999999999994, 0.5, 1.4999999999999998]
+    ys = np.array(ys + [-y for y in ys])
+    want = [int(Decimal(repr(float(y))).quantize(Decimal(1), rounding=ROUND_HALF_UP)) for y in ys]
+    assert want == [0, 1, 1, 0, -1, -1]
+    assert _round_half_up(ys).tolist() == want

@@ -48,6 +48,21 @@ def test_tile_kernel_single_shuffle(spark, points_df):
     assert "MapInPandas" in plan and "FlatMapGroupsInPandas" not in plan
 
 
+def test_patch_join_fill_shuffle_count(spark, points_df):
+    """The patch-join void fill (tile_kernel_stats_filled) keeps its
+    exchange budget: six hash exchanges (the halo exchange on each of
+    the point and candidate branches, the candidate distinct, the
+    membrane and request sides of the piece cogroup, the piece side of
+    the kernel cogroup) and exactly two cogroups. The membrane pyramid
+    is checkpointed before this plan, so its steps are not counted."""
+    from fujishadergpu_spark.operators.void_fill_dist import tile_kernel_stats_filled
+
+    plan = _plan(tile_kernel_stats_filled(points_df, 5, zc=2))
+    assert plan.count("Exchange hashpartitioning") == 6
+    assert plan.count("FlatMapCoGroupsInPandas") == 2
+    assert "FlatMapGroupsInPandas" not in plan
+
+
 def test_overview_path_single_broadcast_join(spark, points_df):
     """The large-radius overview rewrite: the coarse level is
     broadcast-joined back on the ancestor key exactly once (one level

@@ -169,6 +169,29 @@ def test_pyramid_mass_conservation(spark, points_df):
         assert abs(total - n) < 1e-6, f"mass lost at z={z_}"
 
 
+def test_pyramid_level_mean_equals_world_block_mean(spark, points_df):
+    """agg='mean': every parent tile is exactly the 2x2 block mean of
+    the assembled child world over its footprint (absent children read
+    as zeros), and parents exist exactly over present children."""
+    base = rasterize_tiles(points_df, Z)
+    n = (1 << Z) * TILE_PX
+    world = np.zeros((n, n))
+    children = set()
+    for r in base.collect():
+        children.add((r["x"] >> 1, r["y"] >> 1))
+        world[r["y"] * TILE_PX : (r["y"] + 1) * TILE_PX,
+              r["x"] * TILE_PX : (r["x"] + 1) * TILE_PX] = np.frombuffer(r["grid"]).reshape(TILE_PX, TILE_PX)
+    want = world.reshape(n // 2, 2, n // 2, 2).mean(axis=(1, 3))
+    parents = pyramid_level(base, agg="mean").collect()
+    assert {(r["x"], r["y"]) for r in parents} == children
+    for r in parents:
+        assert r["z"] == Z - 1
+        got = np.frombuffer(r["grid"]).reshape(TILE_PX, TILE_PX)
+        assert np.array_equal(
+            got, want[r["y"] * TILE_PX : (r["y"] + 1) * TILE_PX, r["x"] * TILE_PX : (r["x"] + 1) * TILE_PX]
+        )
+
+
 def test_pyramid_unknown_agg_raises_at_plan_time(spark, points_df):
     """An unknown agg is refused when the plan is built — it must not
     silently average (only sum and mean exist)."""

@@ -1,7 +1,6 @@
 """Distributed push-pull membrane (operators/void_fill_dist.py, r5
-verdict #7): bit-identical to the driver-side pyramid at zc <= cap,
-and the filled-hillshade consumer produces identical tiles from
-either surface."""
+verdict #7): bit-identical to the driver-side pyramid, and the
+patch-join filled kernel produces the broadcast route's tiles."""
 
 import numpy as np
 import pytest
@@ -10,11 +9,12 @@ from pyspark.sql import functions as F
 from fujishadergpu_spark.functions.tiles import TILE_PX
 from fujishadergpu_spark.operators.np_filters import pushpull_fill
 from fujishadergpu_spark.operators.tile_kernels import rasterize_tiles, unpack_grid
-from fujishadergpu_spark.operators.void_fill import build_void_fill_surface
-from fujishadergpu_spark.operators.void_fill_dist import (
-    build_void_fill_surface_distributed,
-    pushpull_fill_tiles,
+from fujishadergpu_spark.operators.void_fill import (
+    _assemble_world,
+    _fillable_mask,
+    build_void_fill_surface,
 )
+from fujishadergpu_spark.operators.void_fill_dist import pushpull_fill_tiles
 
 
 def _world(spark_rows, zc):
@@ -37,28 +37,6 @@ def test_distributed_membrane_equals_driver_pushpull(spark, points_df, zc):
     expect = pushpull_fill(np.where(world == 0, np.nan, world))
     got = _world(pushpull_fill_tiles(points_df, zc).collect(), zc)
     assert np.array_equal(got, expect), float(np.abs(got - expect).max())
-
-
-def test_distributed_surface_equals_driver_surface(spark, points_df):
-    """build_void_fill_surface_distributed at zc <= the classify cap ==
-    the driver surface: same membrane, same fillable mask."""
-    a = build_void_fill_surface(points_df, 5, zc=2, mode="enclosed")
-    b = build_void_fill_surface_distributed(points_df, 5, zc=2, mode="enclosed")
-    assert np.array_equal(a._bc_fill.value, b._bc_fill.value)
-    assert np.array_equal(a._bc_fillable.value, b._bc_fillable.value)
-
-
-def test_filled_hillshade_runs_on_distributed_surface(spark, points_df):
-    """The A21 consumer path (tile_hillshade_filled_z5's machinery)
-    must produce identical tiles from either surface build."""
-    from fujishadergpu_spark.operators.tile_kernels import tile_kernel_stats
-
-    sa = build_void_fill_surface(points_df, 5, mode="enclosed")
-    sb = build_void_fill_surface_distributed(points_df, 5, zc=2, mode="enclosed")
-    cols = ["x", "y", "lit_pixels", "shade_sum"]
-    ta = {tuple(r) for r in tile_kernel_stats(points_df, 5, kernel="hillshade", fill_surface=sa).select(*cols).collect()}
-    tb = {tuple(r) for r in tile_kernel_stats(points_df, 5, kernel="hillshade", fill_surface=sb).select(*cols).collect()}
-    assert ta == tb
 
 
 @pytest.mark.parametrize("kernel,kw", [("hillshade", {}), ("slope", {"unit": "degree"})])
@@ -96,10 +74,25 @@ def test_join_based_fill_zc_equals_z_and_metric(spark, points_df):
     assert a == b and len(a) > 1
 
 
+def test_join_based_fill_default_zc(spark, points_df):
+    """tile_kernel_stats_filled derives zc from z with the broadcast
+    route's rule, so z < 4 works without passing zc (a fixed default
+    of 4 refused every z < 4) and matches the broadcast fill."""
+    from fujishadergpu_spark.operators.tile_kernels import tile_kernel_stats
+    from fujishadergpu_spark.operators.void_fill_dist import tile_kernel_stats_filled
+
+    cols = ["z", "x", "y", "shade_sum", "shade_max", "lit_pixels"]
+    a = {tuple(r) for r in tile_kernel_stats(
+        points_df, 3, fill_surface=build_void_fill_surface(points_df, 3)).select(*cols).collect()}
+    b = {tuple(r) for r in tile_kernel_stats_filled(points_df, 3).select(*cols).collect()}
+    assert a == b and len(a) > 1
+
+
 def test_distributed_membrane_all_mode_and_empty(spark):
-    """mode='all' gates every cell; an empty input synthesizes a zero
-    membrane (the pushpull_core no-data contract) without erroring."""
+    """mode='all' gates every cell; an empty input synthesizes a dense
+    zero membrane (the pushpull_core no-data contract) without erroring."""
     empty = spark.createDataFrame([], "id long, lat double, lon double")
-    s = build_void_fill_surface_distributed(empty, 3, zc=1, mode="all")
-    assert s._bc_fillable.value.all()
-    assert float(np.abs(s._bc_fill.value).max()) == 0.0
+    rows = pushpull_fill_tiles(empty, 1).collect()
+    assert len(rows) == 4
+    assert float(np.abs(_world(rows, 1)).max()) == 0.0
+    assert _fillable_mask(_assemble_world(empty, 1), "all").all()
