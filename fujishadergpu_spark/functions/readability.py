@@ -29,6 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .sentences import sentences
+from .textfn import ws_tokens
 
 VOWEL_RUN_RE = "[aeiouy]+"
 
@@ -41,9 +42,7 @@ def syllable_count(text: Column) -> Column:
 
 
 def word_count(text: Column) -> Column:
-    return F.size(
-        F.filter(F.split(F.coalesce(text, F.lit("")), "[ \n]+"), lambda t: t != "")
-    ).cast("bigint")
+    return F.size(ws_tokens(F.coalesce(text, F.lit("")))).cast("bigint")
 
 
 def readability(

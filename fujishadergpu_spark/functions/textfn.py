@@ -11,6 +11,8 @@ percentile_approx when a relative score is needed.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -31,6 +33,22 @@ STOPWORDS = {
 def tokens(text: Column) -> Column:
     """Whitespace tokens, empty-safe (JVM split + filter)."""
     return F.filter(F.split(text, " +"), lambda t: t != "")
+
+
+def ws_tokens(text: Column) -> Column:
+    """Tokens split on runs of space or newline, empty-safe: the
+    ``[ \\n]+`` split every multi-line text operator and its DuckDB
+    oracle (``string_split_regex(text, '[ \\n]+')``) share."""
+    return F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
+
+
+_WS_RE = re.compile(r"[ \n]+")
+
+
+def ws_split(text: str | None) -> list[str]:
+    """:func:`ws_tokens` for one Python string, in Arrow UDF bodies
+    (NULL and empty text give no tokens)."""
+    return [t for t in _WS_RE.split(text) if t] if text else []
 
 
 def token_count(text: Column) -> Column:

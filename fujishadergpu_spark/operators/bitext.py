@@ -43,21 +43,18 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, LongType, StructField, StructType
+
+from ..session import spread
 
 QUANT = 1e12
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
-    )
-
-
 def _unit_np(mat: np.ndarray) -> np.ndarray:
-    """Bit-identical NumPy twin of _unit_rows' normalization: the
-    norm is the SEQUENTIAL fold Σ v_j² in index order (one add per
-    dimension, same IEEE sequence as the column expression), then one
-    sqrt and one divide per element."""
+    """Row unit-normalization: the norm is the SEQUENTIAL fold Σ v_j²
+    in index order (one add per dimension, the IEEE sequence of the
+    oracle's ``list_inner_product(e0, e0)``), then one sqrt and one
+    divide per element."""
     acc = np.zeros(mat.shape[0], dtype=np.float64)
     for j in range(mat.shape[1]):
         acc = acc + mat[:, j] * mat[:, j]
@@ -74,21 +71,41 @@ def _round_half_up(y: np.ndarray) -> np.ndarray:
     return np.where(np.abs(y) < 0.5, 0.0, r).astype(np.int64)
 
 
-def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
-    """NumPy twin of the expr candidate plan: same rows, same bits.
+def candidate_scores(src: DataFrame, tgt: DataFrame) -> DataFrame:
+    """Exhaustive (src_id, tgt_id, qcos) relation — the oracle-scale
+    candidate generator. Production swaps this for ANN candidates.
+    ``vec_id`` must be an integral column; src_id/tgt_id keep its
+    type.
 
-    The per-pair dot product is evaluated as a sequential loop over
-    dimensions (acc = acc + x_j·y_j, vectorized across pairs per
-    step), which reproduces the column fold's IEEE sequence exactly —
-    NOT np.dot, whose pairwise summation would reassociate. The tgt
-    side is pulled to the driver and broadcast — the identical bytes
-    the expr plan's F.broadcast(t) ships, made explicit so the UDF
-    can see the whole matrix; like the exhaustive candidate relation
+    Embeddings are cast to float64 BEFORE the arithmetic: float32
+    products would wobble ~1e-7 against any double engine, while the
+    double fold is bitwise-equal to DuckDB's (measured over all
+    124,750 fixture pairs), which is what makes the quantization
+    deterministic. Each side is unit-normalized once per ROW, so the
+    per-pair work is a single dot product, evaluated as a sequential
+    loop over dimensions (acc = acc + x_j·y_j, vectorized across pairs
+    per step) — NOT np.dot, whose pairwise summation would
+    reassociate. That is the IEEE sequence of the oracle's
+    ``list_inner_product`` (``queries.BITEXT_SQL``, the statement this
+    operator is pinned to).
+
+    The tgt side is pulled to the driver and broadcast so the UDF can
+    see the whole matrix; like the exhaustive candidate relation
     itself this is the oracle-scale configuration (module docstring:
     production feeds ANN candidates into the same margin algebra and
     never materializes a full side)."""
+    for side in (src, tgt):
+        t = side.schema["vec_id"].dataType
+        if not isinstance(t, IntegralType):
+            raise ValueError(
+                f"candidate_scores: vec_id must be an integral column, got {t.simpleString()}"
+            )
+    schema = StructType([
+        StructField("src_id", src.schema["vec_id"].dataType),
+        StructField("tgt_id", tgt.schema["vec_id"].dataType),
+        StructField("qcos", LongType()),
+    ])
     rows = tgt.select("vec_id", "embedding").collect()
-    schema = "src_id long, tgt_id long, qcos long"
     if not rows:  # no tgt rows, no pairs (and no matrix to normalize)
         return src.sparkSession.createDataFrame([], schema)
     t_ids = np.fromiter((r["vec_id"] for r in rows), np.int64, count=len(rows))
@@ -113,54 +130,7 @@ def _candidate_scores_arrow(src: DataFrame, tgt: DataFrame) -> DataFrame:
                 }
             )
 
-    sel = src.select("vec_id", "embedding")
-    par = src.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
-    return sel.mapInPandas(fn, schema)
-
-
-def _unit_rows(df: DataFrame, id_alias: str, emb_alias: str) -> DataFrame:
-    """(id, embedding / ||embedding||) — the norm is computed ONCE per
-    row here, not once per pair in the quadratic stage (higher-order
-    array functions are interpreted per element, so hoisting the two
-    norm folds out of the cross product cuts ~2/3 of its work)."""
-    e = F.col("embedding").cast("array<double>")
-    n = F.sqrt(
-        F.aggregate(F.transform(e, lambda v: v * v), F.lit(0.0), lambda a, v: a + v)
-    )
-    return df.select(
-        F.col("vec_id").alias(id_alias),
-        F.transform(e, lambda v: v / n).alias(emb_alias),
-    )
-
-
-def candidate_scores(src: DataFrame, tgt: DataFrame, impl: str = "arrow") -> DataFrame:
-    """Exhaustive (src_id, tgt_id, qcos) relation — the oracle-scale
-    candidate generator. Production swaps this for ANN candidates.
-
-    Embeddings are cast to array<double> BEFORE the arithmetic: float32
-    products would wobble ~1e-7 against any double engine, while the
-    double fold is bitwise-equal to DuckDB's (measured over all
-    124,750 fixture pairs), which is what makes the quantization
-    deterministic. Each side is unit-normalized once per ROW, so the
-    per-pair work is a single dot-product fold; the SQL twin
-    normalizes the same way so the IEEE sequences stay identical.
-
-    ``impl``: 'arrow' (default) computes the pair block in NumPy with
-    the identical IEEE operation sequence (_candidate_scores_arrow —
-    the per-pair interpreted zip_with/aggregate fold was ~half the
-    query's bench time); 'expr' is the original column-expression
-    plan, the statement the DuckDB twin mirrors. Row-identical,
-    pinned by tests/test_bitext.py."""
-    if impl == "arrow":
-        return _candidate_scores_arrow(src, tgt)
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (arrow/expr)")
-    s = _unit_rows(src, "src_id", "_se")
-    t = _unit_rows(tgt, "tgt_id", "_te")
-    qcos = F.round(_dot(F.col("_se"), F.col("_te")) * F.lit(QUANT)).cast("bigint")
-    return s.crossJoin(F.broadcast(t)).select("src_id", "tgt_id", qcos.alias("qcos"))
+    return spread(src.select("vec_id", "embedding")).mapInPandas(fn, schema)
 
 
 def mine_bitext(

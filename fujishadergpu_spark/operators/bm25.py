@@ -13,10 +13,10 @@ family (the training-data-pipeline mandate; README capability table) with the ra
 
 Scale shape (100 TB corpus, query set << corpus):
 - the postings relation (term, doc, tf, dl) is built by ONE corpus
-  scan + one map-side-partial groupBy; the document length rides
-  the postings row (8 bytes) so the query path never joins the
-  corpus-sized per-doc length relation — document text and the raw
-  doc-length table never appear again after the build;
+  scan, per document in one mapInPandas (no exchange); the document
+  length rides the postings row (8 bytes) so the query path never
+  joins the corpus-sized per-doc length relation — document text and
+  the raw doc-length table never appear again after the build;
 - df/idf is a groupBy over postings — rows are (term, count), tiny;
 - the query side is exploded to (query, term) and BROADCAST against
   postings (same contract as decontaminate.py's benchmark set): the
@@ -36,12 +36,13 @@ hillshade trig gate).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-
-def _tokens(text):
-    return F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
+from ..functions.textfn import ws_split, ws_tokens
+from ..session import spread
 
 
 def bm25_topk(
@@ -54,75 +55,57 @@ def bm25_topk(
     text_col: str = "text",
     query_id_col: str = "query_id",
     query_text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Top-k BM25 matches per query: (query_id, rank, doc_id,
     score_q6) with score_q6 = round(BM25 * 1e6) and rank ties broken
-    by ascending doc id (the knn/ann rank-only contract).
+    by ascending doc id (the knn/ann rank-only contract). The doc id
+    keeps its input type.
 
-    ``impl``: 'arrow' (default) builds the postings relation
-    (_doc, _term, _tf, _dl) per document inside one mapInPandas —
-    term frequencies are document-LOCAL, so the expr plan's
-    explode + corpus-wide (doc, term) groupBy exchange exists only to
-    feed SQL aggregation semantics; 'expr' is that original plan, the
-    statement the DuckDB twin mirrors. Identical postings rows either
-    way (tests/test_bm25.py)."""
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"unknown impl {impl!r} (arrow/expr)")
-    toks = docs.select(F.col(id_col).alias("_doc"), _tokens(F.col(text_col)).alias("_tk"))
+    The postings relation (_doc, _term, _tf, _dl) is built per
+    document inside one mapInPandas: term frequencies are
+    document-LOCAL, so no corpus-wide (doc, term) exchange is needed
+    to count them. The statement of the same relation is the
+    ``tf``/``dl`` CTEs of ``queries.BM25_SQL``, the DuckDB oracle that
+    pins this operator."""
+    toks = docs.select(F.col(id_col).alias("_doc"), ws_tokens(F.col(text_col)).alias("_tk"))
     dl = toks.select("_doc", F.size("_tk").cast("bigint").alias("_dl"))
     stats = dl.agg(
         F.count("*").alias("_n"), F.sum("_dl").alias("_total")
     )
-    # _dl rides the postings row (constant per doc, max = the value):
-    # the scoring join below then never touches the corpus-sized dl
-    # relation (dl only feeds the single-row stats aggregate)
-    if impl == "arrow":
-        import re
+    # _dl rides the postings row (constant per doc): the scoring join
+    # below then never touches the corpus-sized dl relation (dl only
+    # feeds the single-row stats aggregate)
+    def build(it):
+        for pdf in it:
+            d, t, c, ln = [], [], [], []
+            for did, text in zip(pdf[id_col], pdf[text_col]):
+                tk = ws_split(text)
+                if not tk:
+                    continue
+                cnt: dict[str, int] = {}
+                for x in tk:
+                    cnt[x] = cnt.get(x, 0) + 1
+                for term, n_occ in cnt.items():
+                    d.append(did)
+                    t.append(term)
+                    c.append(n_occ)
+                    ln.append(len(tk))
+            yield pd.DataFrame({"_doc": d, "_term": t, "_tf": c, "_dl": ln})
 
-        import pandas as pd
-
-        ws = re.compile(r"[ \n]+")
-
-        def build(it):
-            for pdf in it:
-                d, t, c, ln = [], [], [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    tk = [x for x in ws.split(text) if x] if text else []
-                    if not tk:
-                        continue
-                    cnt: dict[str, int] = {}
-                    for x in tk:
-                        cnt[x] = cnt.get(x, 0) + 1
-                    for term, n_occ in cnt.items():
-                        d.append(did)
-                        t.append(term)
-                        c.append(n_occ)
-                        ln.append(len(tk))
-                yield pd.DataFrame({"_doc": d, "_term": t, "_tf": c, "_dl": ln})
-
-        src = docs.select(id_col, text_col)
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        if src.rdd.getNumPartitions() < par:
-            src = src.repartition(par)
-        tf = src.mapInPandas(build, "_doc long, _term string, _tf long, _dl long")
-    else:
-        tf = (
-            toks.select(
-                "_doc",
-                F.size("_tk").cast("bigint").alias("_len"),
-                F.explode("_tk").alias("_term"),
-            )
-            .groupBy("_doc", "_term")
-            .agg(F.count("*").alias("_tf"), F.max("_len").alias("_dl"))
-        )
+    schema = StructType([
+        StructField("_doc", docs.schema[id_col].dataType),
+        StructField("_term", StringType()),
+        StructField("_tf", LongType()),
+        StructField("_dl", LongType()),
+    ])
+    tf = spread(docs.select(id_col, text_col)).mapInPandas(build, schema)
     df_rel = tf.groupBy("_term").agg(F.count("*").alias("_df"))
     qterms = queries.select(
         F.col(query_id_col).alias("_q"),
-        F.explode(F.array_distinct(_tokens(F.col(query_text_col)))).alias("_term"),
+        F.explode(F.array_distinct(ws_tokens(F.col(query_text_col)))).alias("_term"),
     )
     # operation order below is the oracle contract — mirror any change
-    # in BM25_SQL-style twins term for term
+    # in queries.BM25_SQL term for term
     n_d = F.col("_n").cast("double")
     avgdl = F.col("_total").cast("double") / F.col("_n")
     idf = F.log(((n_d - F.col("_df")) + F.lit(0.5)) / (F.col("_df") + F.lit(0.5)) + F.lit(1.0))

@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
 from .repetition import doc_lines
 
 TERMINAL = (".", "!", "?", '"')
@@ -87,9 +88,7 @@ def c4_features(
         & ~F.contains(low, F.lit("{"))
     )
     if blocklist:
-        words = F.array_distinct(
-            F.filter(F.split(low, "[ \n]+"), lambda w: w != "")
-        )
+        words = F.array_distinct(ws_tokens(low))
         bad = F.array(*[F.lit(w.lower()) for w in sorted(set(blocklist))])
         page_ok = page_ok & ~F.arrays_overlap(words, bad)
     return df.withColumns(

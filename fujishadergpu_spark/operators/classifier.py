@@ -57,8 +57,8 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
 from .dedup import poly31_hash
-from .repetition import doc_tokens_ws
 
 DEFAULT_BUCKETS = 512
 DEFAULT_LR = 2.0
@@ -94,7 +94,7 @@ def hashed_tf(
     cnt = (
         df.select(
             F.col(id_col).alias("_id"),
-            F.explode(doc_tokens_ws(F.col(text_col))).alias("_tok"),
+            F.explode(ws_tokens(F.col(text_col))).alias("_tok"),
         )
         .select("_id", (poly31_hash(F.col("_tok")) % F.lit(buckets)).alias("bucket"))
         .groupBy("_id", "bucket")

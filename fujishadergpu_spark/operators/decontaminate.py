@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
 from .repetition import _empty_str_array
 
 
@@ -42,7 +43,7 @@ def token_ngrams(text, n: int):
     JVM ``transform`` over a ``sequence`` — no Python in the path.
     Documents with fewer than ``n`` tokens yield an empty array.
     """
-    tk = F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
+    tk = ws_tokens(text)
     grams = F.when(
         F.size(tk) >= n,
         F.transform(

@@ -36,6 +36,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from ..session import spread
+
 # Mersenne prime 2^31-1: with 31-bit hashes and a, b < p the product
 # a*h + b < 2^62 is exact in uint64, so ((a*h + b) mod p) is the
 # genuine Carter-Wegman universal family — not an overflow-wrapped
@@ -392,7 +394,7 @@ def simhash_bit_params(num_bits: int = 64, seed: int = 42) -> tuple[list[int], l
     """Deterministic (a_i, b_i) coefficients of the universal family
     g_i(h) = (a_i*h + b_i) mod p over p = 2^31-1 — one pair per
     SimHash bit for the 'poly31' hash mode. Shared with the DuckDB
-    oracle twin (queries.DEDUP_SIMHASH_SQL) so the two engines derive
+    oracle (queries._simhash_sql) so the two engines derive
     the identical signature from the identical token hash."""
     rng = np.random.RandomState(seed)
     p = (1 << 31) - 1
@@ -406,16 +408,15 @@ def poly31_hash(col) -> "F.Column":
     """31-bit polynomial hash of a string column, as a JVM column
     expression: fold (acc*1000003 + codepoint) mod 2^31-1 over the
     characters. Matches DuckDB's list_reduce over
-    ascii(string_split(...)) bit-for-bit (including non-ASCII:
-    ascii() is the codepoint of the first character on both engines),
-    which is what makes a SimHash built on it cross-engine
-    SQL-stateable. Caveat at web scale: ASTRAL-plane characters
-    (emoji, U+10000+) split into two UTF-16 surrogates on the JVM but
-    one codepoint in DuckDB — BMP text (incl. all CJK) is exact; a
-    migration-validation run over emoji-bearing text should compare
-    on a BMP-filtered projection. The fold is an interpreted
-    higher-order function — fine over ≤~20-char tokens, never use it
-    over large arrays."""
+    ascii(string_split(...)) bit-for-bit on any text: ``split(col, '')``
+    yields one element per code point and ``ascii()`` is the code
+    point of the first character on both engines, so astral-plane
+    characters (emoji, U+10000+) fold as ONE code point each
+    (poly31_hash('😀') = 128512 = U+1F600). That is what makes a
+    SimHash built on it cross-engine SQL-stateable. The fold is an
+    interpreted higher-order function — fine over ≤~20-char tokens,
+    never use it over large arrays (:func:`poly31_hash_np` is the
+    batch form)."""
     return F.aggregate(
         F.split(col, ""),
         F.lit(0).cast("long"),
@@ -426,6 +427,7 @@ def poly31_hash(col) -> "F.Column":
 _P31 = (1 << 31) - 1
 _P31_MULT = 1000003
 _POW31 = np.array([1], dtype=np.int64)  # 1000003^k mod p, grown on demand
+_P31_CHUNK = 2048  # code-point terms per exact int64 partial sum
 
 
 def poly31_pows(n: int) -> np.ndarray:
@@ -443,28 +445,25 @@ def poly31_pows(n: int) -> np.ndarray:
 
 
 def poly31_hash_np(strs) -> tuple[np.ndarray, np.ndarray]:
-    """Vectorized, bit-identical twin of :func:`poly31_hash` for a
-    Python sequence of strings: returns (hashes, utf16_lengths) as
-    int64 arrays.
+    """:func:`poly31_hash` for a Python sequence of strings, in NumPy:
+    returns (hashes, code-point lengths) as int64 arrays.
 
-    Identical semantics to the JVM column fold — the string is walked
-    as UTF-16 code units (JVM chars; astral-plane characters are two
-    surrogates, matching ``F.split(col, '')`` + ``F.ascii``), folded
-    Horner-style mod 2^31-1. Vectorization: hash = Σ unit_i ·
-    1000003^(n-1-i) mod p; each term is < 2^16·2^31 = 2^47, so the
-    dot product of a ≤ 60k-unit row with the power table is exact in
-    int64 and one trailing mod recovers the fold. Strings are grouped
-    by length so every group is a single NumPy matrix product — no
-    per-character Python. This is the production hot-path form of the
-    hash (guide §4.2: batch-native compute inside the Python
-    boundary); the column-expression form stays the cross-engine
-    oracle statement."""
+    Bit-identical to the JVM column fold on all text, astral planes
+    included: the string is walked as Unicode code points (UTF-32,
+    matching ``F.split(col, '')`` + ``F.ascii``), folded Horner-style
+    mod 2^31-1. Vectorization: hash = Σ cp_i · 1000003^(n-1-i) mod p;
+    each term is ≤ 0x10FFFF·(p-1) < 2^52, so a partial sum of 2048
+    terms plus a reduced accumulator is exact in int64, and a
+    trailing mod per chunk recovers the fold. Strings are grouped by
+    length so every group is a single NumPy matrix product — no
+    per-character Python. This is the hot-path form of the hash
+    (guide §4.2: batch-native compute inside the Python boundary)."""
     n = len(strs)
     out = np.zeros(n, dtype=np.int64)
     if n == 0:  # empty partition/batch: no length groups to walk
         return out, np.zeros(0, dtype=np.int64)
-    enc = [s.encode("utf-16-le") for s in strs]
-    lens = np.fromiter((len(e) >> 1 for e in enc), dtype=np.int64, count=n)
+    enc = [s.encode("utf-32-le") for s in strs]
+    lens = np.fromiter((len(e) >> 2 for e in enc), dtype=np.int64, count=n)
     order = np.argsort(lens, kind="stable")
     sl = lens[order]
     bounds = np.flatnonzero(np.diff(sl)) + 1
@@ -476,35 +475,33 @@ def poly31_hash_np(strs) -> tuple[np.ndarray, np.ndarray]:
             continue
         idx = order[s0:e0]
         blob = b"".join(enc[i] for i in idx)
-        mat = np.frombuffer(blob, dtype="<u2").astype(np.int64).reshape(len(idx), length)
+        mat = np.frombuffer(blob, dtype="<u4").astype(np.int64).reshape(len(idx), length)
         pw = poly31_pows(length)[:length][::-1]
-        if length <= 60000:  # terms < 2^47: exact int64 dot, one mod
-            h = (mat * pw).sum(axis=1) % _P31
-        else:  # chunked partial mods for pathological strings
-            acc = np.zeros(len(idx), dtype=np.int64)
-            for j0 in range(0, length, 60000):
-                acc = (acc + (mat[:, j0 : j0 + 60000] * pw[j0 : j0 + 60000]).sum(axis=1)) % _P31
-            h = acc
-        out[idx] = h
+        acc = np.zeros(len(idx), dtype=np.int64)
+        for j0 in range(0, length, _P31_CHUNK):
+            j1 = j0 + _P31_CHUNK
+            acc = (acc + (mat[:, j0:j1] * pw[j0:j1]).sum(axis=1)) % _P31
+        out[idx] = acc
     return out, lens
 
 
 def simhash_signatures(
     df: DataFrame, id_col: str, text_col: str = "text", hash: str = "xxhash64"
 ) -> DataFrame:
-    """(id, _sh): 64-bit SimHash, fully JVM-side.
+    """(id, _sh): 64-bit SimHash of each document's lower-cased
+    whitespace tokens (Java ``\\s`` split).
 
-    explode(lower-split tokens) -> token hash -> per-bit sums
-    sum(±1) as 64 map-side-combined aggregates -> sign bits packed
-    back into one long. No Python worker anywhere; the shuffle after
-    the partial agg is 64 longs per document.
-
-    hash='xxhash64' (default): bit i is bit i of xxhash64(token) —
-    the fastest whole-stage-codegen path for production.
+    hash='xxhash64' (default): bit i is bit i of xxhash64(token);
+    explode(tokens) -> per-bit sums sum(±1) as 64 map-side-combined
+    aggregates -> sign bits packed back into one long, fully
+    JVM-side whole-stage codegen. The shuffle after the partial agg
+    is 64 longs per document.
     hash='poly31': token hash is poly31_hash(token) and bit i is
-    g_i(h) mod 2 under the universal family simhash_bit_params() —
-    ~same aggregate shape, slightly slower per token (interpreted
-    char fold), but every step has an exact DuckDB twin, which puts
+    g_i(h) mod 2 under the universal family simhash_bit_params().
+    The signature is document-LOCAL (token hashes -> 64 integer bit
+    sums -> signs), so it is computed per doc inside one batch UDF
+    with ZERO exchanges (_simhash_poly31_arrow). Every step has an
+    exact DuckDB statement (``queries._simhash_sql``), which puts
     the full signature computation under the cross-engine hash gate.
     """
     # NOTE: documents with zero tokens get NO signature row (the
@@ -512,54 +509,20 @@ def simhash_signatures(
     # shared signature (the old UDF's 0) pairs EVERY empty doc with
     # every other — an O(E²) cluster at web scale. Route empty docs
     # through exact_dedup instead.
-    if hash not in ("xxhash64", "poly31", "poly31_expr"):
-        raise ValueError(
-            f"unknown simhash hash mode {hash!r} (xxhash64/poly31/poly31_expr)"
-        )
+    if hash not in ("xxhash64", "poly31"):
+        raise ValueError(f"unknown simhash hash mode {hash!r} (xxhash64/poly31)")
     if hash == "poly31":
-        # The signature is document-LOCAL (token hashes -> 64 integer
-        # bit sums -> signs), so the production poly31 path computes
-        # it per doc inside one batch UDF with ZERO exchanges — the
-        # explode + 64-aggregate groupBy below ('poly31_expr', kept
-        # as the oracle statement and pinned equal by
-        # tests/test_dedup.py) exists only to feed SQL aggregation
-        # semantics. Integer sums are order-free, so the two paths
-        # are exactly equal. Lowercasing stays in the JVM; the token
-        # split uses Java \s's exact class.
         return _simhash_poly31_arrow(df, id_col, text_col)
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.explode(
             F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), r"\s+"), lambda t: t != "")
         ).alias("_tok"),
-    )
-    if hash == "xxhash64":
-        toks = toks.withColumn("_h", F.xxhash64("_tok"))
-        bit_of = lambda i: F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1))  # noqa: E731
-    else:  # poly31_expr
-        a, b = simhash_bit_params()
-        p = (1 << 31) - 1
-
-        @pandas_udf(LongType())
-        def _p31bits(s: pd.Series) -> pd.Series:
-            # vectorized bit-identical poly31 (poly31_hash_np) + all 64
-            # universal-family parities g_i(h) mod 2 packed into one
-            # long — the interpreted char fold AND the 64 per-token
-            # modular bit expressions become one NumPy batch; the
-            # column-expression form stays the oracle STATEMENT.
-            # products < 2^62 (h, a_i < 2^31): exact in int64.
-            h, _ = poly31_hash_np(s.tolist())
-            av = np.asarray(a, dtype=np.int64)
-            bv = np.asarray(b, dtype=np.int64)
-            bits = ((h[:, None] * av[None, :] + bv[None, :]) % p) & 1
-            packed = (
-                bits.astype(np.uint64) << np.arange(64, dtype=np.uint64)
-            ).sum(axis=1, dtype=np.uint64)
-            return pd.Series(packed.view(np.int64))
-
-        toks = toks.withColumn("_h", _p31bits(F.col("_tok")))
-        bit_of = lambda i: F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1))  # noqa: E731
-    bit_sums = [F.sum(bit_of(i) * 2 - 1).alias(f"_b{i}") for i in range(64)]
+    ).withColumn("_h", F.xxhash64("_tok"))
+    bit_sums = [
+        F.sum(F.shiftright(F.col("_h"), i).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"_b{i}")
+        for i in range(64)
+    ]
     return _pack_bit_sums(toks, bit_sums)
 
 
@@ -600,13 +563,10 @@ def _simhash_poly31_arrow(df: DataFrame, id_col: str, text_col: str) -> DataFram
                 out[i] = int(packed[j])
         return pd.Series(out, dtype="object")
 
-    sel = df.select(
+    sel = spread(df.select(
         F.col(id_col).alias("_id"),
         F.lower(F.coalesce(F.col(text_col), F.lit(""))).alias("_lt"),
-    )
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    ))
     return (
         sel.select("_id", sig(F.col("_lt")).alias("_sh"))
         .where(F.col("_sh").isNotNull())

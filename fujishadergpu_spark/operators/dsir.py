@@ -40,13 +40,11 @@ Cross-engine determinism (the lmscore.py recipe): the per-bucket
 log-ratio is computed with ONE op order, per-doc sums are quantized
 to round(sum·10⁶) — float64 libm/accumulation-order noise is
 ~1e-15/term, ten orders under the quantum — and ranks tie-break on
-doc_id, so the DuckDB twin (queries.DOC_DSIR_SQL) hashes the full
+doc_id, so the DuckDB oracle (queries.DOC_DSIR_SQL) hashes the full
 weight relation and the selected set bit-for-bit.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -55,38 +53,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
 
-from .dedup import poly31_hash, poly31_hash_np, poly31_pows
+from ..functions.textfn import ws_split
+from ..session import spread
+from .dedup import poly31_hash_np, poly31_pows
 
 _P31 = (1 << 31) - 1
 DEFAULT_BUCKETS = 10007
 DEFAULT_SMOOTH_K = 0.5
 
-_WS_RE = re.compile(r"[ \n]+")  # doc_tokens_ws twin (split on space/newline)
-
 
 def gumbel_params(seed: int = 42) -> tuple[int, int]:
     """Deterministic (a, b) of the universal hash behind the Gumbel
-    noise — shared with the DuckDB oracle twin."""
+    noise — shared with the DuckDB oracle."""
     rng = np.random.RandomState(seed)
     return int(rng.randint(1, _P31)), int(rng.randint(0, _P31))
-
-
-def _grams(text_col):
-    """Unigrams + space-joined word bigrams (the DSIR feature set)."""
-    from .repetition import doc_tokens_ws
-
-    tk = doc_tokens_ws(text_col)
-    n = F.size(tk)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at(tk, i), F.element_at(tk, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.concat(tk, bigrams)
 
 
 def _gram_buckets_udf(buckets: int):
@@ -95,28 +75,26 @@ def _gram_buckets_udf(buckets: int):
     occurrence (unigrams then bigrams — downstream is aggregation, so
     order is irrelevant but kept anyway).
 
-    Bit-identical to the column-expression path: tokens are the
-    ``doc_tokens_ws`` split, unigram hashes come from the vectorized
-    poly31 twin (dedup.poly31_hash_np), and each bigram hash is
+    The grams and their buckets are those of the oracle
+    (``queries._DSIR_GRAMS_CTE`` / ``_DSIR_BUCKET``): tokens are the
+    ``textfn.ws_split`` split, unigram hashes come from the vectorized
+    poly31 fold (dedup.poly31_hash_np), and each bigram hash is
     DERIVED from its token hashes instead of re-walking the joined
     string — hash(a·" "·b) = (h_a·m^(Lb+1) + 32·m^Lb + h_b) mod p
-    with L in UTF-16 units (products < 2^62, exact in int64). This
-    removes the interpreted per-character fold (and the per-gram
-    concat_ws/element_at HOFs) from the hot path entirely; guide
-    §4.2's batch-native-compute rule. At 100-TB the shape is
-    unchanged — the UDF is a per-row projection, all shuffles still
-    carry (bucket|_id, count) longs only."""
+    with L in code points (products < 2^62, exact in int64). No
+    per-character fold and no per-gram string building runs in the
+    hot path; guide §4.2's batch-native-compute rule. At 100-TB the
+    shape is unchanged — the UDF is a per-row projection, all
+    shuffles still carry (bucket|_id, count) longs only."""
 
     @pandas_udf(ArrayType(LongType()))
     def gb(texts: pd.Series) -> pd.Series:
-        toks_per_doc = [
-            [w for w in _WS_RE.split(t) if w] if t else [] for t in texts
-        ]
+        toks_per_doc = [ws_split(t) for t in texts]
         counts = np.fromiter(
             (len(x) for x in toks_per_doc), dtype=np.int64, count=len(toks_per_doc)
         )
         flat = [w for toks in toks_per_doc for w in toks]
-        h, l16 = poly31_hash_np(flat)
+        h, lens = poly31_hash_np(flat)
         off = np.concatenate(([0], np.cumsum(counts)))
         # bigram pairs: positions (i, i+1) within one document; a pair
         # is invalid when it straddles an interior doc boundary
@@ -124,8 +102,8 @@ def _gram_buckets_udf(buckets: int):
         b = off[1:-1] - 1
         valid[b[(b >= 0) & (b < len(valid))]] = False
         idx = np.flatnonzero(valid)
-        pw = poly31_pows(int(l16.max()) + 2 if len(l16) else 2)
-        lb = l16[idx + 1]
+        pw = poly31_pows(int(lens.max()) + 2 if len(lens) else 2)
+        lb = lens[idx + 1]
         bh = (h[idx] * pw[lb + 1] + 32 * pw[lb] + h[idx + 1]) % _P31
         ub = h % buckets
         bb = bh % buckets
@@ -142,43 +120,23 @@ def _gram_buckets_udf(buckets: int):
 
 
 def _gram_occurrences(
-    df: DataFrame, text_col: str, buckets: int, impl: str, id_col: str | None = None
+    df: DataFrame, text_col: str, buckets: int, id_col: str | None = None
 ) -> DataFrame:
-    """One row per gram occurrence: (bucket) or (_id, bucket).
-
-    impl='arrow' (production default) computes buckets in the
-    vectorized UDF; impl='expr' is the original column-expression
-    plan whose text the DuckDB twin mirrors — kept as the
-    cross-engine oracle statement and pinned equal by
-    tests/test_dsir_arrow.py."""
-    if impl == "arrow":
-        gb = _gram_buckets_udf(buckets)
-        sel = df.select(*([id_col] if id_col else []), text_col)
-        par = df.sparkSession.sparkContext.defaultParallelism
-        if sel.rdd.getNumPartitions() < par:
-            sel = sel.repartition(par)  # one-split bench scan: spread the UDF
-        if id_col is None:
-            return sel.select(F.explode(gb(F.col(text_col))).alias("bucket"))
-        return sel.select(
-            F.col(id_col).alias("_id"), F.explode(gb(F.col(text_col))).alias("bucket")
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (arrow/expr)")
-    bucket = (poly31_hash(F.col("_g")) % F.lit(buckets)).alias("bucket")
+    """One row per gram occurrence: (bucket) or (_id, bucket)."""
+    gb = _gram_buckets_udf(buckets)
+    sel = spread(df.select(*([id_col] if id_col else []), text_col))
     if id_col is None:
-        return df.select(F.explode(_grams(F.col(text_col))).alias("_g")).select(bucket)
-    return df.select(
-        F.col(id_col).alias("_id"), F.explode(_grams(F.col(text_col))).alias("_g")
-    ).select("_id", bucket)
+        return sel.select(F.explode(gb(F.col(text_col))).alias("bucket"))
+    return sel.select(
+        F.col(id_col).alias("_id"), F.explode(gb(F.col(text_col))).alias("bucket")
+    )
 
 
-def _bucket_counts(
-    df: DataFrame, text_col: str, buckets: int, impl: str = "arrow"
-) -> DataFrame:
+def _bucket_counts(df: DataFrame, text_col: str, buckets: int) -> DataFrame:
     """(bucket, cnt) model relation — one map-side-partial aggregate,
     ≤ ``buckets`` rows out."""
     return (
-        _gram_occurrences(df, text_col, buckets, impl)
+        _gram_occurrences(df, text_col, buckets)
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
     )
@@ -191,23 +149,20 @@ def dsir_weights(
     text_col: str = "text",
     buckets: int = DEFAULT_BUCKETS,
     k: float = DEFAULT_SMOOTH_K,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document importance weights: (doc_id, n_grams, weight_q6)
     for every raw document, weight_q6 = round(1e6 · Σ log-ratio).
     Token-less documents weigh 0 (an empty product of likelihoods on
     both models). Total over the raw input.
 
-    ``impl``: 'arrow' (default) buckets grams in the vectorized UDF
-    (_gram_buckets_udf — no interpreted char fold anywhere);
-    'expr' is the original column-expression plan, the statement the
-    DuckDB twin mirrors. Both produce identical rows (pinned by
-    tests/test_dsir_arrow.py and the doc_dsir_weights hash oracle)."""
-    cnt_t = _bucket_counts(target, text_col, buckets, impl).withColumnRenamed("cnt", "ct")
-    cnt_r = _bucket_counts(raw, text_col, buckets, impl).withColumnRenamed("cnt", "cr")
+    Grams are bucketed in the vectorized UDF (_gram_buckets_udf);
+    the statement of the whole relation is ``queries.DOC_DSIR_SQL``,
+    the DuckDB oracle that pins it."""
+    cnt_t = _bucket_counts(target, text_col, buckets).withColumnRenamed("cnt", "ct")
+    cnt_r = _bucket_counts(raw, text_col, buckets).withColumnRenamed("cnt", "cr")
     tot_t = cnt_t.agg(F.sum("ct").alias("tt"))
     tot_r = cnt_r.agg(F.sum("cr").alias("tr"))
-    # ONE op order for the log-ratio, mirrored verbatim in the twin:
+    # ONE op order for the log-ratio, mirrored verbatim in the oracle:
     # ln((c + k) / (T + k*B)) per side, subtracted
     lr = (
         cnt_t.join(cnt_r, "bucket", "full_outer")
@@ -227,7 +182,7 @@ def dsir_weights(
             ).alias("lr"),
         )
     )
-    occ = _gram_occurrences(raw, text_col, buckets, impl, id_col=id_col)
+    occ = _gram_occurrences(raw, text_col, buckets, id_col=id_col)
     sums = (
         occ.join(F.broadcast(lr), "bucket")
         .groupBy("_id")

@@ -40,7 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .repetition import doc_lines, doc_tokens_ws
+from ..functions.textfn import ws_tokens
+from .repetition import doc_lines
 
 # the published stop-word list, §A1.1 rule 7
 GOPHER_STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
@@ -96,7 +97,7 @@ def gopher_quality_features(
     behaves as empty text.
     """
     text = F.coalesce(F.col(text_col), F.lit(""))
-    tk = doc_tokens_ws(text)
+    tk = ws_tokens(text)
     lines = doc_lines(text)
 
     n_words = F.size(tk).cast("bigint")

@@ -120,10 +120,9 @@ def incremental_dedup(
     (id, batch_dup, exact_seen, near_seen, keep) — total over the
     batch. ``near_seen`` is constant false when ``seen_sigs`` is None
     (exact-only mode). ``hash`` must match the snapshot's: xxhash64
-    (default — whole-stage codegen) or poly31 (since round 7 a
-    zero-exchange per-doc batch UDF, bit-equal to the 'poly31_expr'
-    statement whose DuckDB twin puts the gate under the cross-engine
-    oracle)."""
+    (default — whole-stage codegen) or poly31 (a zero-exchange
+    per-doc batch UDF whose DuckDB oracle puts the gate under the
+    cross-engine hash check)."""
     keys = _exact_keys(new_df, id_col, text_col, normalize)
     keeper = keys.groupBy("_h", "_len").agg(F.min("_id").alias("_keep_id"))
     batch = keys.join(keeper, ["_h", "_len"]).select(

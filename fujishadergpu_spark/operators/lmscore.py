@@ -49,12 +49,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
+
 
 def _tokens(text):
     # coalesce keeps the pipeline total over NULL text: split(NULL)
     # propagates NULL through every array fn, so size() would emit
     # NULL/-1 instead of the 0 an empty document must score
-    return F.filter(F.split(F.coalesce(text, F.lit("")), "[ \n]+"), lambda t: t != "")
+    return ws_tokens(F.coalesce(text, F.lit("")))
 
 
 def _bigrams(tk):

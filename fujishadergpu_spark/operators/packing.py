@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
+
 PACK_SCHEMA = (
     "doc_id long, pack_group int, seq_id long, seq_pos long, "
     "n_tokens long, overflow boolean"
@@ -138,7 +140,7 @@ def pack_sequences(
     if strategy not in _PACKERS:
         raise ValueError(f"unknown strategy {strategy!r} (nextfit/ffd)")
     packer = _PACKERS[strategy]
-    tk = F.filter(F.split(F.col(text_col), "[ \n]+"), lambda t: t != "")
+    tk = ws_tokens(F.col(text_col))
     keyed = docs.select(
         F.col(id_col).alias("doc_id"),
         F.pmod(F.col(id_col), F.lit(groups)).cast("int").alias("pack_group"),

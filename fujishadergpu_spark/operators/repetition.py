@@ -43,8 +43,12 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, DoubleType, LongType, StructField, StructType
+
+from ..functions.textfn import ws_split, ws_tokens
 
 # Gopher §A1.1 published thresholds
 MAX_DUP_LINE_FRAC = 0.30
@@ -59,11 +63,6 @@ def _empty_str_array():
 def doc_lines(text):
     """Non-empty ``\\n``-separated lines (JVM split + filter)."""
     return F.filter(F.split(text, "\n"), lambda l: l != "")
-
-
-def doc_tokens_ws(text):
-    """Whitespace tokens across line boundaries (space or newline)."""
-    return F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
 
 
 def repetition_features(
@@ -90,7 +89,7 @@ def repetition_features(
     base = df.select(
         did.alias("doc_id"),
         doc_lines(F.col(text_col)).alias("lines"),
-        doc_tokens_ws(F.col(text_col)).alias("tk"),
+        ws_tokens(F.col(text_col)).alias("tk"),
     )
 
     # duplicate-line stats: explode -> per-(doc, line) count -> per-doc
@@ -351,29 +350,48 @@ TOP_NGRAM_THRESHOLDS = {2: 0.20, 3: 0.18, 4: 0.16}
 DUP_NGRAM_THRESHOLDS = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 
 
-def _ngram_repetition_arrow(
+def ngram_repetition_features(
     df: DataFrame,
-    doc_id_col: str,
-    text_col: str,
-    top_thresholds: dict[int, float],
-    dup_thresholds: dict[int, float],
+    doc_id_col: str = "doc_id",
+    text_col: str = "text",
+    top_thresholds: dict[int, float] = TOP_NGRAM_THRESHOLDS,
+    dup_thresholds: dict[int, float] = DUP_NGRAM_THRESHOLDS,
 ) -> DataFrame:
-    """Per-document arrow path: the whole n-gram family is
-    document-LOCAL work, so one mapInPandas computes every feature
-    with ZERO exchanges — the expr plan's 9× gram explode, two
-    gram-string shuffles, pivot and three joins exist only to feed
-    SQL aggregation semantics. Row-identical to the expr plan (same
-    integer counts; fractions are the same single int/int IEEE
-    divisions; top-gram ties break on the gram string, where Python's
-    codepoint order equals Spark's UTF-8 binary order), pinned by
-    tests/test_ngram_arrow.py and the doc_ngram_repetition oracle."""
-    import re
+    """The full Gopher §A1.1 n-gram repetition family — completes
+    :func:`repetition_features` (which carries the line rules and the
+    top-bigram signal) with every published n-gram rule.
 
-    import pandas as pd
+    Per document: ``top{n}_char_frac`` for n = 2, 3, 4 (characters of
+    the most frequent word n-gram × its count, over total stream
+    chars) and ``dup{n}_char_frac`` for n = 5..10 (characters covered
+    by AT LEAST one occurrence of any n-gram appearing ≥ 2 times in
+    the document — the paper's "taking care not to count characters
+    multiple times", computed as an exact position-set union, not
+    DataTrove's greedy left-to-right approximation), plus ``keep`` at
+    the published thresholds. Characters are measured on the
+    whitespace-joined token stream: token lengths plus one separator
+    between adjacent tokens; a separator counts as covered when some
+    single occurrence covers both its neighbours. Total over the
+    input: token-less documents get zero fractions and keep = true.
+    The doc id keeps its input type.
 
+    Why union semantics are exactly SQL-stateable: each duplicated
+    n-gram occurrence at 1-based token position p covers tokens
+    [p, p+n-1] and separators [p, p+n-2]; DISTINCT over the exploded
+    cover positions is the union, and a max() over the per-position
+    separator flag preserves "covered with its right separator by
+    some occurrence". ``queries.DOC_NGRAM_REPETITION_SQL``, the DuckDB
+    oracle that pins this operator, states that construction; the
+    fractions are single int/int IEEE divisions and top-gram ties
+    break on the gram string (Python's codepoint order is the
+    engines' UTF-8 binary order), so rows hash bit-for-bit.
+
+    Scale shape (100 TB): the whole family is document-LOCAL work, so
+    one mapInPandas computes every feature with ZERO exchanges — no
+    gram explode, no gram-string shuffle, nothing on the driver.
+    """
     top_ns = sorted(top_thresholds)
     dup_ns = sorted(dup_thresholds)
-    ws = re.compile(r"[ \n]+")
 
     def run(it):
         for pdf in it:
@@ -384,7 +402,7 @@ def _ngram_repetition_arrow(
                 cols[f"dup{n}_char_frac"] = []
             cols["keep"] = []
             for did, text in zip(pdf[doc_id_col], pdf[text_col]):
-                tk = [t for t in ws.split(text) if t] if text else []
+                tk = ws_split(text)
                 sz = len(tk)
                 lens = [len(t) for t in tk]
                 total = sum(lens) + sz - 1 if sz else 0
@@ -429,186 +447,16 @@ def _ngram_repetition_arrow(
                 cols["keep"].append(keep)
             yield pd.DataFrame(cols)
 
-    schema = ", ".join(
-        ["doc_id long", "total_chars long"]
-        + [f"top{n}_char_frac double" for n in top_ns]
-        + [f"dup{n}_char_frac double" for n in dup_ns]
-        + ["keep boolean"]
+    schema = StructType(
+        [
+            StructField("doc_id", df.schema[doc_id_col].dataType),
+            StructField("total_chars", LongType()),
+        ]
+        + [StructField(f"top{n}_char_frac", DoubleType()) for n in top_ns]
+        + [StructField(f"dup{n}_char_frac", DoubleType()) for n in dup_ns]
+        + [StructField("keep", BooleanType())]
     )
     return df.select(F.col(doc_id_col), F.col(text_col)).mapInPandas(run, schema)
-
-
-def ngram_repetition_features(
-    df: DataFrame,
-    doc_id_col: str = "doc_id",
-    text_col: str = "text",
-    top_thresholds: dict[int, float] = TOP_NGRAM_THRESHOLDS,
-    dup_thresholds: dict[int, float] = DUP_NGRAM_THRESHOLDS,
-    impl: str = "arrow",
-) -> DataFrame:
-    """The full Gopher §A1.1 n-gram repetition family — completes
-    :func:`repetition_features` (which carries the line rules and the
-    top-bigram signal) with every published n-gram rule.
-
-    Per document: ``top{n}_char_frac`` for n = 2, 3, 4 (characters of
-    the most frequent word n-gram × its count, over total stream
-    chars) and ``dup{n}_char_frac`` for n = 5..10 (characters covered
-    by AT LEAST one occurrence of any n-gram appearing ≥ 2 times in
-    the document — the paper's "taking care not to count characters
-    multiple times", computed as an exact position-set union, not
-    DataTrove's greedy left-to-right approximation), plus ``keep`` at
-    the published thresholds. Characters are measured on the
-    whitespace-joined token stream: token lengths plus one separator
-    between adjacent tokens; a separator counts as covered when some
-    single occurrence covers both its neighbours. Total over the
-    input: token-less documents get zero fractions and keep = true.
-
-    Why union semantics are exactly SQL-stateable: each duplicated
-    n-gram occurrence at 1-based token position p covers tokens
-    [p, p+n-1] and separators [p, p+n-2]; DISTINCT over the exploded
-    cover positions is the union, and a max() over the per-position
-    separator flag preserves "covered with its right separator by
-    some occurrence". The DuckDB twin states the same construction,
-    so the fractions (single int/int divisions) hash bit-for-bit.
-
-    Scale shape (100 TB): one explode to (doc_id, n, pos, gram) rows
-    (≤ 9× the token count — the same work DataTrove's per-doc scan
-    does, here shuffle-parallel), every aggregate keyed by doc_id
-    (+ n, gram/pos) with map-side partial combine; duplicated-gram
-    positions ride a collect_list bounded by the per-document
-    occurrence count, so no corpus-wide key ever concentrates; no
-    self-join of the occurrence relation, nothing on the driver.
-
-    ``impl``: 'arrow' (default) computes the whole family per
-    document inside one mapInPandas — zero exchanges, no per-window
-    HOF string building (_ngram_repetition_arrow); 'expr' is the
-    original relational plan, the statement the DuckDB twin mirrors.
-    """
-    if impl == "arrow":
-        return _ngram_repetition_arrow(
-            df, doc_id_col, text_col, top_thresholds, dup_thresholds
-        )
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (arrow/expr)")
-    did = F.col(doc_id_col)
-    base = df.select(did.alias("doc_id"), doc_tokens_ws(F.col(text_col)).alias("tk"))
-    sz = F.size("tk")
-
-    toklen = base.select(
-        "doc_id", F.posexplode("tk").alias("pos0", "tok")
-    ).select("doc_id", (F.col("pos0") + 1).alias("cpos"), F.length("tok").alias("len"))
-
-    # total stream chars: Σ len(token) + (n_tok - 1) separators —
-    # an aggregate over the exploded token relation (a Catalyst
-    # higher-order fold over the array would run interpreted
-    # per-element); left-joined onto the id set so token-less
-    # documents keep a row with total 0
-    tot_agg = toklen.groupBy("doc_id").agg(
-        (F.sum("len") + F.count("*") - 1).cast("bigint").alias("total_chars")
-    )
-    totals = (
-        base.select("doc_id")
-        .join(tot_agg, "doc_id", "left")
-        .select("doc_id", F.coalesce("total_chars", F.lit(0)).alias("total_chars"))
-    )
-
-    def gram_structs(n: int):
-        return F.when(
-            sz >= n,
-            F.transform(
-                F.sequence(F.lit(1), sz - n + 1),
-                lambda i: F.struct(
-                    F.lit(n).alias("n"),
-                    i.alias("pos"),
-                    F.array_join(F.slice("tk", i, n), " ").alias("gram"),
-                ),
-            ),
-        ).otherwise(F.array().cast("array<struct<n:int,pos:int,gram:string>>"))
-
-    # ---- top n-gram (n = 2, 3, 4): count × gram chars -----------------
-    top_ns = sorted(top_thresholds)
-    top_occ = base.select(
-        "doc_id", F.explode(F.concat(*[gram_structs(n) for n in top_ns])).alias("g")
-    ).select("doc_id", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
-    top_chars = (
-        top_occ.groupBy("doc_id", "n", "gram")
-        .agg(F.count("*").alias("cnt"))
-        .groupBy("doc_id", "n")
-        .agg(F.max(F.struct(F.col("cnt"), F.col("gram"))).alias("tg"))
-        .select(
-            "doc_id",
-            "n",
-            (F.col("tg.cnt") * F.length("tg.gram")).cast("bigint").alias("chars"),
-        )
-        .groupBy("doc_id")
-        .pivot("n", top_ns)
-        .agg(F.first("chars"))
-    )
-
-    # ---- duplicated n-grams (n = 5..10): exact cover union ------------
-    dup_ns = sorted(dup_thresholds)
-    dup_occ = base.select(
-        "doc_id", F.explode(F.concat(*[gram_structs(n) for n in dup_ns])).alias("g")
-    ).select("doc_id", "g.n", "g.pos", "g.gram")
-    # positions of every occurrence of a duplicated gram, WITHOUT a
-    # corpus self-join: the per-gram aggregate carries its (bounded,
-    # per-document) position list
-    dup_pos = (
-        dup_occ.groupBy("doc_id", "n", "gram")
-        .agg(F.count("*").alias("cnt"), F.collect_list("pos").alias("ps"))
-        .where(F.col("cnt") >= 2)
-        .select("doc_id", "n", F.explode("ps").alias("pos"))
-    )
-    # exact union of covered token positions; a separator at cpos
-    # (between token cpos and cpos+1) is covered iff SOME occurrence
-    # covers both — i.e. the explode row with cpos <= pos+n-2
-    cover = (
-        dup_pos.select(
-            "doc_id",
-            "n",
-            "pos",
-            F.explode(F.sequence("pos", F.col("pos") + F.col("n") - 1)).alias("cpos"),
-        )
-        .select(
-            "doc_id",
-            "n",
-            "cpos",
-            (F.col("cpos") <= F.col("pos") + F.col("n") - 2).alias("sep"),
-        )
-        .groupBy("doc_id", "n", "cpos")
-        .agg(F.max("sep").alias("sep"))
-    )
-    dup_chars = (
-        cover.join(toklen, ["doc_id", "cpos"])
-        .groupBy("doc_id", "n")
-        .agg(
-            (F.sum("len") + F.sum(F.col("sep").cast("bigint"))).alias("chars")
-        )
-        .groupBy("doc_id")
-        .pivot("n", dup_ns)
-        .agg(F.first("chars"))
-    )
-
-    out = totals.join(top_chars, "doc_id", "left").join(dup_chars, "doc_id", "left")
-    fracs, gates = [], []
-    for n in top_ns:
-        fr = F.when(
-            F.col("total_chars") > 0,
-            F.coalesce(F.col(str(n)), F.lit(0)).cast("double") / F.col("total_chars"),
-        ).otherwise(F.lit(0.0))
-        fracs.append(fr.alias(f"top{n}_char_frac"))
-        gates.append(fr <= F.lit(top_thresholds[n]))
-    for n in dup_ns:
-        fr = F.when(
-            F.col("total_chars") > 0,
-            F.coalesce(F.col(str(n)), F.lit(0)).cast("double") / F.col("total_chars"),
-        ).otherwise(F.lit(0.0))
-        fracs.append(fr.alias(f"dup{n}_char_frac"))
-        gates.append(fr <= F.lit(dup_thresholds[n]))
-    keep = gates[0]
-    for g in gates[1:]:
-        keep = keep & g
-    return out.select("doc_id", F.col("total_chars").cast("bigint").alias("total_chars"), *fracs, keep.alias("keep"))
 
 
 def sentence_dedup(

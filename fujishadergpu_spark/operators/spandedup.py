@@ -17,82 +17,68 @@ decontaminate.py.
 
 Scale shape (100 TB corpus). Lee et al. build a monolithic suffix
 array; the distributed re-expression is window-hashing, and the plan
-is staged so the expensive token-level work touches only dirty docs:
+is staged so no token-level row is ever shuffled:
 
 1. one corpus scan emits (id, pos, gram) window occurrences — at
-   fixture scale the join key is the gram STRING so the DuckDB twin
-   is bit-exact; at production scale pre-hash to ``xxhash64(gram)``
-   (8-byte keys, the decontaminate.py contract) so every shuffled
-   row is (hash, id, pos) ≈ 24 B regardless of w;
+   fixture scale the join key is the gram STRING so the DuckDB oracle
+   (queries.SPAN_DEDUP_SQL) is bit-exact; at production scale
+   pre-hash to ``xxhash64(gram)`` (8-byte keys, the decontaminate.py
+   contract) so every shuffled row is (hash, id, pos) ≈ 24 B
+   regardless of w;
 2. duplicated grams = one groupBy(gram) count + filter — map-side
    partial, then ONE shuffle join back to occurrences. The dup set
    is corpus-sized (NOT broadcast — unlike the benchmark set in
    decontaminate.py, which is bounded);
-3. ONLY documents owning at least one duplicated window ("dirty",
-   typically a small fraction of the corpus) are token-exploded for
-   span removal; clean docs short-circuit to a whitespace re-join of
-   their own tokens with no shuffle. Covered positions are w small
-   ints per dup window — the explode factor applies to dup windows
-   only, never the whole corpus.
+3. the covered positions are w small ints per dup window — the
+   explode factor applies to dup windows only, never the whole
+   corpus — and reach each document as one bounded position list;
+   one per-document pass then drops the covered tokens (clean docs
+   short-circuit to a whitespace re-join of their own tokens).
 """
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-_WS_RE = re.compile(r"[ \n]+")
-
-
-def _py_tokens(text) -> list[str]:
-    return [t for t in _WS_RE.split(text) if t] if text else []
-
-
-def _tokens(text):
-    return F.filter(F.split(text, "[ \n]+"), lambda t: t != "")
+from ..functions.textfn import ws_split
 
 
 def window_occurrences(
-    docs: DataFrame, w: int, id_col: str, text_col: str, impl: str = "expr"
+    docs: DataFrame, w: int, id_col: str, text_col: str
 ) -> DataFrame:
     """(id, pos, gram) for every consecutive w-token window; pos is
-    1-based. Docs with fewer than w tokens emit nothing.
+    1-based and the gram is the window's tokens joined by ' '. Docs
+    with fewer than w tokens emit nothing. Built in a mapInPandas
+    (plain Python slicing, no per-window higher-order functions); the
+    id keeps its input type."""
 
-    impl='arrow' builds the windows in a mapInPandas (plain Python
-    slicing — the expr plan's per-window array_join(slice(tk)) HOFs
-    are interpreted per element); identical rows, the gram string
-    join is ' ' in both."""
-    if impl == "arrow":
+    def run(it):
+        for pdf in it:
+            ids, poss, grams = [], [], []
+            for did, text in zip(pdf[id_col], pdf[text_col]):
+                tk = ws_split(text)
+                for i in range(len(tk) - w + 1):
+                    ids.append(did)
+                    poss.append(i + 1)
+                    grams.append(" ".join(tk[i : i + w]))
+            yield pd.DataFrame({id_col: ids, "pos": poss, "gram": grams})
 
-        def run(it):
-            for pdf in it:
-                ids, poss, grams = [], [], []
-                for did, text in zip(pdf[id_col], pdf[text_col]):
-                    tk = _py_tokens(text)
-                    for i in range(len(tk) - w + 1):
-                        ids.append(did)
-                        poss.append(i + 1)
-                        grams.append(" ".join(tk[i : i + w]))
-                yield pd.DataFrame({id_col: ids, "pos": poss, "gram": grams})
-
-        return docs.select(id_col, text_col).mapInPandas(
-            run, f"{id_col} long, pos int, gram string"
-        )
-    tk = _tokens(F.col(text_col))
-    wins = F.transform(
-        F.sequence(F.lit(1), F.size(tk) - w + 1),
-        lambda i: F.struct(
-            i.alias("pos"), F.array_join(F.slice(tk, i, w), " ").alias("gram")
-        ),
-    )
-    return (
-        docs.where(F.size(tk) >= w)
-        .select(F.col(id_col), F.explode(wins).alias("_w"))
-        .select(id_col, F.col("_w.pos").alias("pos"), F.col("_w.gram").alias("gram"))
-    )
+    schema = StructType([
+        StructField(id_col, docs.schema[id_col].dataType),
+        StructField("pos", IntegerType()),
+        StructField("gram", StringType()),
+    ])
+    return docs.select(id_col, text_col).mapInPandas(run, schema)
 
 
 def substring_dedup(
@@ -101,7 +87,6 @@ def substring_dedup(
     min_count: int = 2,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document duplicated-span report + span-removed text.
 
@@ -112,111 +97,22 @@ def substring_dedup(
     any duplicated window covers, covered/n_tokens, and the text with
     every covered token removed (surviving tokens re-joined with
     single spaces; whitespace is normalized as a side effect, the
-    doc_token_counts tokenization contract).
+    doc_token_counts tokenization contract). A NULL text has NULL
+    n_tokens and an empty text_clean. The id keeps its input type.
 
-    ``impl``: 'arrow' (default) extracts windows and rebuilds cleaned
-    text in Python batches — the cross-document dup detection (the
-    only part that NEEDS a shuffle) stays relational and unchanged;
-    'expr' is the original all-relational plan, the statement the
-    DuckDB twin mirrors. Row-identical (tests/test_spandedup.py).
+    Stages: Python window extraction, relational corpus-wide dup
+    detection (the only part that NEEDS a shuffle: groupBy(gram)
+    count, join back, covered-position union), then one mapInPandas
+    over (doc, covered-position list) that rebuilds the cleaned text —
+    per-doc work, the list bounded by document length. The statement
+    of the same relation is ``queries.SPAN_DEDUP_SQL``, the DuckDB
+    oracle that pins this operator.
     """
-    if impl == "arrow":
-        return _substring_dedup_arrow(docs, w, min_count, id_col, text_col)
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r} (arrow/expr)")
-    tk = _tokens(F.col(text_col))
-    base = docs.select(
-        F.col(id_col),
-        tk.alias("_tk"),
-        F.size(tk).cast("bigint").alias("n_tokens"),
-        F.greatest(F.size(tk) - w + 1, F.lit(0)).cast("bigint").alias("n_windows"),
-    )
-    occ = window_occurrences(docs, w, id_col, text_col)
-    dup_grams = (
-        occ.groupBy("gram")
-        .agg(F.count("*").alias("_cnt"))
-        .where(F.col("_cnt") >= min_count)
-        .select("gram")
-    )
-    dup_occ = occ.join(dup_grams, "gram").select(id_col, "pos")
-    dup_stats = dup_occ.groupBy(id_col).agg(F.count("*").alias("n_dup_windows"))
-    covered = (
-        dup_occ.select(
-            id_col, F.explode(F.sequence(F.col("pos"), F.col("pos") + w - 1)).alias("_p")
-        )
-        .distinct()
-    )
-    cov_stats = covered.groupBy(id_col).agg(F.count("*").alias("covered_tokens"))
-    # token-level reconstruction over DIRTY docs only (module contract #3)
-    dirty = base.join(dup_stats.select(id_col), id_col, "semi")
-    toks = dirty.select(
-        id_col,
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("_tk")),
-                lambda i: F.struct(i.alias("_p"), F.element_at("_tk", i).alias("_tok")),
-            )
-        ).alias("_t"),
-    ).select(id_col, F.col("_t._p").alias("_p"), F.col("_t._tok").alias("_tok"))
-    rebuilt = (
-        toks.join(covered, [id_col, "_p"], "left_anti")
-        .groupBy(id_col)
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_p", "_tok"))),
-                    lambda s: s["_tok"],
-                ),
-                " ",
-            ).alias("_clean")
-        )
-    )
-    nd = F.coalesce(F.col("n_dup_windows"), F.lit(0)).cast("bigint")
-    ct = F.coalesce(F.col("covered_tokens"), F.lit(0)).cast("bigint")
-    return (
-        base.join(dup_stats, id_col, "left")
-        .join(cov_stats, id_col, "left")
-        .join(rebuilt, id_col, "left")
-        .select(
-            F.col(id_col),
-            "n_tokens",
-            "n_windows",
-            nd.alias("n_dup_windows"),
-            ct.alias("covered_tokens"),
-            F.when(
-                F.col("n_tokens") > 0, ct.cast("double") / F.col("n_tokens").cast("double")
-            )
-            .otherwise(F.lit(0.0))
-            .alias("dup_frac"),
-            F.when(nd == 0, F.array_join("_tk", " "))
-            .otherwise(F.coalesce(F.col("_clean"), F.lit("")))
-            .alias("text_clean"),
-        )
-    )
-
-
-def _substring_dedup_arrow(
-    docs: DataFrame, w: int, min_count: int, id_col: str, text_col: str
-) -> DataFrame:
-    """Arrow-staged ExactSubstr: Python window extraction, relational
-    corpus-wide dup detection, Python per-doc finalize.
-
-    Stage shape vs the expr plan: the (id, pos, gram) occurrence
-    relation, the groupBy(gram) dup filter and the covered-position
-    union are IDENTICAL relations — only their production moved out
-    of interpreted per-window HOFs. The finalize stage replaces the
-    expr plan's token explode + anti-join + collect_list/array_sort
-    rebuild (three exchanges over token rows) with one mapInPandas
-    over (doc, covered-position list): per-doc work, list bounded by
-    document length. Cleaned text is the same ' '-join of surviving
-    tokens in position order."""
     # one window-extraction scan total (the ngram_jaccard_pairs
     # localCheckpoint precedent): occ feeds the dup count AND the
     # join-back; without the checkpoint each branch re-runs the
     # extraction UDF over the corpus
-    occ = window_occurrences(docs, w, id_col, text_col, impl="arrow").localCheckpoint(
-        eager=False
-    )
+    occ = window_occurrences(docs, w, id_col, text_col).localCheckpoint(eager=False)
     dup_grams = (
         occ.groupBy("gram")
         .agg(F.count("*").alias("_cnt"))
@@ -252,18 +148,7 @@ def _substring_dedup_arrow(
             ):
                 ndi = 0 if pd.isna(nd) else int(nd)
                 cti = 0 if pd.isna(ct) else int(ct)
-                if text is None:
-                    # expr twin: size(NULL)/array_join(NULL) stay NULL,
-                    # greatest(NULL, 0) is 0
-                    out[id_col].append(did)
-                    out["n_tokens"].append(None)
-                    out["n_windows"].append(0)
-                    out["n_dup_windows"].append(ndi)
-                    out["covered_tokens"].append(cti)
-                    out["dup_frac"].append(0.0)
-                    out["text_clean"].append(None)
-                    continue
-                tk = _py_tokens(text)
+                tk = ws_split(text)
                 n = len(tk)
                 if ndi == 0:
                     clean = " ".join(tk)
@@ -271,7 +156,8 @@ def _substring_dedup_arrow(
                     covset = set(int(p) for p in ps)
                     clean = " ".join(t for i, t in enumerate(tk, 1) if i not in covset)
                 out[id_col].append(did)
-                out["n_tokens"].append(n)
+                # the oracle's len(NULL) is NULL; greatest(NULL, 0) is 0
+                out["n_tokens"].append(None if text is None else n)
                 out["n_windows"].append(max(n - w + 1, 0))
                 out["n_dup_windows"].append(ndi)
                 out["covered_tokens"].append(cti)
@@ -279,8 +165,10 @@ def _substring_dedup_arrow(
                 out["text_clean"].append(clean)
             yield pd.DataFrame(out)
 
-    schema = (
-        f"{id_col} long, n_tokens long, n_windows long, n_dup_windows long, "
-        "covered_tokens long, dup_frac double, text_clean string"
+    schema = StructType(
+        [StructField(id_col, docs.schema[id_col].dataType)]
+        + [StructField(c, LongType()) for c in
+           ("n_tokens", "n_windows", "n_dup_windows", "covered_tokens")]
+        + [StructField("dup_frac", DoubleType()), StructField("text_clean", StringType())]
     )
     return joined.mapInPandas(finalize, schema)

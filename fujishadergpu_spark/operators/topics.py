@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.textfn import ws_tokens
+
 # the fixture-register default lexicon (the corpus is Spark-jargon
 # text); callers pass their own curated lexicon in production
 DEFAULT_LEXICON: dict[str, tuple[str, ...]] = {
@@ -67,8 +69,7 @@ def topic_assign(
     toks = docs.select(
         F.col(id_col).alias("_id"),
         F.explode(
-            F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \n]+"),
-                     lambda t: t != "")
+            ws_tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).alias("word"),
     )
     hits = (
@@ -82,8 +83,7 @@ def topic_assign(
     counts = docs.select(
         F.col(id_col).alias("_id"),
         F.size(
-            F.filter(F.split(F.lower(F.coalesce(F.col(text_col), F.lit(""))), "[ \n]+"),
-                     lambda t: t != "")
+            ws_tokens(F.lower(F.coalesce(F.col(text_col), F.lit(""))))
         ).cast("bigint").alias("n_tokens"),
     )
     return counts.join(best, "_id", "left").select(

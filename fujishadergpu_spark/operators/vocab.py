@@ -195,12 +195,10 @@ def ngram_topk(
     # per WINDOW (the inlined token split re-ran per element); Python
     # slicing over the whitespace split builds the identical strings
     # once per document. Lowercasing stays F.lower (JVM semantics).
-    import re
-
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, StringType
 
-    ws = re.compile(r"[ \n]+")
+    from ..functions.textfn import ws_split
 
     @pandas_udf(ArrayType(StringType()))
     def _grams(texts):
@@ -208,7 +206,7 @@ def ngram_topk(
 
         out = []
         for t in texts:
-            tk = [x for x in ws.split(t) if x] if t else []
+            tk = ws_split(t)
             out.append(
                 [" ".join(tk[i : i + n]) for i in range(len(tk) - n + 1)]
             )

@@ -45,6 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
+from ..session import spread
 from .dedup import poly31_hash, poly31_hash_np  # noqa: F401  (poly31_hash: oracle statement ref)
 
 _POS_M = 1 << 32  # position packing modulus (max document length)
@@ -243,10 +244,7 @@ def _winnow_fingerprints_arrow(
             out.append(_winnow_packed(codes, k, w).tolist())
         return pd.Series(out)
 
-    src = df.select(F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("_txt"))
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)  # one-split bench scans serialize the UDF
+    src = spread(df.select(F.col(doc_id_col).alias("doc_id"), F.col(text_col).alias("_txt")))
     sel = src.select(
         "doc_id", F.explode(fps(F.col("_txt"))).alias("_fp")
     )

@@ -49,6 +49,7 @@ from .operators.pagerank import pagerank
 from .operators.pip_join import PipIndex, pip_join
 from .operators.tile_kernels import tile_kernel_stats
 from .sources.multimodal import extract_features, synthetic_media
+from .session import spread
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -3060,13 +3061,10 @@ def _synth_text_map(d: DataFrame, fn) -> DataFrame:
 
         return pd.Series([fn(i, t) for i, t in zip(ids, texts)])
 
-    sel = d.select("doc_id", "text")
     # the bench corpus parquet is one split; spread the synthesis UDF
     # and the per-doc arrow consumers over the cluster (scale-adaptive
     # — a real corpus already scans as many splits)
-    par = d.sparkSession.sparkContext.defaultParallelism
-    if sel.rdd.getNumPartitions() < par:
-        sel = sel.repartition(par)
+    sel = spread(d.select("doc_id", "text"))
     return sel.select("doc_id", synth("doc_id", "text").alias("text"))
 
 
@@ -3502,7 +3500,7 @@ def _span_planted_text(doc_id: int, text: str | None) -> str | None:
     if doc_id % 7 == 3:
         out += " " + _SPAN_BOILER
     if doc_id % 11 == 4:
-        tk = [w for w in _re.split("[ \n]+", t) if w]
+        tk = textfn.ws_split(t)
         out += " " + " ".join(tk[:10])
     return out
 

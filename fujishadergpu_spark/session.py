@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Tuned for the sandbox (local[32], 128 GiB). On a real cluster these
 # are spark-submit --conf overrides; nothing in the engine depends on
@@ -134,6 +134,15 @@ def get_spark(
     for k, v in _session_confs(extra_confs).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """``df`` repartitioned to the session's ``defaultParallelism`` when
+    it has fewer partitions, else ``df`` unchanged. A one-split scan
+    (the bench corpus parquet) would otherwise run a per-row Arrow UDF
+    in one task; a real corpus already scans as many splits."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str):

@@ -79,8 +79,10 @@ def test_k_validation(spark):
 
 
 def test_candidate_scores_arrow_equals_expr(spark):
-    # deterministic pseudo-random embeddings, odd dims, negatives —
-    # the arrow path must reproduce the expr fold bit-for-bit
+    # deterministic pseudo-random embeddings, odd dims, negatives: every
+    # pair is scored once, a self pair is exactly 1e12 and the scores
+    # are symmetric (the oracle comparison over these rows is
+    # test_demoted_oracles::test_oracle_matches_on_edge_fixture)
     import numpy as np
 
     rng = np.random.RandomState(7)
@@ -90,25 +92,34 @@ def test_candidate_scores_arrow_equals_expr(spark):
     df = _emb_df(spark, rows)
     src = df.filter("vec_id % 2 = 0")
     tgt = df.filter("vec_id % 2 = 1")
-    a = candidate_scores(src, tgt, impl="expr").orderBy("src_id", "tgt_id").collect()
-    b = candidate_scores(src, tgt, impl="arrow").orderBy("src_id", "tgt_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert len(a) == 20 * 20
+    b = candidate_scores(src, tgt).orderBy("src_id", "tgt_id").collect()
+    assert len(b) == 20 * 20
+    assert {(r.src_id % 2, r.tgt_id % 2) for r in b} == {(0, 1)}
+    q = {(r.src_id, r.tgt_id): r.qcos for r in candidate_scores(df, df).collect()}
+    assert all(q[(i, i)] == 10**12 for i in range(40))
+    assert all(q[(i, j)] == q[(j, i)] for i in range(40) for j in range(i))
 
 
-@pytest.mark.parametrize("impl", ["arrow", "expr"])
-def test_candidate_scores_empty_tgt_is_empty(spark, impl):
+def test_candidate_scores_empty_tgt_is_empty(spark):
     src = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
-    cand = candidate_scores(src, _emb_df(spark, []), impl=impl)
+    cand = candidate_scores(src, _emb_df(spark, []))
     assert cand.columns == ["src_id", "tgt_id", "qcos"]
     assert cand.count() == 0
     assert mine_bitext(cand, k=2, margin_threshold=0.0).count() == 0
 
 
-def test_candidate_scores_impl_validation(spark):
-    df = _emb_df(spark, [(0, _unit(1.0, 0.0)), (1, _unit(0.0, 1.0))])
-    with pytest.raises(ValueError, match="unknown impl"):
-        candidate_scores(df, df, impl="bogus")
+def test_candidate_scores_keeps_integral_ids_refuses_others(spark):
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 1.0])], "vec_id int, embedding array<float>"
+    )
+    cand = candidate_scores(df, df)
+    assert [f.dataType.simpleString() for f in cand.schema.fields] == ["int", "int", "bigint"]
+    assert sorted(tuple(r) for r in cand.collect()) == [
+        (1, 1, 10**12), (1, 2, 707106781187), (2, 1, 707106781187), (2, 2, 10**12)
+    ]
+    bad = spark.createDataFrame([("u1", [1.0])], "vec_id string, embedding array<float>")
+    with pytest.raises(ValueError, match="vec_id must be an integral column"):
+        candidate_scores(bad, df)
 
 
 def test_round_half_up_matches_decimal_half_up_near_half():

@@ -87,6 +87,9 @@ def test_unmatched_query_absent(spark):
 
 
 def test_bm25_arrow_equals_expr(spark):
+    """Empty, NULL and newline-separated docs on the Arrow postings
+    path (the oracle comparison over the same edge rows is
+    test_demoted_oracles::test_oracle_matches_on_edge_fixture)."""
     docs = spark.createDataFrame(
         [
             (1, "the quick brown fox the quick"),
@@ -104,17 +107,7 @@ def test_bm25_arrow_equals_expr(spark):
     )
     from fujishadergpu_spark.operators.bm25 import bm25_topk
 
-    a = bm25_topk(docs, qs, k=3, impl="expr").orderBy("query_id", "rank").collect()
-    b = bm25_topk(docs, qs, k=3, impl="arrow").orderBy("query_id", "rank").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    b = bm25_topk(docs, qs, k=3).orderBy("query_id", "rank").collect()
     assert len(b) > 0
-
-
-def test_bm25_impl_validation(spark):
-    import pytest as _pytest
-
-    from fujishadergpu_spark.operators.bm25 import bm25_topk
-
-    docs = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with _pytest.raises(ValueError, match="unknown impl"):
-        bm25_topk(docs, docs.selectExpr("doc_id as query_id", "text"), impl="bogus")
+    assert {r.query_id for r in b} == {10, 11}
+    assert {r.doc_id for r in b if r.query_id == 11} == {2, 5, 6}

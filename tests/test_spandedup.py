@@ -3,7 +3,7 @@ micro-corpus with known duplicated spans, checked against the exact
 Lee-et-al. semantics (corpus-wide window count >= 2 → covered tokens
 removed)."""
 
-from pyspark.sql import functions as F
+import pytest
 
 from fujishadergpu_spark.operators.spandedup import substring_dedup, window_occurrences
 
@@ -90,25 +90,19 @@ def test_window_occurrences_positions(spark):
 
 
 def test_clean_doc_short_circuit_no_token_explode(spark):
-    """Scale contract #3 (expr plan): clean docs must not enter the
-    token-level reconstruction join — their text_clean comes straight
-    from the whitespace re-join of their own token array. (The arrow
-    default has no token-level join at all; its parity is pinned by
-    test_arrow_equals_expr below.)"""
-    df = substring_dedup(
-        _docs(spark, [(1, "a b c d e f"), (2, "g h i j k l")]), w=W, impl="expr"
-    )
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    # the rebuilt branch joins only the semi-joined dirty side; with no
-    # dup grams the final text_clean for every row comes from the
-    # n_dup_windows == 0 arm
+    """Scale contract #3: with no duplicated window a doc's text_clean
+    is the whitespace re-join of its own tokens."""
+    df = substring_dedup(_docs(spark, [(1, "a b c d e f"), (2, "g h i j k l")]), w=W)
     out = _by_id(df)
     assert out[1].text_clean == "a b c d e f"
     assert out[2].text_clean == "g h i j k l"
-    assert "LeftSemi" in plan
 
 
 def test_arrow_equals_expr(spark):
+    """Empty, NULL, short, newline-separated and self-repeating docs.
+    A NULL text keeps a NULL n_tokens and cleans to '' (the oracle's
+    coalesce); the oracle comparison over the same kinds of rows is
+    test_demoted_oracles::test_oracle_matches_on_edge_fixture."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog again and again"),
         (2, "the quick brown fox jumps over the lazy dog another tail here"),
@@ -118,18 +112,48 @@ def test_arrow_equals_expr(spark):
         (6, "x y z x y z x y z x y z"),  # same-doc repetition
         (7, "a\nb c\nd e f g h i j"),     # newline separators
     ]
-    d = _docs(spark, rows)
-    a = substring_dedup(d, w=W, impl="expr").orderBy("doc_id").collect()
-    b = substring_dedup(d, w=W, impl="arrow").orderBy("doc_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    out = _by_id(substring_dedup(_docs(spark, rows), w=W))
+    assert set(out) == {1, 2, 3, 4, 5, 6, 7}
+    assert out[1].text_clean == "again and again"
+    assert out[2].text_clean == "another tail here"
+    assert (out[3].n_windows, out[3].text_clean) == (0, "short doc")
+    assert (out[4].n_tokens, out[4].text_clean) == (0, "")
+    assert (out[5].n_tokens, out[5].n_windows, out[5].text_clean) == (None, 0, "")
+    assert (out[6].covered_tokens, out[6].text_clean) == (12, "")
+    assert out[7].text_clean == "a b c d e f g h i j"
 
 
 def test_window_occurrences_arrow_equals_expr(spark):
     d = _docs(spark, [(1, "t1 t2 t3 t4 t5"), (2, "a b"), (3, None)])
-    a = window_occurrences(d, W, "doc_id", "text").orderBy("doc_id", "pos").collect()
-    b = window_occurrences(d, W, "doc_id", "text", impl="arrow").orderBy(
-        "doc_id", "pos"
-    ).collect()
-    assert [(r.doc_id, r.pos, r.gram) for r in a] == [
-        (r.doc_id, r.pos, r.gram) for r in b
+    rows = window_occurrences(d, W, "doc_id", "text").orderBy("doc_id", "pos").collect()
+    assert [(r.doc_id, r.pos, r.gram) for r in rows] == [
+        (1, 1, "t1 t2 t3"), (1, 2, "t2 t3 t4"), (1, 3, "t3 t4 t5")
     ]
+
+
+@pytest.mark.parametrize(
+    "id_type,ids", [("int", [7, 8, 9]), ("string", ["u7", "u8", "u9"])], ids=["int", "string"]
+)
+def test_text_operators_keep_id_type(spark, id_type, ids):
+    """bm25_topk, substring_dedup and ngram_repetition_features build
+    their rows in Python: the id column must come back in its own type
+    (not widened to bigint, and string ids must not fail)."""
+    from fujishadergpu_spark.operators.bm25 import bm25_topk
+    from fujishadergpu_spark.operators.repetition import ngram_repetition_features
+
+    d = spark.createDataFrame(
+        list(zip(ids, ["a b c d a b c d", "x y a b c d", None])),
+        f"doc_id {id_type}, text string",
+    )
+    q = spark.createDataFrame([(ids[0], "a b")], f"query_id {id_type}, text string")
+    outs = {
+        "bm25": bm25_topk(d, q, k=3),
+        "span": substring_dedup(d, w=W),
+        "ngram": ngram_repetition_features(d),
+    }
+    for name, out in outs.items():
+        assert out.schema["doc_id"].dataType.simpleString() == id_type, name
+    assert [r.doc_id for r in outs["bm25"].orderBy("rank").collect()] == ids[:2]
+    span = {r.doc_id: r for r in outs["span"].collect()}
+    assert span[ids[1]].text_clean == "x y" and span[ids[2]].text_clean == ""
+    assert {r.doc_id for r in outs["ngram"].collect()} == set(ids)

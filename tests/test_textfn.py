@@ -16,6 +16,15 @@ def test_token_count(spark):
     assert got == [3, 0, 0, 1]
 
 
+def test_ws_split_matches_ws_tokens(spark):
+    texts = ["a b  c", "", "  ", "one", "a\nb c\n\nd", "\n", "tab\tstays one", None]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, text string")
+    got = [r[0] for r in df.orderBy("i").select(textfn.ws_tokens(F.col("text"))).collect()]
+    assert got[:-1] == [textfn.ws_split(t) for t in texts[:-1]]
+    assert got[4] == ["a", "b", "c", "d"] and got[6] == ["tab\tstays", "one"]
+    assert got[-1] is None and textfn.ws_split(None) == []
+
+
 def test_quality_features(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     q = textfn.quality_features(docs).select("doc_id", "n_chars", "n_chars_f", "n_tokens", "quality_score")
