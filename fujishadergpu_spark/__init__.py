@@ -8,8 +8,8 @@ lakehouse scale on the PySpark DataFrame API:
 - geoparse Common-Crawl-style pages (url, warc_ts, html, text, lang)
   into points (functions.geoparse),
 - hierarchical cell indexing in the spirit of H3/S2
-  (functions.cells: int64 quadtree cells with parent / children /
-  grid_disk, both as JVM column expressions and Arrow pandas UDFs),
+  (functions.cells: int64 quadtree cells with parent / grid_disk,
+  both as JVM column expressions and Arrow pandas UDFs),
 - cell-bucketed point-in-polygon joins with skew salting
   (operators.pip_join),
 - kNN via ring expansion over cell neighbors (operators.knn),

@@ -255,8 +255,9 @@ def run_render(
                         fill_surface=surface, metric_scale=metric_scale,
                         **kernel_params)
 
-    # A9/A11 stats pre-pass: robust [p1, p99] broadcast into the encode
-    # UDF. The kernel output is persisted so the pre-pass action and
+    # A9/A10/A11 stats pre-pass (norm_stats.render_stretch): robust
+    # [p1, p99], or topousm's symmetric ±|p99|, broadcast into the
+    # encode UDF. The kernel output is persisted so the pre-pass action and
     # the encode write run the expensive rasterize+kernel ONCE (the
     # A14 persist decision; without it every render computed the
     # kernel twice — the tile-hash filter sits above the grouped map
@@ -316,28 +317,10 @@ def run_render(
         srow = _read_stats(lp)
     if srow is not None:
         lo, scale = float(srow["lo"]), float(srow["scale"])
-    elif algorithm == "topousm":
-        # symmetric ±|p99| stretch — the reference applies this to
-        # topousm output unconditionally (zero relief maps to mid-gray
-        # DN, ridges/valleys symmetric around it)
-        from .operators.multiscale import global_abs_p99
-
-        p99 = global_abs_p99(t, "result")
-        p99 = float(p99) if p99 is not None and p99 > 1e-12 else 1.0
-        lo, scale = -p99, 2.0 * p99
-        spark.createDataFrame([(lo, scale)], "lo double, scale double").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(stats_path)
     else:
-        sampled = t.filter(F.pmod(F.xxhash64("x", "y"), F.lit(4)) == 0)
-        row = (
-            sampled.select(F.explode("result").alias("v"))
-            .filter(~F.isnan("v"))
-            .agg(F.percentile_approx("v", [0.01, 0.99], 10000).alias("p"))
-            .first()
-        )
-        lo, hi = (0.0, 1.0) if row is None or row["p"] is None else (float(row["p"][0]), float(row["p"][1]))
-        scale = hi - lo if hi - lo > 1e-12 else 1.0
+        from .operators.norm_stats import render_stretch
+
+        lo, scale = render_stretch(t, symmetric=algorithm == "topousm")
         spark.createDataFrame([(lo, scale)], "lo double, scale double").coalesce(1).write.mode(
             "overwrite"
         ).parquet(stats_path)

@@ -9,7 +9,7 @@ The engine's discrete global grid: a lon/lat quadtree where resolution
 
 This mirrors the reference's tile id ``(ty, tx)`` + window model
 (reference core/tile_processor.py:1613-1626) and plays the role H3/S2
-plays in BASELINE.json: parent/children (LOD pyramid, reference
+plays in BASELINE.json: parents (LOD pyramid, reference
 overview pyramid algorithms/_nan_utils.py:836-871), grid_disk(k) ring
 neighborhoods (halo exchange / kNN ring expansion, reference
 map_overlap depth), all computable in closed form.
@@ -21,8 +21,8 @@ backend parity the same way, tests/test_registry_cli_sync.py:10-30):
    whole-stage codegen, and is mirrored 1:1 in DuckDB oracle SQL.
 2. **Arrow pandas UDFs** — the BASELINE.json-mandated "batched cell
    IDs via Arrow-vectorized pandas UDFs" path; NumPy, no per-row
-   Python. Drop-in slot for a real `h3` wheel when available
-   (import-try below keeps the API stable).
+   Python. Drop-in slot for a real `h3` wheel behind the same
+   signature.
 
 Longitude wraps (x mod 2^res); latitude clamps to the valid y range.
 """
@@ -36,17 +36,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
-try:  # pragma: no cover - h3 wheel not present in this sandbox
-    import h3 as _h3  # noqa: F401
-
-    HAS_H3 = True
-except ImportError:
-    HAS_H3 = False
-
 RES_SHIFT = 58
 X_SHIFT = 29
 XY_MASK = (1 << 29) - 1
-MAX_RES = 28
 
 
 # --------------------------------------------------------------------
@@ -75,10 +67,6 @@ def np_cell_decode(cell: np.ndarray):
     x = (cell >> X_SHIFT) & XY_MASK
     y = cell & XY_MASK
     return res, x, y
-
-
-def encode_xy(res: int, x, y):
-    return (np.int64(res) << RES_SHIFT) | (np.asarray(x, dtype=np.int64) << X_SHIFT) | np.asarray(y, dtype=np.int64)
 
 
 def np_parent(cell: np.ndarray, steps: int = 1) -> np.ndarray:
@@ -166,26 +154,6 @@ def cell_parent(cell: Column, steps: int = 1) -> Column:
     )
 
 
-def cell_children(cell: Column) -> Column:
-    """Array of the 4 child cells one res finer (LOD drill-down)."""
-    r1 = cell_res(cell) + 1
-    x2 = F.shiftleft(cell_x(cell), 1)
-    y2 = F.shiftleft(cell_y(cell), 1)
-    kids = []
-    for dx in (0, 1):
-        for dy in (0, 1):
-            kids.append(F.shiftleft(r1, RES_SHIFT) + F.shiftleft(x2 + dx, X_SHIFT) + (y2 + dy))
-    return F.array(*kids)
-
-
-def cell_center(cell: Column, res: int) -> tuple[Column, Column]:
-    """(lat, lon) doubles of the cell center (res is plan-time)."""
-    n = float(1 << res)
-    lon = (cell_x(cell).cast("double") + 0.5) / n * 360.0 - 180.0
-    lat = (cell_y(cell).cast("double") + 0.5) / n * 180.0 - 90.0
-    return lat, lon
-
-
 def grid_disk(cell: Column, k: int, res: int) -> Column:
     """Array column of all cells within Chebyshev ring k (halo ring).
 
@@ -226,8 +194,3 @@ def make_cell_udf(res: int):
         return pd.Series(out)
 
     return cell_udf
-
-
-@pandas_udf(LongType())
-def cell_parent_udf(cell: pd.Series) -> pd.Series:
-    return pd.Series(np_parent(cell.to_numpy(dtype=np.int64)))

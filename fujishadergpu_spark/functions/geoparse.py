@@ -30,8 +30,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
 _DEC = r"(-?\d+(?:\.\d+)?)"
-URL_LAT_RE = rf"[?&]m?lat={_DEC}"
-URL_LON_RE = rf"[?&]m?lon={_DEC}"
 TEXT_COORD_RE = rf"near \({_DEC}, {_DEC}\)"
 
 

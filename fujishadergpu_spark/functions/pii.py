@@ -29,7 +29,7 @@ stage and the parquet scan prunes to (id, text).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # lookaround-free, ASCII-only, identical semantics under Java regex
@@ -46,14 +46,6 @@ PII_RULES = (
     ("n_ids", ID_RE, "<ID>"),
     ("n_ips", IPV4_RE, "<IP>"),
 )
-
-
-def scrub_text(text: Column) -> Column:
-    """The cleaned text: every rule applied in PII_RULES order."""
-    out = text
-    for _, pat, token in PII_RULES:
-        out = F.regexp_replace(out, pat, token)
-    return out
 
 
 def redact_text(text) -> "F.Column":

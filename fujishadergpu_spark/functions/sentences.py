@@ -47,10 +47,6 @@ def sentences(text: Column) -> Column:
     )
 
 
-def sentence_count(text: Column) -> Column:
-    return F.size(sentences(text))
-
-
 def sentence_windows(
     df: DataFrame,
     size: int,

@@ -15,9 +15,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 AUTO_RADII_SEQUENCE: tuple[int, ...] = (2, 8, 32, 128, 512, 2048)
 AUTO_RADIUS_MAX: int = 2048
 
@@ -70,21 +67,3 @@ def meters_per_degree(lat_deg: float) -> tuple[float, float]:
     )
     return max(1e-6, float(m_lon)), float(m_lat)
 
-
-def meters_per_degree_cols(lat_deg: Column) -> tuple[Column, Column]:
-    """Column twin of meters_per_degree — identical series, identical
-    op order, so Spark-side metre conversions match driver-side ones
-    bit-for-bit."""
-    lat = F.radians(lat_deg)
-    m_lat = (
-        F.lit(111132.92)
-        - F.lit(559.82) * F.cos(lat * 2.0)
-        + F.lit(1.175) * F.cos(lat * 4.0)
-        - F.lit(0.0023) * F.cos(lat * 6.0)
-    )
-    m_lon = (
-        F.lit(111412.84) * F.cos(lat)
-        - F.lit(93.5) * F.cos(lat * 3.0)
-        + F.lit(0.118) * F.cos(lat * 5.0)
-    )
-    return F.greatest(m_lon, F.lit(1e-6)), m_lat

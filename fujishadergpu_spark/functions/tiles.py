@@ -51,17 +51,19 @@ def tile_xy(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
     return x.cast("long"), y.cast("long")
 
 
+def global_pixel(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
+    """(gx, gy): clamped world pixel at zoom z (tile g >> 8, pixel g & 255)."""
+    n_px = (1 << z) * TILE_PX
+    xn, yn = merc_xy_norm(lat, lon)
+    gx = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(float(n_px))))).cast("long")
+    gy = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(float(n_px))))).cast("long")
+    return gx, gy
+
+
 def tile_pixel(lat: Column, lon: Column, z: int) -> tuple[Column, Column, Column, Column]:
     """(x, y, px, py): tile indices + pixel position within the tile."""
-    n = float((1 << z) * TILE_PX)
-    xn, yn = merc_xy_norm(lat, lon)
-    gx = F.least(F.lit(int(n) - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(n)))).cast("long")
-    gy = F.least(F.lit(int(n) - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(n)))).cast("long")
-    x = F.shiftright(gx, 8)  # // 256
-    y = F.shiftright(gy, 8)
-    px = gx.bitwiseAND(F.lit(255))
-    py = gy.bitwiseAND(F.lit(255))
-    return x, y, px, py
+    gx, gy = global_pixel(lat, lon, z)
+    return F.shiftright(gx, 8), F.shiftright(gy, 8), gx.bitwiseAND(F.lit(255)), gy.bitwiseAND(F.lit(255))
 
 
 def tile_xy_sql(lat_expr: str, lon_expr: str, z: int) -> tuple[str, str]:

@@ -48,6 +48,13 @@ from pyspark.sql.types import IntegralType, LongType, StructField, StructType
 from ..session import spread
 
 QUANT = 1e12
+# Most tgt rows candidate_scores pulls to the driver. Each src Arrow
+# batch (up to spark.sql.execution.arrow.maxRecordsPerBatch = 65,536
+# rows in session.py) builds a rows × targets float64 accumulator, so
+# 2,048 targets cap it at 65,536 × 2,048 × 8 B = 1 GiB per Python
+# worker; the broadcast matrix, CAP × dim float64, is then 1 MiB at 64
+# dimensions. Larger sides need ANN candidates (module docstring).
+CAP = 2048
 
 
 def _unit_np(mat: np.ndarray) -> np.ndarray:
@@ -89,11 +96,11 @@ def candidate_scores(src: DataFrame, tgt: DataFrame) -> DataFrame:
     ``list_inner_product`` (``queries.BITEXT_SQL``, the statement this
     operator is pinned to).
 
-    The tgt side is pulled to the driver and broadcast so the UDF can
-    see the whole matrix; like the exhaustive candidate relation
-    itself this is the oracle-scale configuration (module docstring:
-    production feeds ANN candidates into the same margin algebra and
-    never materializes a full side)."""
+    The tgt side (at most CAP rows, else ValueError) is pulled to the
+    driver and broadcast so the UDF can see the whole matrix; like the
+    exhaustive candidate relation itself this is the oracle-scale
+    configuration (module docstring: production feeds ANN candidates
+    into the same margin algebra and never materializes a full side)."""
     for side in (src, tgt):
         t = side.schema["vec_id"].dataType
         if not isinstance(t, IntegralType):
@@ -105,7 +112,12 @@ def candidate_scores(src: DataFrame, tgt: DataFrame) -> DataFrame:
         StructField("tgt_id", tgt.schema["vec_id"].dataType),
         StructField("qcos", LongType()),
     ])
-    rows = tgt.select("vec_id", "embedding").collect()
+    rows = tgt.select("vec_id", "embedding").limit(CAP + 1).collect()
+    if len(rows) > CAP:
+        raise ValueError(
+            f"candidate_scores: the tgt side has more than CAP={CAP} rows; the "
+            f"exhaustive scorer broadcasts it whole, so feed ANN candidates instead"
+        )
     if not rows:  # no tgt rows, no pairs (and no matrix to normalize)
         return src.sparkSession.createDataFrame([], schema)
     t_ids = np.fromiter((r["vec_id"] for r in rows), np.int64, count=len(rows))

@@ -65,21 +65,30 @@ def ring_candidates(
     grid_disk(ring) cells via sequence() (constant-size expression for
     any ring — a literal-unrolled disk would blow up codegen), then
     equi-join the points table on cell id. Lon wraps via pmod, lat
-    rows clamp away. The exploded query side broadcasts, so the big
-    points table is scanned, never shuffled."""
+    rows clamp away."""
     n_cells = 1 << res
-    base = F.lit(res << cells.RES_SHIFT).cast("long")
     qx, qy = cells.cell_x(F.col("_qcell")), cells.cell_y(F.col("_qcell"))
     probe = (
         pending.withColumn("_jx", F.explode(F.sequence(qx - ring, qx + ring)))
         .withColumn("_jy", F.explode(F.sequence(qy - ring, qy + ring)))
         .filter((F.col("_jy") >= 0) & (F.col("_jy") < n_cells))
-        .withColumn(
-            "_jcell",
-            base + F.shiftleft(F.pmod("_jx", F.lit(n_cells)), cells.X_SHIFT) + F.col("_jy"),
-        )
-        .drop("_jx", "_jy")
+        .withColumn("_jx", F.pmod("_jx", F.lit(n_cells)))
     )
+    return _join_cells(probe, pts, res, broadcast_queries, exclude_self)
+
+
+def _join_cells(probe, pts, res, broadcast_queries, exclude_self):
+    """Candidate tail shared by the ring rounds and the terminal
+    full-grid level: the probe's (_jx, _jy) cells equi-join the points
+    table on cell id, self pairs drop, each candidate gets ``_dist``.
+    The probe side broadcasts, so the big points table is scanned,
+    never shuffled."""
+    probe = probe.withColumn(
+        "_jcell",
+        F.lit(res << cells.RES_SHIFT).cast("long")
+        + F.shiftleft(F.col("_jx").cast("long"), cells.X_SHIFT)
+        + F.col("_jy"),
+    ).drop("_jx", "_jy")
     if broadcast_queries:
         probe = F.broadcast(probe)
     cand = probe.join(pts, probe["_jcell"] == pts["_ncell"], "inner")
@@ -87,6 +96,14 @@ def ring_candidates(
         cand = cand.filter(F.col("_nid") != F.col("_qid"))
     return cand.withColumn(
         "_dist", sq_dist_deg(F.col("_qlat"), F.col("_qlon"), F.col("_nlat"), F.col("_nlon"))
+    )
+
+
+def _top_k(cand: DataFrame, w, k: int) -> DataFrame:
+    return (
+        cand.withColumn("_rank", F.row_number().over(w))
+        .filter(F.col("_rank") <= k)
+        .select("_qid", "_qlat", "_qlon", "_qcell", "_nid", "_dist", "_rank")
     )
 
 
@@ -139,20 +156,14 @@ def knn(
     ring = min(k0, max(1, (1 << res) // 2 - 1))
     w = Window.partitionBy("_qid").orderBy("_dist", "_nid")
     n_cells = 1 << res
-    base = F.lit(res << cells.RES_SHIFT).cast("long")
 
     for _ in range(max_rounds):
         cand = ring_candidates(pending, pts, ring, res, broadcast_queries, exclude_self)
-        topk = (
-            cand.withColumn("_rank", F.row_number().over(w))
-            .filter(F.col("_rank") <= k)
-            .select("_qid", "_qlat", "_qlon", "_qcell", "_nid", "_dist", "_rank")
-            # materialize once: the per-round result is tiny (<= |q|*k
-            # rows) and is consumed twice (done-check + final union) —
-            # without this the final action would recompute every
-            # round's join
-            .localCheckpoint()
-        )
+        # materialize once: the per-round result is tiny (<= |q|*k
+        # rows) and is consumed twice (done-check + final union) —
+        # without this the final action would recompute every round's
+        # join
+        topk = _top_k(cand, w, k).localCheckpoint()
         # a query is done when it has k hits and the kth is inside the
         # guaranteed-covered radius (k-1)*dlat
         bound = ((ring - 1) * dlat_deg) ** 2
@@ -204,28 +215,10 @@ def knn(
             # via sequence() and equi-join — exact top-k with the same
             # hash-join shape as the ring rounds; no CartesianProduct /
             # BroadcastNestedLoopJoin node ever enters the plan
-            probe = (
-                pending.withColumn("_jx", F.explode(F.sequence(F.lit(0), F.lit(n_cells - 1))))
-                .withColumn("_jy", F.explode(F.sequence(F.lit(0), F.lit(n_cells - 1))))
-                .withColumn(
-                    "_jcell",
-                    base + F.shiftleft(F.col("_jx").cast("long"), cells.X_SHIFT) + F.col("_jy"),
-                )
-                .drop("_jx", "_jy")
-            )
-            if broadcast_queries:
-                probe = F.broadcast(probe)
-            cand = probe.join(pts, probe["_jcell"] == pts["_ncell"], "inner")
-            if exclude_self:
-                cand = cand.filter(F.col("_nid") != F.col("_qid"))
-            cand = cand.withColumn(
-                "_dist", sq_dist_deg(F.col("_qlat"), F.col("_qlon"), F.col("_nlat"), F.col("_nlon"))
-            )
-            finished_parts.append(
-                cand.withColumn("_rank", F.row_number().over(w))
-                .filter(F.col("_rank") <= k)
-                .select("_qid", "_qlat", "_qlon", "_qcell", "_nid", "_dist", "_rank")
-            )
+            every = F.explode(F.sequence(F.lit(0), F.lit(n_cells - 1)))
+            probe = pending.withColumn("_jx", every).withColumn("_jy", every)
+            cand = _join_cells(probe, pts, res, broadcast_queries, exclude_self)
+            finished_parts.append(_top_k(cand, w, k))
 
     out = finished_parts[0]
     for part in finished_parts[1:]:

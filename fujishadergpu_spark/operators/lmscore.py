@@ -269,7 +269,7 @@ def ppl_bucket_thresholds(
     exact=False (production): percentile_approx sketches — map-side
     combinable, one tiny aggregate over the corpus, group count rows
     out. exact=True (oracle/validation scale ONLY — the
-    norm_stats.py:316 plan-choice pattern): sorts each group's scores
+    norm_stats.percentile_pool pattern): sorts each group's scores
     into one array on a single task; rank extraction is then literal.
     At 100 TB exact mode would collect a language's whole score
     column into one row — always use the sketch in production.

@@ -390,14 +390,3 @@ def overview_box_total(
 
     return joined.mapInPandas(finish, "z int, x long, y long, up_total_q long, core_pts long")
 
-
-def global_abs_p99(tiles_grid_df: DataFrame, value_col: str = "usm", sample_mod: int = 4) -> float:
-    """Sampled global |p99| — the stats pre-pass -> broadcast pattern
-    (reference algorithms/_norm_stats.py:176-350): sample a stable
-    subset of tiles, explode values, one approx-percentile aggregate."""
-    sampled = tiles_grid_df.filter(F.pmod(F.xxhash64("x", "y"), F.lit(sample_mod)) == 0)
-    return (
-        sampled.select(F.explode(value_col).alias("v"))
-        .agg(F.percentile_approx(F.abs(F.col("v")), 0.99, 10000).alias("p"))
-        .first()["p"]
-    )

@@ -1,36 +1,78 @@
 """Global normalization statistics: the reference's per-algorithm
-stats pre-pass re-expressed as Spark aggregations.
+stats pre-pass (one global (lo, scale) per algorithm, pooled from
+stratified windows and injected into every block so normalization is
+seam-free; reference algorithms/_norm_stats.py:29-61,301-350,
+_global_stats.py:65-178) re-expressed as Spark aggregations.
 
-The reference computes one global (lo, scale) pair per algorithm from
-stratified full-resolution windows, then injects it into every block
-so normalization is seam-free (reference algorithms/_norm_stats.py:
-29-61,301-350, _global_stats.py:123-178). Here the same three pieces:
+Every pre-pass — stretch-domain kernels (``kernel_global_stats``),
+raw-field kernels (``kernel_raw_stats``), fractal's two ordered stages
+and the render stretch — is one ``pool`` callable run by two pieces:
 
-- ``kernel_global_stats`` — run the kernel on a hash-sampled subset of
-  tiles (stats mode: no injected stats), pool an approx percentile
-  pair. One aggregate over exploded pixels; the sample is chosen by a
-  deterministic tile hash so the pre-pass is reproducible and scans a
-  bounded fraction of the data at any scale (A9).
-- central-window fallback (A10): when the sample is empty/degenerate
-  (sparse SF, all-NoData sample), rerun over the tiles nearest the
-  data centroid — the reference's bounded central-crop fallback
-  (reference algorithms/_global_stats.py:65-120).
-- ``stretch`` (A11): the display-stretch column op mapping
-  [lo, lo+scale] -> [0, 1], dark tail clamped, bright tail unclipped
-  (reference _global_stats.py:156-178, _normalization.py:22-41).
+- ``sample_pool``, the one sample-and-fallback contract: ``pool`` the
+  rows whose tile hashes into the sample, ``pmod(xxhash64(x, y),
+  sample_mod) == 0`` (A9: deterministic, a bounded fraction at any
+  scale); when that is None, ``pool`` the ±2-tile window around the
+  rows' tile centroid (A10, the reference's bounded central crop);
+  when that is None too, the caller applies its own default.
+- ``percentile_pool``, the one percentile aggregate (approx sketch, or
+  exact for oracle parity).
 
-At 100 TB the pre-pass reads sample_frac of the tiles once and
-broadcasts two doubles — the same shape as the reference's
-stats-then-stream design, with no second full scan.
+``stretch`` (A11) maps [lo, lo+scale] -> [0, 1], dark tail clamped,
+bright tail unclipped (reference _global_stats.py:156-178). At 100 TB
+the pre-pass reads 1/sample_mod of the tiles once and broadcasts a few
+doubles, with no second full scan.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tiles import TILE_PX, merc_xy_norm
+from ..functions.tiles import TILE_PX, tile_xy
 from .tile_kernels import tile_kernel
+
+
+def sample_pool(frame: DataFrame, tile: tuple[Column, Column], pool: Callable, sample_mod: int = 4):
+    """``pool`` over the A9 tile-hash sample of ``frame``; when that is
+    None, ``pool`` over the A10 ±2-tile window around the centroid of
+    ``tile`` (the (x, y) tile columns of ``frame``'s rows); None when
+    both pool to nothing."""
+    tx, ty = tile
+    v = pool(frame.filter(F.pmod(F.xxhash64(tx, ty), F.lit(sample_mod)) == 0))
+    if v is not None:
+        return v
+    center = frame.agg(F.avg(tx).alias("cx"), F.avg(ty).alias("cy")).first()
+    if center is None or center["cx"] is None:
+        return None  # no rows at all: nothing to recover from
+    cx, cy = int(center["cx"]), int(center["cy"])
+    return pool(frame.filter((F.abs(tx - cx) <= 2) & (F.abs(ty - cy) <= 2)))
+
+
+def percentile_pool(values: DataFrame, ps: list[float], exact: bool = False) -> list[float] | None:
+    """The percentiles ``ps`` (fractions) of column ``v`` in one
+    aggregate; None when there is no value to pool.
+
+    ``exact=True`` is the ORACLE-ONLY plan choice (the normalize_
+    acctbal pattern, queries.normalize_acctbal): exact ``percentile``
+    (a full sort of the pooled values) solely for bit-parity with
+    DuckDB ``quantile_cont``. Production always uses the default
+    ``percentile_approx`` sketch — the plan to run at 10^12 rows."""
+    if exact:
+        pctl = F.expr(f"percentile(v, array({', '.join(repr(float(p)) for p in ps)}))")
+    else:
+        pctl = F.percentile_approx("v", list(ps), 10000)
+    row = values.agg(pctl.alias("p")).first()
+    if row is None or row["p"] is None:
+        return None
+    return [float(p) for p in row["p"]]
+
+
+def _values(tiles: DataFrame) -> DataFrame:
+    """Every pixel of the tiles' ``result`` grids as rows of ``v``."""
+    return tiles.select(F.explode("result").alias("v"))
+
 
 # Kernels whose ``global_stats`` kwarg is a pure POST-OUTPUT stretch of
 # the same quantity the no-stats run emits raw — the only kernels for
@@ -74,11 +116,8 @@ def _check_stretch_domain(kernel: str, kernel_params: dict) -> None:
 # The field functions are the same ones the kernels' per-block
 # fallbacks use, so pre-pass and fallback can never drift.
 def _p95_agg(vdf):
-    row = vdf.agg(F.percentile_approx("v", 0.95, 10000).alias("p")).first()
-    if row is None or row["p"] is None:
-        return None
-    v = float(row["p"])
-    return v if v > 1e-12 else None
+    p = percentile_pool(vdf, [0.95])
+    return p[0] if p is not None and p[0] > 1e-12 else None
 
 
 def _grad_stats_agg(vdf):
@@ -164,64 +203,44 @@ def kernel_raw_stats(
     log_scale: bool = True,
     **kernel_params,
 ):
-    """Pooled raw-field stat(s) over a deterministic tile sample, with
-    the A10 central-window fallback — the per-algorithm analog of
-    kernel_global_stats for non-stretch-domain kernels. Returns a
-    float (frangi/specular) or the kernel's stat tuple (npr_edges)."""
+    """Pooled raw-field stat(s) over the shared tile sample and
+    fallback — the per-algorithm analog of kernel_global_stats for
+    non-stretch-domain kernels. Returns a float (frangi/specular) or
+    the kernel's stat tuple (npr_edges); the spec default when both
+    pool to nothing."""
+    from .tile_kernels import kernel_halo, rasterize_tiles
+
     spec = _raw_stats_specs().get(kernel)
     if spec is None:
         raise ValueError(
             f"no raw-stat extractor for kernel {kernel!r}; "
             f"available: {sorted(_raw_stats_specs())}"
         )
-    return _staged_pool(points, z, kernel, spec, sample_mod, log_scale, kernel_params)
+    h = kernel_halo(kernel, kernel_params)
 
+    def pool(pts):
+        tiles = rasterize_tiles(pts, z, halo=h, log_scale=log_scale)
+        return _pool_tiles(tiles, h, spec, kernel_params)
 
-def _staged_pool(points, z, kernel, spec, sample_mod, log_scale, kernel_params):
-    """Sampled pool -> A10 central-window fallback -> spec default.
-
-    NOTE: kernel_global_stats carries its own copy of this
-    sample/centroid/±2-tile policy (it pools KERNEL OUTPUT via
-    tile_kernel, not a raw field via rasterize+mapInPandas, and its
-    A10 test pins exact equality with _pool_stats) — keep the two
-    policies in sync if either changes."""
-    pts = _owning_tile(points, z)
-    sampled = pts.filter(F.pmod(F.xxhash64("_otx", "_oty"), F.lit(sample_mod)) == 0).drop("_otx", "_oty")
-    v = _pool_field(sampled, z, kernel, spec, log_scale, kernel_params)
-    if v is not None:
-        return v
-    center = pts.agg(F.avg("_otx").alias("cx"), F.avg("_oty").alias("cy")).first()
-    if center is None or center["cx"] is None:
-        return spec["default"]
-    cx, cy = int(center["cx"]), int(center["cy"])
-    central = pts.filter(
-        (F.abs(F.col("_otx") - cx) <= 2) & (F.abs(F.col("_oty") - cy) <= 2)
-    ).drop("_otx", "_oty")
-    v = _pool_field(central, z, kernel, spec, log_scale, kernel_params)
+    v = sample_pool(points, tile_xy(F.col("lat"), F.col("lon"), z), pool, sample_mod)
     return v if v is not None else spec["default"]
 
 
 def _relief_agg(vdf):
-    row = vdf.agg(F.percentile_approx("v", [0.10, 0.75], 10000).alias("p")).first()
-    if row is None or row["p"] is None:
-        return None
-    p10, p75 = float(row["p"][0]), float(row["p"][1])
-    return (p10, p75) if p75 > p10 else None
+    p = percentile_pool(vdf, [0.10, 0.75])
+    return (p[0], p[1]) if p is not None and p[1] > p[0] else None
 
 
 def _median_dev_agg(vdf):
     """(median, p99|v − median|) — fractal's global_stats pair; the
     pooled field is checkpointed so the two aggregates scan it once."""
     v = vdf.localCheckpoint(eager=False)
-    r1 = v.agg(F.percentile_approx("v", 0.5, 10000).alias("m")).first()
-    if r1 is None or r1["m"] is None:
+    m = percentile_pool(v, [0.5])
+    if m is None:
         return None
-    med = float(r1["m"])
-    r2 = v.agg(F.percentile_approx(F.abs(F.col("v") - med), 0.99, 10000).alias("d")).first()
-    if r2 is None or r2["d"] is None:
-        return None
-    dev = float(r2["d"])
-    return (med, dev) if dev > 1e-6 else None
+    med = m[0]
+    d = percentile_pool(v.select(F.abs(F.col("v") - med).alias("v")), [0.99])
+    return (med, d[0]) if d is not None and d[0] > 1e-6 else None
 
 
 def fractal_global_stats(
@@ -234,9 +253,10 @@ def fractal_global_stats(
     """Fractal anomaly's ORDERED two-stage pre-pass (the reference runs
     its stats in dependency order — fractal relief BEFORE norm stats,
     reference core/dask_processor.py:1327, _impl_fractal_anomaly.py:
-    359-445): stage 1 pools the relief field's (p10, p75); stage 2
-    pools the FEATURE field — computed WITH those relief stats — for
-    (median, p99|dev|). Returns the kernel-param dict to inject."""
+    359-445): stage 1 pools the relief field's (p10, p75) through the
+    shared sample and fallback; stage 2 pools the FEATURE field —
+    computed WITH those relief stats — for (median, p99|dev|) over the
+    same tiles. Returns the kernel-param dict to inject."""
     from .np_kernels import fractal_feature_field, fractal_roughness_field
 
     from .tile_kernels import kernel_halo, rasterize_tiles
@@ -250,28 +270,19 @@ def fractal_global_stats(
         "agg": _median_dev_agg,
     }
     h = kernel_halo("fractal_anomaly", kernel_params)
-    pts = _owning_tile(points, z)
-    sampled = pts.filter(
-        F.pmod(F.xxhash64("_otx", "_oty"), F.lit(sample_mod)) == 0
-    ).drop("_otx", "_oty")
-    # ONE rasterization serves both stages (checkpointed): the two
-    # pools read the same sampled windows, like the reference computing
-    # all fractal stats from one set of stratified reads
-    tiles = rasterize_tiles(sampled, z, halo=h, log_scale=log_scale).localCheckpoint(eager=False)
-    relief = _pool_tiles(tiles, h, relief_spec, kernel_params)
-    if relief is None:
-        # A10 central-window fallback, again rasterized once
-        center = pts.agg(F.avg("_otx").alias("cx"), F.avg("_oty").alias("cy")).first()
-        if center is not None and center["cx"] is not None:
-            cx, cy = int(center["cx"]), int(center["cy"])
-            central = pts.filter(
-                (F.abs(F.col("_otx") - cx) <= 2) & (F.abs(F.col("_oty") - cy) <= 2)
-            ).drop("_otx", "_oty")
-            tiles = rasterize_tiles(central, z, halo=h, log_scale=log_scale).localCheckpoint(eager=False)
-            relief = _pool_tiles(tiles, h, relief_spec, kernel_params)
+    last = {}  # the tiles stage 1 pooled last (sample or central window)
+
+    def relief_pool(pts):
+        # ONE rasterization serves both stages (checkpointed): the two
+        # pools read the same windows, like the reference computing
+        # all fractal stats from one set of stratified reads
+        last["tiles"] = rasterize_tiles(pts, z, halo=h, log_scale=log_scale).localCheckpoint(eager=False)
+        return _pool_tiles(last["tiles"], h, relief_spec, kernel_params)
+
+    relief = sample_pool(points, tile_xy(F.col("lat"), F.col("lon"), z), relief_pool, sample_mod)
     p10, p75 = relief if relief is not None else (0.0, 1.0)
     feat = _pool_tiles(
-        tiles, h, feat_spec, dict(kernel_params, relief_p10=p10, relief_p75=p75)
+        last["tiles"], h, feat_spec, dict(kernel_params, relief_p10=p10, relief_p75=p75)
     )
     med, dev = feat if feat is not None else (0.0, 1.0)
     return {
@@ -283,17 +294,9 @@ def fractal_global_stats(
     }
 
 
-def _pool_field(points, z, kernel, spec, log_scale, kernel_params):
-    """spec agg of the kernel's raw field over core pixels of
-    halo-expanded sampled tiles."""
-    from .tile_kernels import kernel_halo, rasterize_tiles
-
-    h = kernel_halo(kernel, kernel_params)
-    tiles = rasterize_tiles(points, z, halo=h, log_scale=log_scale)
-    return _pool_tiles(tiles, h, spec, kernel_params)
-
-
 def _pool_tiles(tiles, h, spec, kernel_params):
+    """spec agg of spec's field over the core pixels of halo-expanded
+    rasterized tiles."""
     import numpy as np
     import pandas as pd
 
@@ -324,14 +327,6 @@ def stretch(col: Column, lo: float, scale: float) -> Column:
     return F.greatest((col - F.lit(float(lo))) / F.lit(float(scale)), F.lit(0.0))
 
 
-def _owning_tile(points: DataFrame, z: int, lat_col="lat", lon_col="lon") -> DataFrame:
-    n_px = (1 << z) * TILE_PX
-    xn, yn = merc_xy_norm(F.col(lat_col), F.col(lon_col))
-    gx = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(float(n_px))))).cast("long")
-    gy = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(float(n_px))))).cast("long")
-    return points.withColumns({"_otx": F.shiftright(gx, 8), "_oty": F.shiftright(gy, 8)})
-
-
 def kernel_global_stats(
     points: DataFrame,
     z: int,
@@ -343,57 +338,47 @@ def kernel_global_stats(
     exact: bool = False,
     **kernel_params,
 ) -> tuple[float, float]:
-    """(lo, scale) of the kernel's raw output pooled over a
-    deterministic 1/sample_mod tile sample; central-window fallback
-    (A10) when the sample is degenerate. Restricted to stretch-domain
-    kernels (STATS_STRETCH_KERNELS) — see _check_stretch_domain.
-
-    ``exact=True`` is the ORACLE-ONLY plan choice (the normalize_
-    acctbal pattern, queries.normalize_acctbal): exact ``percentile``
-    (a full sort of the pooled pixels) solely for bit-parity with
-    DuckDB ``quantile_cont``. Production always uses the default
-    ``percentile_approx`` sketch — the plan to run at 10^12 rows."""
+    """(lo, scale) of the kernel's raw output pooled over the shared
+    tile sample and fallback; (0.0, 0.0) when both are empty or flat.
+    Restricted to stretch-domain kernels (STATS_STRETCH_KERNELS) — see
+    _check_stretch_domain. ``exact`` is percentile_pool's oracle-only
+    exact percentile."""
     _check_stretch_domain(kernel, kernel_params)
-    pts = _owning_tile(points, z)
-    sampled = pts.filter(F.pmod(F.xxhash64("_otx", "_oty"), F.lit(sample_mod)) == 0).drop("_otx", "_oty")
-    stats = _pool_stats(sampled, z, kernel, lo_p, hi_p, log_scale, kernel_params, exact)
-    if stats is not None:
-        return stats
 
-    # A10: central full-resolution window around the data centroid
-    # (reference _global_stats.py:65-120's bounded central crop)
-    center = pts.agg(
-        F.avg("_otx").alias("cx"), F.avg("_oty").alias("cy")
-    ).first()
-    if center is None or center["cx"] is None:
-        return (0.0, 0.0)  # no points at all: nothing to recover from
-    cx, cy = int(center["cx"]), int(center["cy"])
-    central = pts.filter(
-        (F.abs(F.col("_otx") - cx) <= 2) & (F.abs(F.col("_oty") - cy) <= 2)
-    ).drop("_otx", "_oty")
-    stats = _pool_stats(central, z, kernel, lo_p, hi_p, log_scale, kernel_params, exact)
+    def pool(pts):
+        return _kernel_output_stats(pts, z, kernel, lo_p, hi_p, log_scale, kernel_params, exact)
+
+    stats = sample_pool(points, tile_xy(F.col("lat"), F.col("lon"), z), pool, sample_mod)
     return stats if stats is not None else (0.0, 0.0)
 
 
-def _pool_stats(points, z, kernel, lo_p, hi_p, log_scale, kernel_params, exact=False):
+def _kernel_output_stats(points, z, kernel, lo_p, hi_p, log_scale, kernel_params, exact=False):
     tiles = tile_kernel(points, z, kernel=kernel, log_scale=log_scale, **kernel_params)
-    pctl = (
-        F.expr(f"percentile(v, array({lo_p / 100.0!r}, {hi_p / 100.0!r}))")
-        if exact  # oracle-only full sort; see kernel_global_stats
-        else F.percentile_approx("v", [lo_p / 100.0, hi_p / 100.0], 10000)
-    )
-    row = (
-        tiles.select(F.explode("result").alias("v"))
-        .filter(~F.isnan("v"))
-        .agg(pctl.alias("p"))
-        .first()
-    )
-    if row is None or row["p"] is None:
+    p = percentile_pool(_values(tiles).filter(~F.isnan("v")), [lo_p / 100.0, hi_p / 100.0], exact)
+    if p is None or not p[1] - p[0] > 1e-12:
         return None
-    lo, hi = float(row["p"][0]), float(row["p"][1])
-    if not hi - lo > 1e-12:
-        return None
-    return (lo, hi - lo)
+    return (p[0], p[1] - p[0])
+
+
+def render_stretch(tiles: DataFrame, symmetric: bool = False) -> tuple[float, float]:
+    """(lo, scale) the render quantizes on, pooled from the (x, y)
+    output tiles' ``result`` grids: the robust [p1, p99] of the non-NaN
+    values (a flat pool keeps lo with scale 1; nothing pooled gives
+    (0, 1)), or with ``symmetric`` topousm's ±|p99| stretch (reference
+    algorithms/_normalization.py:22-41: zero relief maps to mid-gray;
+    a p99 not > 1e-12 becomes 1)."""
+    tile = (F.col("x"), F.col("y"))
+    if symmetric:
+        p = sample_pool(
+            tiles, tile, lambda t: percentile_pool(_values(t).select(F.abs("v").alias("v")), [0.99])
+        )
+        p99 = p[0] if p is not None and p[0] > 1e-12 else 1.0
+        return -p99, 2.0 * p99
+    p = sample_pool(
+        tiles, tile, lambda t: percentile_pool(_values(t).filter(~F.isnan("v")), [0.01, 0.99])
+    )
+    lo, hi = p if p is not None else (0.0, 1.0)
+    return lo, hi - lo if hi - lo > 1e-12 else 1.0
 
 
 def tile_kernel_normalized(

@@ -57,7 +57,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.tiles import TILE_PX, merc_xy_norm
+from ..functions.tiles import TILE_PX, global_pixel
 
 
 def _kernel_parallelism(df: DataFrame) -> int:
@@ -101,10 +101,7 @@ def explode_to_tiles(
     if not 0 <= halo < TILE_PX:
         raise ValueError("halo must be in [0, 256)")
     n_tiles = 1 << z
-    n_px = n_tiles * TILE_PX
-    xn, yn = merc_xy_norm(F.col(lat_col), F.col(lon_col))
-    gx = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(float(n_px))))).cast("long")
-    gy = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(float(n_px))))).cast("long")
+    gx, gy = global_pixel(F.col(lat_col), F.col(lon_col), z)
     df = points.withColumns({"gx": gx, "gy": gy})
 
     if halo == 0:

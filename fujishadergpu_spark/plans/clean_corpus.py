@@ -94,20 +94,6 @@ DOC_STAGES = STAGES[:6]
 # when ppl_keep_buckets is set; "chunk" (context-window fan-out,
 # operators/chunking.py) appends after shard when chunk_size is set.
 # All ride the same idempotent-stage machinery.
-OPTIONAL_STAGES = (
-    "urlfilter",
-    "increment",
-    "domain",
-    "mojibake",
-    "boilerplate",
-    "norm_dedup",
-    "para_dedup",
-    "sent_dedup",
-    "readability",
-    "ppl",
-    "topic",
-    "chunk",
-)
 
 
 def _bucketed(df: DataFrame) -> DataFrame:

@@ -144,15 +144,3 @@ def spread(df: DataFrame) -> DataFrame:
     par = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
-
-def load_tables(spark: SparkSession, sf_dir: str, *names: str):
-    """Load driver testdata parquet tables and register temp views.
-
-    Returns the DataFrames in the order requested.
-    """
-    out = []
-    for name in names:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        df.createOrReplaceTempView(name)
-        out.append(df)
-    return out

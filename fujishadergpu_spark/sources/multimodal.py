@@ -18,11 +18,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, payload binary, width int, height int, "
-    "duration_ms int, mime string"
-)
-
 FEATURE_DIM = 32
 
 

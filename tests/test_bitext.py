@@ -122,6 +122,19 @@ def test_candidate_scores_keeps_integral_ids_refuses_others(spark):
         candidate_scores(bad, df)
 
 
+def test_candidate_scores_refuses_tgt_above_cap(spark, monkeypatch):
+    """The tgt side is collected and broadcast whole, so a side above
+    CAP rows is refused before any pair is scored."""
+    from fujishadergpu_spark.operators import bitext
+
+    df = _emb_df(spark, [(i, _unit(1.0, float(i))) for i in range(4)])
+    monkeypatch.setattr(bitext, "CAP", 4)
+    assert candidate_scores(df, df).count() == 16
+    monkeypatch.setattr(bitext, "CAP", 3)
+    with pytest.raises(ValueError, match="more than CAP=3 rows"):
+        candidate_scores(df, df)
+
+
 def test_round_half_up_matches_decimal_half_up_near_half():
     """The Arrow path's F.round twin on the values where floor(y + 0.5)
     goes wrong (y + 0.5 rounds up to 1 just below 0.5) and on its exact

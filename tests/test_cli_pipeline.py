@@ -150,3 +150,37 @@ def test_render_topousm_symmetric_p99_stretch(spark, pages_path, tmp_path):
     valid = dns[dns > 0]
     # symmetric stretch: zero relief -> DN ~128; both halves populated
     assert (valid < 120).any() and (valid > 136).any()
+
+
+def test_render_pools_central_window_when_sample_misses(spark, tmp_path):
+    """A render whose output tiles all miss the 1/4 tile-hash sample
+    must pool its stretch from the A10 central window, not quantize on
+    the (0, 1) default: every point sits in zoom-5 tile (28, 12), whose
+    hash mod 4 is 2."""
+    import glob
+
+    import numpy as np
+
+    from fujishadergpu_spark.cli import run_render
+
+    (hit,) = spark.range(1).select(
+        F.pmod(F.xxhash64(F.lit(28).cast("long"), F.lit(12).cast("long")), F.lit(4)).alias("h")
+    ).first()
+    assert hit != 0, "tile (28, 12) must miss the sample"
+    # spread over most of the tile so that p99 of the slope is not flat
+    rng = np.random.RandomState(5)
+    lat = rng.uniform(33.0, 40.0, 2000)
+    lon = rng.uniform(136.0, 145.0, 2000)
+    src = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(f"https://a.example/p/{i}?lat={a:.5f}&lon={o:.5f}", "") for i, (a, o) in enumerate(zip(lat, lon))],
+        "url string, text string",
+    ).write.parquet(src)
+    out = str(tmp_path / "render")
+    run_render(spark, src, out, "slope", 5)
+    (sdir,) = glob.glob(f"{out}/_stats_render_slope_z5_*")
+    srow = spark.read.parquet(sdir).first()
+    assert (srow["lo"], srow["scale"]) != (0.0, 1.0)
+    tiles = spark.read.parquet(f"{out}/tiles_slope_z5").collect()
+    assert [(r["x"], r["y"]) for r in tiles] == [(28, 12)]
+    assert len(np.unique(np.frombuffer(tiles[0]["dn"], dtype=np.uint8))) > 2

@@ -7,11 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel
-from fujishadergpu_spark.operators.multiscale import (
-    global_abs_p99,
-    multiscale_usm,
-    np_box_mean,
-)
+from fujishadergpu_spark.operators.multiscale import multiscale_usm, np_box_mean
+from fujishadergpu_spark.operators.norm_stats import render_stretch
 from fujishadergpu_spark.operators.np_filters import bilinear_sample
 
 Z = 3
@@ -113,8 +110,9 @@ def test_stack_mode_matches_single_radius_runs(spark, points_df):
 
 
 def test_global_p99_runs(spark, points_df):
-    g = multiscale_usm(points_df, Z, radii=(2, 8), output="grid")
-    p = global_abs_p99(g, "usm", sample_mod=1)
+    g = multiscale_usm(points_df, Z, radii=(2, 8), output="grid").withColumnRenamed("usm", "result")
+    lo, scale = render_stretch(g, symmetric=True)
+    p = scale / 2.0
     assert p is not None and p >= 0.0
 
 

@@ -15,6 +15,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from fujishadergpu_spark.functions.tiles import tile_xy
 from fujishadergpu_spark.operators import norm_stats as ns
 from fujishadergpu_spark.operators.tile_kernels import tile_kernel
 
@@ -172,7 +173,7 @@ def test_a10_central_window_fallback_recovers(spark, points_df):
     exactly the stats of the ±2-tile window around the data centroid
     (reference _global_stats.py:65-120)."""
     huge_mod = 1_000_003
-    pts = ns._owning_tile(points_df, Z)
+    pts = points_df.withColumns(dict(zip(("_otx", "_oty"), tile_xy(F.col("lat"), F.col("lon"), Z))))
     n_sampled = pts.filter(
         F.pmod(F.xxhash64("_otx", "_oty"), F.lit(huge_mod)) == 0
     ).count()
@@ -185,7 +186,7 @@ def test_a10_central_window_fallback_recovers(spark, points_df):
     central = pts.filter(
         (F.abs(F.col("_otx") - cx) <= 2) & (F.abs(F.col("_oty") - cy) <= 2)
     ).drop("_otx", "_oty")
-    want = ns._pool_stats(central, Z, "openness", 1.0, 99.0, True, {})
+    want = ns._kernel_output_stats(central, Z, "openness", 1.0, 99.0, True, {})
     assert want is not None and want[1] > 0.0, "central window must recover real stats"
     assert got == want
 
