@@ -39,7 +39,13 @@ per-tile executor, ``_per_tile``. Its contract:
 
 The kernel operators share one kernel tail (``_kernel_tail``: log1p,
 per-tile metric pixel scale, kernel, core crop) and one stats reducer
-(``_tile_stats``) with void_fill_dist.tile_kernel_stats_filled.
+(``_tile_stats``) with void_fill_dist.tile_kernel_stats_filled. The
+tail runs a kernel only on the grid's data window: for the local
+stencil kernels (``LOCAL_STENCIL_KERNELS``, halo depth r) the bounding
+box of the nonzero pixels dilated by 2r+1, for every other kernel and
+for a dense tile the whole grid. Core pixels outside the window take
+the kernel's value on all-zero input; the core is bit-identical to the
+whole-grid run (the sub-tile analog of the A17 skip below).
 
 Determinism (SURVEY.md §7.3 hard part 3): rasterization accumulates
 integer counts (order-free) or sorts rows by (pixel, value) before
@@ -70,12 +76,15 @@ def _kernel_parallelism(df: DataFrame) -> int:
     the analog of the reference's worker-throttling-by-compute (not
     by bytes) sizing (reference config/auto_tune.py:159-192).
 
-    2 waves: each partition pays a fixed cost (Arrow stream + Python
-    eval setup) that made 4 waves ~1.5x slower than 1 at bench scale,
-    while heavy-tailed per-tile cost (dense urban tiles) still wants
-    more than one task per core for balance.
+    1 wave: each partition pays a fixed cost (Arrow stream + Python
+    eval setup) that made 4 waves ~1.5x slower than 1 at bench scale.
+    Once the kernel tail ran only on each tile's data window, per-tile
+    cost fell ~5x for sparse tiles and that fixed cost outweighed the
+    balance a second wave bought for heavy-tailed tiles: on tile_z9
+    (4 cores) 1 wave beat 2 in 3 of 3 alternating pairs, median
+    12.7k -> 15.5k pages/s.
     """
-    return df.sparkSession.sparkContext.defaultParallelism * 2
+    return df.sparkSession.sparkContext.defaultParallelism
 
 
 # ------------------------- halo explosion ---------------------------
@@ -192,7 +201,12 @@ def _accumulate_grid(
     lx, ly = lx[keep], ly[keep]
     idx = ly * w + lx
     if weights is None:
-        grid = np.bincount(idx, minlength=w * w).astype(dtype)
+        # counts over the span of the tile's pixel indices, not all w²:
+        # a sparse tile bins and casts a handful of counts
+        lo = idx.min(initial=w * w)
+        counts = np.bincount(idx - lo)
+        grid = np.zeros(w * w, dtype=dtype)
+        grid[lo : lo + counts.size] = counts
     else:
         # float64 accumulation in sorted order regardless of output
         # dtype (bit-reproducible), downcast after
@@ -492,6 +506,13 @@ METRIC_SCALE_KERNELS = frozenset(
     {"hillshade", "slope", "curvature", "curvature_display", "aspect", "openness"}
 )
 
+# kernels whose output pixel reads only inputs within its halo depth r
+# (np.gradient stencils): _kernel_tail runs these on the grid's data
+# window, every other kernel on the whole grid
+LOCAL_STENCIL_KERNELS = frozenset(
+    {"hillshade", "slope", "aspect", "curvature", "curvature_display"}
+)
+
 KERNELS = {
     "hillshade": (np_hillshade, 1),  # name -> (fn, halo depth | halo(params))
     "slope": (np_slope, 1),
@@ -543,6 +564,27 @@ def kernel_halo(kernel: str, params: dict | None = None) -> int:
     return min(int(h), TILE_PX - 1)
 
 
+def _data_window(grid: np.ndarray, reach: int | None) -> tuple[int, int, int, int]:
+    """Grid rows [r0, r1) x columns [c0, c1): the bounding box of the
+    grid's data pixels dilated by ``reach`` and clipped to the grid;
+    the whole grid when reach is None, an empty box when no pixel holds
+    data. A data pixel is one whose bits are not +0.0, so NaN and -0.0
+    count. Row and column ``any`` reductions find the box: np.nonzero
+    on a 258² float32 grid costs more than the kernel time it saves."""
+    n0, n1 = grid.shape
+    if reach is None:
+        return 0, n0, 0, n1
+    data = grid.view(f"u{grid.itemsize}") != 0
+    rows = np.flatnonzero(data.any(axis=1))
+    if not rows.size:
+        return 0, 0, 0, 0
+    cols = np.flatnonzero(data[rows[0] : rows[-1] + 1].any(axis=0))
+    return (
+        max(rows[0] - reach, 0), min(rows[-1] + 1 + reach, n0),
+        max(cols[0] - reach, 0), min(cols[-1] + 1 + reach, n1),
+    )
+
+
 def _kernel_tail(
     kernel: str, z: int, halo: int | None, log_scale: bool, metric_scale: bool, kernel_params: dict
 ):
@@ -553,8 +595,19 @@ def _kernel_tail(
     halo grid after any void fill: log1p (log_scale), the tile row's
     metric pixel scale (metric_scale), the kernel, the core crop. It
     is the one tail of tile_kernel, tile_kernel_stats, filled-tile
-    synthesis and void_fill_dist.tile_kernel_stats_filled."""
-    fn_kernel, _ = KERNELS[kernel]
+    synthesis and void_fill_dist.tile_kernel_stats_filled.
+
+    The tail runs on the grid's data window (``_data_window``), not on
+    the whole grid. For a LOCAL_STENCIL_KERNELS kernel of halo depth r
+    the window is the data's bounding box dilated by 2r+1; every other
+    kernel's window is the whole grid, and so is a dense tile's. A
+    core pixel outside the window reads only zeros within r, so it
+    takes the kernel's flat value: the same log1p, pixel scale and
+    kernel run on a tiny all-zero grid of the grid's dtype. Inside, a
+    pixel reads the same inputs through the same elementwise NumPy ops
+    as on the whole grid, so the core is bit-identical to the
+    whole-grid run."""
+    fn_kernel, spec = KERNELS[kernel]
     if metric_scale:
         if kernel not in METRIC_SCALE_KERNELS:
             raise ValueError(
@@ -564,14 +617,35 @@ def _kernel_tail(
         if "pixel_scale" in kernel_params:
             raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
     h = kernel_halo(kernel, kernel_params) if halo is None else halo
+    reach = 2 * spec + 1 if kernel in LOCAL_STENCIL_KERNELS else None
+    flats: dict = {}  # (dtype, tile row | None) -> flat value
 
-    def tail(grid: np.ndarray, tile_y: int) -> np.ndarray:
+    def run(grid: np.ndarray, params: dict) -> np.ndarray:
         if log_scale:
             grid = np.log1p(grid)
+        return fn_kernel(grid, **params)
+
+    def tail(grid: np.ndarray, tile_y: int) -> np.ndarray:
         params = kernel_params
         if metric_scale:
             params = dict(kernel_params, pixel_scale=tile_pixel_scales(tile_y, z))
-        return _core(fn_kernel(grid, **params), h)
+        r0, r1, c0, c1 = _data_window(grid, reach)
+        # the window's cut of the core, in grid pixels
+        a0, a1 = max(r0, h), min(r1, h + TILE_PX)
+        b0, b1 = max(c0, h), min(c1, h + TILE_PX)
+        core = None
+        if a0 < a1 and b0 < b1:
+            win = run(grid[r0:r1, c0:c1], params)
+            core = win[a0 - r0 : a1 - r0, b0 - c0 : b1 - c0]
+            if core.shape == (TILE_PX, TILE_PX):
+                return core
+        key = (grid.dtype, tile_y if metric_scale else None)
+        if key not in flats:
+            flats[key] = run(np.zeros((reach, reach), grid.dtype), params)[reach // 2, reach // 2]
+        out = np.full((TILE_PX, TILE_PX), flats[key])
+        if core is not None:
+            out[a0 - h : a1 - h, b0 - h : b1 - h] = core
+        return out
 
     return h, tail
 
@@ -585,7 +659,7 @@ def _tile_stats(core: np.ndarray, lit_threshold: float) -> dict:
     return {
         "shade_sum": float(core.sum(dtype=np.float64)),
         "shade_max": float(core.max()),
-        "lit_pixels": int((core > lit_threshold).sum()),
+        "lit_pixels": int(np.count_nonzero(core > lit_threshold)),
     }
 
 

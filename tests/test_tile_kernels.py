@@ -7,16 +7,22 @@ LOD pyramid mass-conservation invariant."""
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from fujishadergpu_spark.functions.tiles import TILE_PX, np_tile_pixel, tile_pixel
+from fujishadergpu_spark.operators import tile_kernels
 from fujishadergpu_spark.operators.tile_kernels import (
+    KERNELS,
+    LOCAL_STENCIL_KERNELS,
     build_pyramid,
+    kernel_halo,
     np_hillshade,
     pyramid_level,
     rasterize_tiles,
     tile_kernel,
     tile_kernel_stats,
+    tile_pixel_scales,
 )
 
 Z = 3  # 8x8 tiles -> 2048px world; test data spans tiles 3..4 only
@@ -195,10 +201,112 @@ def test_pyramid_level_mean_equals_world_block_mean(spark, points_df):
 def test_pyramid_unknown_agg_raises_at_plan_time(spark, points_df):
     """An unknown agg is refused when the plan is built — it must not
     silently average (only sum and mean exist)."""
-    import pytest
-
     base = rasterize_tiles(points_df, Z)
     with pytest.raises(ValueError, match="sum/mean"):
         pyramid_level(base, agg="max")
     with pytest.raises(ValueError, match="sum/mean"):
         build_pyramid(base, Z, 0, agg="max")
+
+
+def _window_grids(w: int, dtype) -> dict:
+    """Grids for the data-window tail: sparse shapes at every position
+    the window clips against, plus a dense, a NaN/negative and an
+    all-zero grid."""
+    rng = np.random.default_rng(7)
+    grids = {}
+    g = np.zeros((w, w), dtype)
+    g[w // 3, w // 5] = 1
+    grids["point"] = g
+    last, mid = w - 1, w // 2
+    spots = {
+        "corner_nw": (0, 0), "corner_ne": (0, last), "corner_sw": (last, 0), "corner_se": (last, last),
+        "edge_n": (0, mid), "edge_s": (last, mid), "edge_w": (mid, 0), "edge_e": (mid, last),
+    }
+    for name, yx in spots.items():
+        g = np.zeros((w, w), dtype)
+        g[yx] = 3
+        grids[name] = g
+    g = np.zeros((w, w), dtype)
+    g[100:104, 60:63] = rng.integers(1, 9, (4, 3))
+    grids["cluster"] = g
+    grids["dense"] = rng.integers(0, 4, (w, w)).astype(dtype)
+    g = np.zeros((w, w), dtype)
+    g[5, 7], g[200, 30], g[w - 2, w - 3], g[40, 41] = np.nan, -0.5, -3.0, -0.0
+    grids["nan_negative"] = g
+    grids["zero"] = np.zeros((w, w), dtype)
+    return grids
+
+
+@pytest.mark.parametrize("kernel", sorted(LOCAL_STENCIL_KERNELS) + ["blur"])
+def test_kernel_tail_data_window_bit_identical(kernel, monkeypatch):
+    """_kernel_tail runs a local stencil kernel on the grid's data
+    window and gives every other core pixel the kernel's flat value;
+    its output is bit-identical, dtype included, to the kernel run on
+    the whole halo grid, at both grid dtypes, with and without metric
+    pixel scales and log1p, and with a halo wider than the window's
+    dilation (data that never reaches the core). A kernel outside
+    LOCAL_STENCIL_KERNELS (blur) runs on the whole grid. No JVM."""
+    windows = []  # (window, grid side) per tail call
+    data_window = tile_kernels._data_window
+
+    def spy(grid, reach):
+        windows.append((data_window(grid, reach), grid.shape[0]))
+        return windows[-1][0]
+
+    monkeypatch.setattr(tile_kernels, "_data_window", spy)
+    fn, _ = KERNELS[kernel]
+    z, tile_y = 9, 200
+    for halo in (None, 8):
+        h = kernel_halo(kernel) if halo is None else halo
+        w = TILE_PX + 2 * h
+        for dtype in (np.float32, np.float64):
+            for metric_scale in (False, True) if kernel in LOCAL_STENCIL_KERNELS else (False,):
+                params = {"pixel_scale": tile_pixel_scales(tile_y, z)} if metric_scale else {}
+                for log_scale in (True, False):
+                    _, tail = tile_kernels._kernel_tail(kernel, z, halo, log_scale, metric_scale, {})
+                    for name, grid in _window_grids(w, dtype).items():
+                        with np.errstate(invalid="ignore", divide="ignore"):
+                            got = tail(grid, tile_y)
+                            want = fn(np.log1p(grid) if log_scale else grid, **params)[h : h + TILE_PX, h : h + TILE_PX]
+                        case = (halo, np.dtype(dtype).name, metric_scale, log_scale, name)
+                        assert got.dtype == want.dtype, case
+                        assert np.array_equal(got, want, equal_nan=True), case
+    whole = [win == (0, n, 0, n) for win, n in windows]
+    if kernel in LOCAL_STENCIL_KERNELS:
+        assert ((0, 0, 0, 0), TILE_PX + 2 * kernel_halo(kernel)) in windows  # all-zero grid: no kernel run
+        assert sum(whole) < len(whole) // 2  # the sparse grids ran on a window
+    else:
+        assert all(whole)
+
+
+def test_kernel_stats_float32_sparse_tiles_exact(spark):
+    """tile_kernel_stats at its default float32 dtype, on tiles holding
+    1-3 points: shade_sum, shade_max and lit_pixels equal exactly the
+    stats of the whole-grid NumPy kernel on rasterize_tiles' halo
+    grids, with and without metric_scale."""
+    z, h = 7, kernel_halo("hillshade")
+    rng = np.random.default_rng(11)
+    lat = rng.uniform(-60.0, 60.0, 150)
+    lon = rng.uniform(-180.0, 180.0, 150)
+    # a few tiles hold 2-3 points: copies nudged a few pixels away
+    lat = np.concatenate([lat, lat[:20] + rng.uniform(-0.02, 0.02, 20), lat[:8] + 0.03])
+    lon = np.concatenate([lon, lon[:20] + rng.uniform(-0.02, 0.02, 20), lon[:8] - 0.03])
+    pts = spark.createDataFrame(
+        [(i, float(a), float(b)) for i, (a, b) in enumerate(zip(lat, lon))], "id long, lat double, lon double"
+    )
+    w = TILE_PX + 2 * h
+    grids = {
+        (r["x"], r["y"]): np.frombuffer(r["grid"]).reshape(w, w).astype(np.float32)
+        for r in rasterize_tiles(pts, z, halo=h).collect()
+    }
+    assert np.median([g.sum() for g in grids.values()]) <= 2  # most tiles hold 1-3 points
+    for metric_scale in (False, True):
+        stats = tile_kernel_stats(pts, z, "hillshade", metric_scale=metric_scale).collect()
+        assert {(s["x"], s["y"]) for s in stats} == set(grids)
+        for s in stats:
+            params = {"pixel_scale": tile_pixel_scales(s["y"], z)} if metric_scale else {}
+            core = np_hillshade(np.log1p(grids[(s["x"], s["y"])]), **params)[h : h + TILE_PX, h : h + TILE_PX]
+            assert core.dtype == np.float32
+            assert s["shade_sum"] == float(core.sum(dtype=np.float64))
+            assert s["shade_max"] == float(core.max())
+            assert s["lit_pixels"] == int((core > 0.75).sum())

@@ -12,7 +12,15 @@ Usage:
   python tools/bench_ab.py probe <arm> <cycle> <log>   # run from PYTHONPATH=<tree>
   python tools/bench_ab.py drive --tree-a /tmp/ab_r3 --tree-b /tmp/ab_r4 \
       --cycles 8 --log /tmp/ab/ab_log.jsonl
+  python tools/bench_ab.py drive --perfbench tile_z9 --tree-a A --tree-b B \
+      --cycles 3 --log /tmp/ab/tile_z9.jsonl
   python tools/bench_ab.py analyze /tmp/ab/ab_log.jsonl
+
+--perfbench <workload> replaces the probe by the gated benchmark: each
+arm runs ``perfbench/run.py --workload <workload> --seed <cycle>
+--seconds 20 --trace 0`` from its own tree root, and the log keeps the
+run's result line. ``analyze`` then prints each pair's b/a ratio and
+each arm's median of pages_per_s, setup_s and worker_rss_mb.
 
 The probe runs the focused headline queries (2 reps each) + the
 1M-page PIP pipeline (2 reps) with bench.py's warmup recipe; each
@@ -111,7 +119,21 @@ def probe(arm: str, cycle: int, logfile: str) -> None:
     print("done", arm, cycle, out["queries"], out["pip"])
 
 
-def drive(tree_a: str, tree_b: str, cycles: int, log: str) -> None:
+def perfbench(arm: str, cycle: int, tree: str, workload: str, logfile: str):
+    """One gated-benchmark run from ``tree``'s root; appends its
+    result line (or None when the run printed none) to the log."""
+    cmd = [sys.executable, os.path.join(tree, "perfbench", "run.py"), "--workload", workload,
+           "--seed", str(cycle), "--seconds", "20", "--trace", "0"]
+    proc = subprocess.run(cmd, cwd=tree, timeout=900, capture_output=True, text=True)
+    lines = proc.stdout.strip().splitlines()
+    result = json.loads(lines[-1]) if proc.returncode == 0 and lines else None
+    with open(logfile, "a") as f:
+        f.write(json.dumps({"arm": arm, "cycle": cycle, "tree": tree,
+                            "workload": workload, "result": result}) + "\n")
+    return proc.returncode
+
+
+def drive(tree_a: str, tree_b: str, cycles: int, log: str, workload: str | None = None) -> None:
     if os.path.dirname(log):
         os.makedirs(os.path.dirname(log), exist_ok=True)
     open(log, "w").close()
@@ -125,11 +147,14 @@ def drive(tree_a: str, tree_b: str, cycles: int, log: str) -> None:
         for arm, tree in order:
             env = dict(os.environ, PYTHONPATH=tree)
             try:
-                rc = subprocess.call(
-                    [sys.executable, me, "probe", arm, str(c), log],
-                    env=env, timeout=900,
-                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
-                )
+                if workload:
+                    rc = perfbench(arm, c, tree, workload, log)
+                else:
+                    rc = subprocess.call(
+                        [sys.executable, me, "probe", arm, str(c), log],
+                        env=env, timeout=900,
+                        stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                    )
             except subprocess.TimeoutExpired:
                 # one pathological probe must not abort the whole
                 # bench window — record it and keep pairing
@@ -144,11 +169,50 @@ def _med(xs):
     return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
 
 
+PERFBENCH_METRICS = ("pages_per_s", "setup_s", "worker_rss_mb")
+
+
+def analyze_perfbench(rows: list[dict], a: str, b: str) -> None:
+    """Per pair: the b/a ratio of each metric; per arm: its median, the
+    runs whose every pass was correct, and the passes attempted and
+    failed."""
+    runs = defaultdict(dict)  # cycle -> arm -> metrics (None: no result)
+    passes = defaultdict(lambda: [0, 0, 0])  # arm -> [correct runs, attempted, failed]
+    for r in rows:
+        res = r["result"]
+        runs[r["cycle"]][r["arm"]] = res and {m: res["metrics"][m]["value"] for m in PERFBENCH_METRICS}
+        if res:
+            p = passes[r["arm"]]
+            p[0] += bool(res["correct"])
+            p[1] += res["attempted"]
+            p[2] += res["failed"]
+    print(f"workload {rows[0]['workload']}: b/a ratio per pair")
+    print(f"{'cycle':>5} " + " ".join(f"{m + ' ' + x:>20}" for m in PERFBENCH_METRICS for x in (a, b, "b/a")))
+    for c, arms in sorted(runs.items()):
+        if not (arms.get(a) and arms.get(b)):
+            print(f"{c:>5} missing result: {sorted(k for k, v in arms.items() if not v)}")
+            continue
+        cells = []
+        for m in PERFBENCH_METRICS:
+            x, y = arms[a][m], arms[b][m]
+            cells += [f"{x:20.1f}", f"{y:20.1f}", f"{y / x:20.3f}"]
+        print(f"{c:>5} " + " ".join(cells))
+    for arm in (a, b):
+        ms = [v[arm] for v in runs.values() if v.get(arm)]
+        meds = ", ".join(f"{m} {_med([x[m] for x in ms]):.1f}" for m in PERFBENCH_METRICS) if ms else "no runs"
+        cor, att, fail = passes[arm]
+        print(f"arm {arm} median over {len(ms)} runs: {meds}; "
+              f"runs correct {cor}/{len(ms)}, passes attempted {att}, failed {fail}")
+
+
 def analyze(logpath: str) -> None:
     rows = [json.loads(line) for line in open(logpath)]
     arms = sorted({r["arm"] for r in rows})
     assert len(arms) == 2, f"need exactly 2 arms, got {arms}"
     a, b = arms
+    if "workload" in rows[0]:
+        analyze_perfbench(rows, a, b)
+        return
     by = defaultdict(dict)
     for r in rows:
         extra = [("pip", r["pip"])] + ([("tile", r["tile"])] if "tile" in r else [])
@@ -182,8 +246,9 @@ def main():
         ap.add_argument("--tree-b", required=True)
         ap.add_argument("--cycles", type=int, default=8)
         ap.add_argument("--log", default="/tmp/ab/ab_log.jsonl")
+        ap.add_argument("--perfbench", metavar="WORKLOAD", help="run perfbench/run.py instead of the probe")
         args = ap.parse_args()
-        drive(args.tree_a, args.tree_b, args.cycles, args.log)
+        drive(args.tree_a, args.tree_b, args.cycles, args.log, args.perfbench)
     elif cmd == "analyze":
         analyze(sys.argv[2])
     else:
