@@ -11,7 +11,11 @@ All math is plain column arithmetic (floor / ln / tan) so it is
 A NumPy twin serves the per-tile kernels in operators.tile_kernels.
 
 Latitude is clamped to the WebMercator limit ±85.05112878 like every
-slippy-map implementation.
+slippy-map implementation, and an out-of-range pixel to the world
+edge. A point with a NULL or NaN coordinate has no tile: its tile and
+pixel columns are NULL (without that rule the clamps would place it
+at a world edge, since Spark's greatest/least skip NULL and NaN sorts
+above every double).
 """
 
 from __future__ import annotations
@@ -30,6 +34,11 @@ def _clamp_lat(lat: Column) -> Column:
     return F.greatest(F.lit(-MERC_LAT_MAX), F.least(F.lit(MERC_LAT_MAX), lat))
 
 
+def _located(lat: Column, lon: Column) -> Column:
+    """True iff both coordinates are neither NULL nor NaN."""
+    return lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
+
+
 def merc_xy_norm(lat: Column, lon: Column) -> tuple[Column, Column]:
     """Normalized WebMercator coordinates in [0, 1) x [0, 1)."""
     latc = _clamp_lat(lat)
@@ -43,21 +52,24 @@ def merc_xy_norm(lat: Column, lon: Column) -> tuple[Column, Column]:
 
 
 def tile_xy(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
-    """(x, y) tile indices at zoom z."""
+    """(x, y) tile indices at zoom z; NULL for a NULL or NaN coordinate."""
     n = float(1 << z)
     xn, yn = merc_xy_norm(lat, lon)
+    located = _located(lat, lon)
     x = F.least(F.lit((1 << z) - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(n))))
     y = F.least(F.lit((1 << z) - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(n))))
-    return x.cast("long"), y.cast("long")
+    return F.when(located, x).cast("long"), F.when(located, y).cast("long")
 
 
 def global_pixel(lat: Column, lon: Column, z: int) -> tuple[Column, Column]:
-    """(gx, gy): clamped world pixel at zoom z (tile g >> 8, pixel g & 255)."""
+    """(gx, gy): clamped world pixel at zoom z (tile g >> 8, pixel g & 255);
+    NULL for a NULL or NaN coordinate."""
     n_px = (1 << z) * TILE_PX
     xn, yn = merc_xy_norm(lat, lon)
-    gx = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(float(n_px))))).cast("long")
-    gy = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(float(n_px))))).cast("long")
-    return gx, gy
+    located = _located(lat, lon)
+    gx = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(xn * F.lit(float(n_px)))))
+    gy = F.least(F.lit(n_px - 1), F.greatest(F.lit(0), F.floor(yn * F.lit(float(n_px)))))
+    return F.when(located, gx).cast("long"), F.when(located, gy).cast("long")
 
 
 def tile_pixel(lat: Column, lon: Column, z: int) -> tuple[Column, Column, Column, Column]:
@@ -67,14 +79,16 @@ def tile_pixel(lat: Column, lon: Column, z: int) -> tuple[Column, Column, Column
 
 
 def tile_xy_sql(lat_expr: str, lon_expr: str, z: int) -> tuple[str, str]:
-    """DuckDB/ANSI-SQL twin of tile_xy (identical op order)."""
+    """DuckDB/ANSI-SQL twin of tile_xy (identical op order), with the
+    same contract: NULL for a NULL or NaN coordinate."""
     n = float(1 << z)
     nmax = (1 << z) - 1
     latc = f"greatest(-{MERC_LAT_MAX}, least({MERC_LAT_MAX}, {lat_expr}))"
     xn = f"(({lon_expr} + 180.0) / 360.0)"
     yn = f"((1.0 - ln(tan(radians({latc})) + 1.0 / cos(radians({latc}))) / pi()) / 2.0)"
-    x = f"least({nmax}, greatest(0, CAST(floor({xn} * {n}) AS BIGINT)))"
-    y = f"least({nmax}, greatest(0, CAST(floor({yn} * {n}) AS BIGINT)))"
+    located = f"NOT (isnan({lat_expr}) OR isnan({lon_expr}))"  # NULL input: NULL, so no tile
+    x = f"CASE WHEN {located} THEN least({nmax}, greatest(0, CAST(floor({xn} * {n}) AS BIGINT))) END"
+    y = f"CASE WHEN {located} THEN least({nmax}, greatest(0, CAST(floor({yn} * {n}) AS BIGINT))) END"
     return x, y
 
 

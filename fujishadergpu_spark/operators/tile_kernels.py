@@ -23,29 +23,36 @@ per-tile executor, ``_per_tile``. Its contract:
 
 - one shuffle: points explode to packed 16-byte (``_tk``, ``_gk``)
   rows (+ optional weight) and repartition on ``_tk``, so every row of
-  a tile lands in one partition;
+  a tile lands in one partition; a point with a NULL or NaN
+  coordinate has no tile and yields no row;
 - each partition is sorted on ``_tk`` and streamed through one
   ``mapInPandas``: each Arrow batch is split at ``_tk`` changes with
   NumPy, many tiles per batch, and a tile that straddles batches is
   carried into the next one (``_tile_batches``), so no pandas frame
   is built per tile;
-- per tile, the key is decoded to (x, y) once and the halo grid
-  accumulated once, in the operator's dtype (float64 everywhere
-  except tile_kernel_stats, whose default is float32);
-- the operator's emit turns (grid, x, y) into the columns after
-  (z, x, y): one output row per tile, or none when
-  ``skip_empty_core`` drops a tile that owns no points. Output frames
-  hold at most ``_FLUSH_ROWS`` rows.
+- the closed tiles of a batch go to the operator's emit at once, as
+  tile keys plus row spans (the batch emit). The census and rasterize
+  operators keep a per-tile emit: per tile the key is decoded to
+  (x, y) once and the halo grid accumulated once, in the operator's
+  dtype (float64 everywhere except tile_kernel_stats, whose default
+  is float32), and ``emit(grid, x, y)`` gives the columns after
+  (z, x, y);
+- one output row per tile, or none when ``skip_empty_core`` drops a
+  tile that owns no points. Output frames hold at most
+  ``_FLUSH_ROWS`` rows.
 
 The kernel operators share one kernel tail (``_kernel_tail``: log1p,
-per-tile metric pixel scale, kernel, core crop) and one stats reducer
-(``_tile_stats``) with void_fill_dist.tile_kernel_stats_filled. The
-tail runs a kernel only on the grid's data window: for the local
-stencil kernels (``LOCAL_STENCIL_KERNELS``, halo depth r) the bounding
-box of the nonzero pixels dilated by 2r+1, for every other kernel and
-for a dense tile the whole grid. Core pixels outside the window take
-the kernel's value on all-zero input; the core is bit-identical to the
-whole-grid run (the sub-tile analog of the A17 skip below).
+per-tile metric pixel scale, kernel, core crop, then a reduction:
+``_Stats`` or ``_Result``) with void_fill_dist.tile_kernel_stats_filled.
+For the local stencil kernels (``LOCAL_STENCIL_KERNELS``, halo depth
+r) it is one batched step per Arrow batch that computes only the 8x8
+core blocks whose slot (the block plus an r-pixel margin) holds data:
+the batch's points drop straight into canvases of slots, one kernel
+call per canvas, and every other block takes the kernel's value on
+all-zero input. A tile whose slots would cover its grid, a halo
+h < r and every other kernel take the whole-grid route. The core and
+its stats are bit-identical to the whole-grid run (the sub-tile analog
+of the A17 skip below).
 
 Determinism (SURVEY.md §7.3 hard part 3): rasterization accumulates
 integer counts (order-free) or sorts rows by (pixel, value) before
@@ -60,7 +67,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.tiles import TILE_PX, global_pixel
@@ -102,46 +109,35 @@ def explode_to_tiles(
     reference core/tile_processor.py:207-383).
 
     A point duplicates into a neighbor tile iff it falls inside that
-    tile's halo window — at halo<=255 that is at most the 8-neighbors,
-    expressed as a static array of candidate offsets + filter (JVM-
-    side; the ``_tk`` shuffle then routes duplicates to their tiles).
-    Tile x wraps (antimeridian); tile y clamps at the mercator edge.
+    tile's halo window — at halo<=255 that is at most the 8-neighbors:
+    two ``sequence`` explodes over the x and y tile offsets the point's
+    pixel reaches (JVM-side; the ``_tk`` shuffle then routes duplicates
+    to their tiles). Tile x wraps (antimeridian); tile y stops at the
+    mercator edge. A point with a NULL or NaN coordinate has no pixel
+    (``global_pixel``) and yields no row.
     """
     if not 0 <= halo < TILE_PX:
         raise ValueError("halo must be in [0, 256)")
     n_tiles = 1 << z
     gx, gy = global_pixel(F.col(lat_col), F.col(lon_col), z)
-    df = points.withColumns({"gx": gx, "gy": gy})
-
-    if halo == 0:
-        return df.withColumns(
-            {"tile_x": F.shiftright(F.col("gx"), 8), "tile_y": F.shiftright(F.col("gy"), 8)}
-        )
-
+    df = points.withColumns({"gx": gx, "gy": gy}).where(F.col("gx").isNotNull())
     tx = F.shiftright(F.col("gx"), 8)
     ty = F.shiftright(F.col("gy"), 8)
+    if halo == 0:
+        return df.withColumns({"tile_x": tx, "tile_y": ty})
+
     pxl = F.col("gx").bitwiseAND(F.lit(255))
     pyl = F.col("gy").bitwiseAND(F.lit(255))
-    cands = []
-    for dx in (-1, 0, 1):
-        for dy in (-1, 0, 1):
-            cond = F.lit(True)
-            if dx == -1:
-                cond = cond & (pxl < halo)
-            elif dx == 1:
-                cond = cond & (pxl >= TILE_PX - halo)
-            if dy == -1:
-                cond = cond & (pyl < halo)
-            elif dy == 1:
-                cond = cond & (pyl >= TILE_PX - halo)
-            ntx = F.pmod(tx + dx, F.lit(n_tiles))
-            nty = ty + dy
-            cand = F.when(cond & (nty >= 0) & (nty < n_tiles), F.struct(ntx.alias("tx"), nty.alias("ty")))
-            cands.append(cand)
-    df = df.withColumn("_t", F.explode(F.filter(F.array(*cands), lambda c: c.isNotNull())))
+
+    def offsets(low: Column, high: Column) -> Column:
+        return F.explode(F.sequence(F.when(low, -1).otherwise(0), F.when(high, 1).otherwise(0)))
+
+    df = df.withColumn("_dx", offsets(pxl < halo, pxl >= TILE_PX - halo)).withColumn(
+        "_dy", offsets((pyl < halo) & (ty > 0), (pyl >= TILE_PX - halo) & (ty < n_tiles - 1))
+    )
     return df.withColumns(
-        {"tile_x": F.col("_t.tx"), "tile_y": F.col("_t.ty")}
-    ).drop("_t")
+        {"tile_x": F.pmod(tx + F.col("_dx"), F.lit(n_tiles)), "tile_y": ty + F.col("_dy")}
+    ).drop("_dx", "_dy")
 
 
 # ------------------------- rasterization ----------------------------
@@ -241,64 +237,89 @@ def _core(a: np.ndarray, halo: int) -> np.ndarray:
     return a[halo : halo + TILE_PX, halo : halo + TILE_PX]
 
 
-def _tile_row(z: int, tx: int, ty: int, cols: dict) -> pd.DataFrame:
-    """One output row: (z, x, y) + an emit's column values."""
-    return pd.DataFrame({"z": [z], "x": [tx], "y": [ty], **{k: [v] for k, v in cols.items()}})
-
-
 # Output rows per yielded frame, at most: rasterize_tiles and
 # tile_kernel rows carry a 0.5 MB grid or result each, so a batch of
 # many small tiles must not become one huge frame.
 _FLUSH_ROWS = 64
 
 
-def _tile_batches(frames, z, halo, weight_col, emit, dtype=np.float64, skip_empty_core=False):
+def _tile_grids(keys, starts, arrs, z, halo, weight_col, dtype):
+    """(grid, tx, ty) per tile of a batch hand-over: each tile's halo
+    grid accumulated from its row span."""
+    ends = [*starts[1:].tolist(), arrs["_gk"].size]
+    weights = arrs.get(weight_col) if weight_col else None
+    for key, a, b in zip(keys.tolist(), starts.tolist(), ends):
+        tx, ty = key >> 32, key & _MASK32
+        w = None if weights is None else weights[a:b]
+        yield _accumulate_grid(arrs["_gk"][a:b], w, tx, ty, z, halo, dtype), tx, ty
+
+
+def _tile_batches(
+    frames, z, halo, weight_col, emit=None, dtype=np.float64, skip_empty_core=False, emit_batch=None,
+):
     """The per-tile body over a ``_tk``-sorted partition, as a pure
     generator: Arrow batches (pandas frames of ``_tk``, ``_gk`` [+
     weight] [+ core flag]) in, output frames of (z, x, y) + emit
     columns out.
 
-    Each batch is split at ``_tk`` changes; every run is one tile, or
-    a piece of one when a tile straddles batches. The last run of a
-    batch stays open and its chunks are concatenated once, when the
-    tile closes. One frame is yielded per batch that closed a tile,
-    and early once ``_FLUSH_ROWS`` rows are pending."""
-    cols = ["_gk"] + ([weight_col] if weight_col else []) + ([_CORE_FLAG] if skip_empty_core else [])
-    rows: list[dict] = []
-    open_tk, chunks = None, []
+    Each batch's last ``_tk`` run stays open (a tile may straddle
+    batches); its chunks are concatenated once, when the tile closes.
+    The closed tiles of a batch are handed over at once, as
+    ``emit_batch(keys, starts, arrs)``: the tile keys, the first row of
+    each tile and the column arrays, ``_tk``-sorted; it yields one row
+    dict (z, x, y + columns) per tile. A per-tile ``emit(grid, tx, ty)
+    -> {col: value}`` is wrapped into one over ``_tile_grids``.
+    skip_empty_core drops the tiles owning no row before the hand-over.
+    One frame is yielded per batch that closed a tile, and early once
+    ``_FLUSH_ROWS`` rows are pending."""
+    cols = ["_tk", "_gk"] + ([weight_col] if weight_col else []) + ([_CORE_FLAG] if skip_empty_core else [])
+    if emit_batch is None:
+        def emit_batch(keys, starts, arrs):
+            for grid, tx, ty in _tile_grids(keys, starts, arrs, z, halo, weight_col, dtype):
+                yield {"z": z, "x": tx, "y": ty, **emit(grid, tx, ty)}
 
-    def close():
-        tile = {c: np.concatenate([ch[c] for ch in chunks]) for c in cols}
-        if skip_empty_core and not tile[_CORE_FLAG].any():
-            return
-        tx, ty = open_tk >> 32, open_tk & _MASK32
-        grid = _accumulate_grid(tile["_gk"], tile.get(weight_col), tx, ty, z, halo, dtype)
-        rows.append({"z": z, "x": tx, "y": ty, **emit(grid, tx, ty)})
+    rows: list[dict] = []
 
     def frame():
         out = pd.DataFrame({k: [r[k] for r in rows] for k in rows[0]})
         rows.clear()
         return out
 
+    def close(chunks):
+        arrs = {c: np.concatenate([ch[c] for ch in chunks]) for c in cols}
+        tk = arrs["_tk"]
+        starts = np.flatnonzero(np.r_[True, tk[1:] != tk[:-1]])
+        if skip_empty_core:
+            owned = np.logical_or.reduceat(arrs[_CORE_FLAG], starts)
+            if not owned.any():
+                return
+            if not owned.all():
+                arrs = {c: v[np.repeat(owned, np.diff(np.r_[starts, tk.size]))] for c, v in arrs.items()}
+                tk = arrs["_tk"]
+                starts = np.flatnonzero(np.r_[True, tk[1:] != tk[:-1]])
+        for row in emit_batch(tk[starts], starts, arrs):
+            rows.append(row)
+            if len(rows) >= _FLUSH_ROWS:
+                yield frame()
+
+    open_chunks: list[dict] = []  # the open tile's rows
     for pdf in frames:
-        tk = pdf["_tk"].to_numpy(dtype=np.int64)
-        if not tk.size:
+        if not len(pdf):
             continue
-        arrs = {c: pdf[c].to_numpy() for c in cols}
-        bounds = [0, *(np.flatnonzero(tk[1:] != tk[:-1]) + 1).tolist(), tk.size]
-        for a, b in zip(bounds[:-1], bounds[1:]):
-            key = int(tk[a])
-            if key != open_tk:
-                if chunks:
-                    close()
-                    if len(rows) >= _FLUSH_ROWS:
-                        yield frame()
-                open_tk, chunks = key, []
-            chunks.append({c: v[a:b] for c, v in arrs.items()})
+        arrs = {c: pdf[c].to_numpy(dtype=np.int64) if c == "_tk" else pdf[c].to_numpy() for c in cols}
+        tk = arrs["_tk"]
+        change = np.flatnonzero(tk[1:] != tk[:-1])
+        last = int(change[-1]) + 1 if change.size else 0  # first row of the open run
+        if not last and (not open_chunks or open_chunks[0]["_tk"][0] == tk[0]):
+            open_chunks.append(arrs)  # the open tile goes on
+            continue
+        closed = open_chunks + ([{c: v[:last] for c, v in arrs.items()}] if last else [])
+        open_chunks = [{c: v[last:] for c, v in arrs.items()}]
+        yield from close(closed)
         if rows:
             yield frame()
-    if chunks:
-        close()
+    if open_chunks:
+        yield from close(open_chunks)
         if rows:
             yield frame()
 
@@ -309,26 +330,27 @@ def _per_tile(
     halo: int,
     weight_col: str | None,
     cols: str,
-    emit,
+    emit=None,
     dtype=np.float64,
     skip_empty_core: bool = False,
+    emit_batch=None,
 ) -> DataFrame:
     """The tile engine's one per-tile step: points -> one row per
     tile, schema (z, x, y) + ``cols``.
 
     One halo-exchange shuffle (``_packed_tiles``); each partition is
     sorted on ``_tk`` and streamed through ``mapInPandas``, many tiles
-    per Arrow batch (``_tile_batches``). Per tile the key is decoded to
-    (tx, ty) once, the halo grid is accumulated once in ``dtype``, and
-    ``emit(grid, tx, ty)`` returns the ``cols`` values as a dict.
-    skip_empty_core (A17) emits no row for a tile owning no points
-    (only halo spill-ins)."""
+    per Arrow batch (``_tile_batches``). A per-tile ``emit(grid, tx,
+    ty)`` gets each tile's halo grid, accumulated once in ``dtype``; a
+    batch emit (``emit_batch``) gets the closed tiles of one Arrow batch
+    at once. skip_empty_core (A17) emits no row for a tile owning no
+    points (only halo spill-ins)."""
     packed = _packed_tiles(points, z, halo, weight_col)
     if skip_empty_core:
         packed = _with_core_flag(packed)
 
     def fn(frames):
-        return _tile_batches(frames, z, halo, weight_col, emit, dtype, skip_empty_core)
+        return _tile_batches(frames, z, halo, weight_col, emit, dtype, skip_empty_core, emit_batch)
 
     return packed.sortWithinPartitions("_tk").mapInPandas(fn, f"{_TILE_KEY}, {cols}")
 
@@ -564,25 +586,239 @@ def kernel_halo(kernel: str, params: dict | None = None) -> int:
     return min(int(h), TILE_PX - 1)
 
 
-def _data_window(grid: np.ndarray, reach: int | None) -> tuple[int, int, int, int]:
-    """Grid rows [r0, r1) x columns [c0, c1): the bounding box of the
-    grid's data pixels dilated by ``reach`` and clipped to the grid;
-    the whole grid when reach is None, an empty box when no pixel holds
-    data. A data pixel is one whose bits are not +0.0, so NaN and -0.0
-    count. Row and column ``any`` reductions find the box: np.nonzero
-    on a 258² float32 grid costs more than the kernel time it saves."""
-    n0, n1 = grid.shape
-    if reach is None:
-        return 0, n0, 0, n1
-    data = grid.view(f"u{grid.itemsize}") != 0
-    rows = np.flatnonzero(data.any(axis=1))
-    if not rows.size:
-        return 0, 0, 0, 0
-    cols = np.flatnonzero(data[rows[0] : rows[-1] + 1].any(axis=0))
-    return (
-        max(rows[0] - reach, 0), min(rows[-1] + 1 + reach, n0),
-        max(cols[0] - reach, 0), min(cols[-1] + 1 + reach, n1),
-    )
+# The block engine of the local stencil kernels. A core splits into
+# 32 x 32 blocks of _B x _B pixels; a block's *slot* is the block plus
+# an r-pixel margin, so it holds every grid value its core pixels read.
+_B = 8
+_NB = TILE_PX // _B
+_CANVAS_SLOTS = 512  # slots per kernel call (a tile is never split)
+_CANVAS_COLS = 16  # slots per canvas row
+# core rows per NumPy reduction buffer: core.sum(dtype=float64) is the
+# in-order fold of the pairwise sums of 8192-pixel chunks
+# (np.getbufsize()), i.e. of 32-row bands of the core
+_SUM_ROWS = 32
+_SUM_CHUNKS = 8  # chunk buffers summed per call: 8 x 8192 float64
+
+
+def _canvas_shape(k: int) -> tuple[int, int]:
+    """(slot rows, slot columns) of a canvas holding k slots."""
+    cols = max(1, min(k, _CANVAS_COLS))
+    return -(-k // cols), cols
+
+
+class _Tail:
+    """One operator's kernel tail (see ``_kernel_tail``). ``points``
+    serves the point path, one call per Arrow batch; ``grids`` serves
+    grids built elsewhere (void fill). Both yield one row dict (z, x,
+    y + the reduction's columns) per tile."""
+
+    def __init__(self, fn, r, h, z, log_scale, metric_scale, kernel_params):
+        self.fn, self.h, self.z = fn, h, z
+        self.log_scale, self.metric_scale, self.kernel_params = log_scale, metric_scale, kernel_params
+        # the block engine needs h >= r: the slots then lie inside the
+        # grid, and the grid-edge one-sided differences reach no core
+        # pixel; r < _B / 2 keeps a pixel in at most 2 x 2 slots
+        self.r = r if r is not None and r <= h else None
+        self.s = None if self.r is None else _B + 2 * self.r  # slot side
+        self._flats: dict = {}  # (dtype, tile row | None) -> flat value
+
+    def _run(self, grid: np.ndarray, ty: int) -> np.ndarray:
+        """log1p (log_scale), the tile row's metric pixel scale
+        (metric_scale) and the kernel, on a grid or canvas."""
+        params = self.kernel_params
+        if self.metric_scale:
+            params = dict(params, pixel_scale=tile_pixel_scales(ty, self.z))
+        return self.fn(np.log1p(grid) if self.log_scale else grid, **params)
+
+    def _flat(self, dtype, ty: int):
+        """The kernel's value on all-zero input: that of every core
+        pixel with no data within r."""
+        key = (np.dtype(dtype), ty if self.metric_scale else None)
+        if key not in self._flats:
+            n = 2 * self.r + 1
+            self._flats[key] = self._run(np.zeros((n, n), dtype), ty)[self.r, self.r]
+        return self._flats[key]
+
+    def _whole(self, grid, tx, ty, reduce) -> dict:
+        """The whole-grid route: the kernel on the full halo grid."""
+        return {"z": self.z, "x": tx, "y": ty, **reduce.core(_core(self._run(grid, ty), self.h))}
+
+    def _slots(self, cy, cx):
+        """(index, block row, block column) of each (pixel, slot) pair:
+        every slot that core-relative pixel (cy, cx) lies in."""
+        r = self.r
+        y0, y1, x0, x1 = (cy - r) >> 3, (cy + r) >> 3, (cx - r) >> 3, (cx + r) >> 3
+        idx, bys, bxs = [], [], []
+        for by in (y0, y0 + 1):
+            in_y = (by <= y1) & (by >= 0) & (by < _NB)
+            for bx in (x0, x0 + 1):
+                i = np.flatnonzero(in_y & (bx <= x1) & (bx >= 0) & (bx < _NB))
+                idx.append(i)
+                bys.append(by[i])
+                bxs.append(bx[i])
+        return np.concatenate(idx), np.concatenate(bys), np.concatenate(bxs)
+
+    def _dense(self, gk, starts, rows, tx, ty) -> np.ndarray:
+        """Per tile: whether the core blocks holding one of its first
+        4 x limit rows (a lower bound of its slot count) already reach
+        the whole-grid route's limit, so a dense tile skips listing its
+        slots. Only a tile with rows enough to reach it is looked at (a
+        pixel lies in <= 4 slots)."""
+        limit = (TILE_PX + 2 * self.h) ** 2 / self.s**2
+        out = np.zeros(rows.size, bool)
+        if limit > _NB * _NB:
+            return out
+        for k in np.flatnonzero(rows * 4 >= limit).tolist():
+            g = gk[starts[k] : starts[k] + int(4 * limit)]
+            # a core row's global pixel lies in the tile itself: its
+            # block is bits 3-7 of gx and of gy
+            g = g[((g >> 40) == tx[k]) & (((g & _MASK32) >> 8) == ty[k])]
+            seen = np.zeros(_NB * _NB, bool)
+            seen[((g >> 3) & (_NB - 1)) * _NB + ((g >> 35) & (_NB - 1))] = True
+            out[k] = np.count_nonzero(seen) >= limit
+        return out
+
+    def _blocks(self, stack: np.ndarray, k: int, ty: int) -> np.ndarray:
+        """One kernel call over a canvas of slots: ``stack`` holds
+        _canvas_shape(k) slots (zeros past k); returns the k core
+        blocks (k, _B, _B)."""
+        if not k:
+            return np.empty((0, _B, _B), stack.dtype)
+        rows, cols = _canvas_shape(k)
+        s, r = self.s, self.r
+        canvas = stack.reshape(rows, cols, s, s).transpose(0, 2, 1, 3).reshape(rows * s, cols * s)
+        out = self._run(canvas, ty).reshape(rows, s, cols, s)[:, r : r + _B, :, r : r + _B]
+        return out.transpose(0, 2, 1, 3).reshape(rows * cols, _B, _B)[:k]
+
+    def points(self, keys, starts, gk, weights, dtype, reduce):
+        """The closed tiles of one Arrow batch (``_tile_batches``' hand-
+        over). A tile whose slots would cover at least its (256+2h)²
+        grid takes the whole-grid route; the rest are accumulated
+        straight into canvases of at most _CANVAS_SLOTS slots (one tile
+        row per canvas under metric_scale), with the arithmetic of
+        ``_accumulate_grid``: local pixel and keep rule, integer counts
+        cast to ``dtype``, or float64 weights added in (pixel, value)
+        order and cast."""
+        z, h, r, s = self.z, self.h, self.r, self.s
+        n = keys.size
+        txs, tys = keys >> 32, keys & _MASK32
+        tx, ty = txs.tolist(), tys.tolist()
+        gk = np.asarray(gk, dtype=np.int64)
+        ends = np.r_[starts[1:], gk.size]
+        rows = ends - starts
+        whole = np.ones(n, bool) if r is None else self._dense(gk, starts, rows, tx, ty)
+        if not whole.all():
+            # the other tiles' rows as core-relative pixels, and their slots
+            rest = np.flatnonzero(np.repeat(~whole, rows))
+            t = np.repeat(np.arange(n), np.where(whole, 0, rows))
+            g = gk[rest]
+            n_px = (1 << z) * TILE_PX
+            cx = ((g >> 32) - (txs * TILE_PX - h)[t]) % n_px - h
+            cy = (g & _MASK32) - (tys * TILE_PX - h)[t] - h
+            # a slot lies inside the grid (h >= r): its pixels pass the keep rule
+            i, by, bx = self._slots(cy, cx)
+            slot_keys, inv = np.unique((t[i] << 10) | (by << 5) | bx, return_inverse=True)
+            per_tile = np.bincount(slot_keys >> 10, minlength=n)
+            whole |= per_tile * s * s >= (TILE_PX + 2 * h) ** 2
+        for k in np.flatnonzero(whole).tolist():
+            a, b = starts[k], ends[k]
+            grid = _accumulate_grid(gk[a:b], None if weights is None else weights[a:b], tx[k], ty[k], z, h, dtype)
+            yield self._whole(grid, tx[k], ty[k], reduce)
+        sparse = np.flatnonzero(~whole)
+        if not sparse.size:
+            return
+
+        # slots and (pixel, slot) pairs in canvas order: by tile (by
+        # tile row first under metric_scale), then block
+        if self.metric_scale:
+            sparse = sparse[np.argsort(tys[sparse], kind="stable")]
+        rank = np.full(n, -1)
+        rank[sparse] = np.arange(sparse.size)
+        slot_rank = rank[slot_keys >> 10]
+        order = np.lexsort((slot_keys, slot_rank))
+        order = order[slot_rank[order] >= 0]
+        pos = np.full(slot_keys.size, -1)
+        pos[order] = np.arange(order.size)
+        pair_pos = pos[inv]
+        pairs = np.flatnonzero(pair_pos >= 0)
+        pairs = pairs[np.argsort(pair_pos[pairs], kind="stable")]
+        pair_pos, by, bx, i = pair_pos[pairs], by[pairs], bx[pairs], i[pairs]
+        # pixel index within the slot stack
+        pix = (cy[i] - (by * _B - r)) * s + cx[i] - (bx * _B - r)
+        vals = None if weights is None else np.asarray(weights[rest], dtype=np.float64)[i]
+
+        first_slot = np.r_[0, np.cumsum(per_tile[sparse])]
+        tile_row = tys[sparse].tolist()
+        for a, b in self._canvases(per_tile[sparse].tolist(), tile_row):
+            s0, s1 = first_slot[a], first_slot[b]
+            k = s1 - s0
+            p0, p1 = np.searchsorted(pair_pos, [s0, s1])
+            idx = (pair_pos[p0:p1] - s0) * (s * s) + pix[p0:p1]
+            size = int(np.prod(_canvas_shape(k))) * s * s
+            if vals is None:
+                stack = np.bincount(idx, minlength=size).astype(dtype)
+            else:
+                v = vals[p0:p1]
+                o = np.lexsort((v, idx))
+                stack = np.zeros(size)
+                np.add.at(stack, idx[o], v[o])
+                stack = stack.astype(dtype, copy=False)
+            tiles = sparse[a:b]
+            ks = slot_keys[order[s0:s1]]
+            blocks = self._blocks(stack, k, tile_row[a])
+            local = np.repeat(np.arange(b - a), per_tile[tiles])
+            flat = self._flat(dtype, tile_row[a])
+            cols = reduce.blocks(flat, local, (ks >> 5) & (_NB - 1), ks & (_NB - 1), blocks, b - a)
+            for kk, c in zip(tiles.tolist(), cols):
+                yield {"z": z, "x": tx[kk], "y": ty[kk], **c}
+
+    def _canvases(self, counts: list, tile_row: list):
+        """[a, b) runs of consecutive tiles, each one canvas: at most
+        _CANVAS_SLOTS slots unless one tile holds more, and one tile row
+        under metric_scale."""
+        a, used = 0, 0
+        for j, c in enumerate(counts):
+            if j > a and (used + c > _CANVAS_SLOTS or (self.metric_scale and tile_row[j] != tile_row[a])):
+                yield a, j
+                a, used = j, 0
+            used += c
+        yield a, len(counts)
+
+    def _slot_rows(self, data: np.ndarray) -> np.ndarray:
+        """(_NB, columns): per block row, whether the rows of its slot
+        hold data. ``data`` has the core's 256 rows plus r above and
+        below: slot row by spans data rows [8 by, 8 by + 8 + 2r)."""
+        r = self.r
+        out = data[r : r + TILE_PX].reshape(_NB, _B, -1).any(axis=1)
+        for d in range(r):
+            out |= data[d : d + TILE_PX : _B]
+            out |= data[_B + r + d :: _B]
+        return out
+
+    def grids(self, items, reduce):
+        """(grid, tx, ty) items, each a halo grid: the slots are those
+        holding a data pixel (bits not +0.0, so NaN and -0.0 count),
+        gathered from the grid."""
+        h, r, s = self.h, self.r, self.s
+        for grid, tx, ty in items:
+            if r is None:
+                yield self._whole(grid, tx, ty, reduce)
+                continue
+            data = grid[h - r : h + TILE_PX + r, h - r : h + TILE_PX + r].view(f"u{grid.itemsize}") != 0
+            by, bx = np.nonzero(self._slot_rows(self._slot_rows(data).T).T)
+            k = by.size
+            if k * s * s >= grid.shape[0] ** 2:
+                yield self._whole(grid, tx, ty, reduce)
+                continue
+            stack = np.zeros((int(np.prod(_canvas_shape(k))), s, s), grid.dtype)
+            ar = np.arange(s)
+            stack[:k] = grid[
+                (h - r + _B * by)[:, None, None] + ar[:, None], (h - r + _B * bx)[:, None, None] + ar
+            ]
+            blocks = self._blocks(stack, k, ty)
+            flat = self._flat(grid.dtype, ty)
+            (c,) = reduce.blocks(flat, np.zeros(k, np.int64), by, bx, blocks, 1)
+            yield {"z": self.z, "x": tx, "y": ty, **c}
 
 
 def _kernel_tail(
@@ -591,22 +827,23 @@ def _kernel_tail(
     """Resolve one kernel run for an operator: check the metric-scale
     arguments, resolve the halo, and return ``(h, tail)``.
 
-    ``tail(grid, tile_y)`` is the per-tile kernel tail, run on the
-    halo grid after any void fill: log1p (log_scale), the tile row's
-    metric pixel scale (metric_scale), the kernel, the core crop. It
+    ``tail`` (a ``_Tail``) runs log1p (log_scale), the tile row's
+    metric pixel scale (metric_scale), the kernel and the core crop,
+    and hands each core to a reduction (``_Stats``, ``_Result``). It
     is the one tail of tile_kernel, tile_kernel_stats, filled-tile
     synthesis and void_fill_dist.tile_kernel_stats_filled.
 
-    The tail runs on the grid's data window (``_data_window``), not on
-    the whole grid. For a LOCAL_STENCIL_KERNELS kernel of halo depth r
-    the window is the data's bounding box dilated by 2r+1; every other
-    kernel's window is the whole grid, and so is a dense tile's. A
-    core pixel outside the window reads only zeros within r, so it
-    takes the kernel's flat value: the same log1p, pixel scale and
-    kernel run on a tiny all-zero grid of the grid's dtype. Inside, a
-    pixel reads the same inputs through the same elementwise NumPy ops
-    as on the whole grid, so the core is bit-identical to the
-    whole-grid run."""
+    A LOCAL_STENCIL_KERNELS kernel of halo depth r runs on blocks, not
+    on whole grids: a core pixel reads only inputs within r, so an
+    8x8 core block needs only its slot (the block dilated by r). The
+    tail runs the kernel once per canvas of the slots that hold data,
+    laid side by side, and keeps each slot's inner block; every other
+    block reads only zeros and takes the kernel's flat value (the same
+    log1p, pixel scale and kernel on a tiny all-zero grid). A pixel
+    reads the same inputs through the same elementwise NumPy ops as
+    on the whole grid, so the core and its stats are bit-identical to
+    the whole-grid run. The whole-grid route stays for a tile whose
+    slots would cover its grid, for h < r and for every other kernel."""
     fn_kernel, spec = KERNELS[kernel]
     if metric_scale:
         if kernel not in METRIC_SCALE_KERNELS:
@@ -617,37 +854,8 @@ def _kernel_tail(
         if "pixel_scale" in kernel_params:
             raise ValueError("pass either metric_scale=True or an explicit pixel_scale, not both")
     h = kernel_halo(kernel, kernel_params) if halo is None else halo
-    reach = 2 * spec + 1 if kernel in LOCAL_STENCIL_KERNELS else None
-    flats: dict = {}  # (dtype, tile row | None) -> flat value
-
-    def run(grid: np.ndarray, params: dict) -> np.ndarray:
-        if log_scale:
-            grid = np.log1p(grid)
-        return fn_kernel(grid, **params)
-
-    def tail(grid: np.ndarray, tile_y: int) -> np.ndarray:
-        params = kernel_params
-        if metric_scale:
-            params = dict(kernel_params, pixel_scale=tile_pixel_scales(tile_y, z))
-        r0, r1, c0, c1 = _data_window(grid, reach)
-        # the window's cut of the core, in grid pixels
-        a0, a1 = max(r0, h), min(r1, h + TILE_PX)
-        b0, b1 = max(c0, h), min(c1, h + TILE_PX)
-        core = None
-        if a0 < a1 and b0 < b1:
-            win = run(grid[r0:r1, c0:c1], params)
-            core = win[a0 - r0 : a1 - r0, b0 - c0 : b1 - c0]
-            if core.shape == (TILE_PX, TILE_PX):
-                return core
-        key = (grid.dtype, tile_y if metric_scale else None)
-        if key not in flats:
-            flats[key] = run(np.zeros((reach, reach), grid.dtype), params)[reach // 2, reach // 2]
-        out = np.full((TILE_PX, TILE_PX), flats[key])
-        if core is not None:
-            out[a0 - h : a1 - h, b0 - h : b1 - h] = core
-        return out
-
-    return h, tail
+    r = spec if kernel in LOCAL_STENCIL_KERNELS else None
+    return h, _Tail(fn_kernel, r, h, z, log_scale, metric_scale, kernel_params)
 
 
 _STATS_COLS = "shade_sum double, shade_max double, lit_pixels long"
@@ -663,25 +871,99 @@ def _tile_stats(core: np.ndarray, lit_threshold: float) -> dict:
     }
 
 
+class _Result:
+    """tile_kernel's reduction: the whole 256² core."""
+
+    cols = "result array<double>"
+
+    def core(self, core: np.ndarray) -> dict:
+        return {"result": core.ravel()}
+
+    def blocks(self, flat, tile, by, bx, blocks, n):
+        """Per tile of a canvas: the flat core with its blocks pasted
+        in (``tile``: each block's tile, ascending)."""
+        at = np.searchsorted(tile, np.arange(n + 1))
+        for j in range(n):
+            core = np.full((TILE_PX, TILE_PX), flat)
+            a, b = at[j], at[j + 1]
+            core.reshape(_NB, _B, _NB, _B)[by[a:b], :, bx[a:b], :] = blocks[a:b]
+            yield self.core(core)
+
+
+class _Stats:
+    """tile_kernel_stats' reduction (``_tile_stats``), over blocks:
+    the same three values from the blocks and the flat value."""
+
+    cols = _STATS_COLS
+
+    def __init__(self, lit_threshold: float):
+        self.lit_threshold = lit_threshold
+        self._flat_sums: dict = {}
+
+    def core(self, core: np.ndarray) -> dict:
+        return _tile_stats(core, self.lit_threshold)
+
+    def blocks(self, flat, tile, by, bx, blocks, n) -> list[dict]:
+        outside = TILE_PX * TILE_PX - _B * _B * np.bincount(tile, minlength=n)
+        lit = np.bincount(tile, np.count_nonzero(blocks > self.lit_threshold, axis=(1, 2)), n)
+        lit = lit.astype(np.int64) + np.where(flat > self.lit_threshold, outside, 0)
+        # max: np.maximum keeps a NaN from either side
+        top = np.where(outside > 0, flat, -np.inf).astype(blocks.dtype)
+        np.maximum.at(top, tile, blocks.max(axis=(1, 2), initial=-np.inf))
+        return [
+            {"shade_sum": a, "shade_max": m, "lit_pixels": c}
+            for a, m, c in zip(self._sums(flat, tile, by, bx, blocks, n), top.tolist(), lit.tolist())
+        ]
+
+    def _sums(self, flat, tile, by, bx, blocks, n) -> list[float]:
+        """core.sum(dtype=float64) per tile: the 8 chunk sums, each of
+        its chunk (flat, blocks pasted) or memoized all-flat, folded in
+        order from 0.0 like NumPy's buffered reduction."""
+        per_chunk = _SUM_ROWS * TILE_PX
+        key = (np.asarray(flat).dtype.str, np.asarray(flat).tobytes())
+        if key not in self._flat_sums:
+            self._flat_sums[key] = np.add.reduce(np.full(per_chunk, flat, np.float64))
+        n_chunks = TILE_PX // _SUM_ROWS
+        sums = np.full((n, n_chunks), self._flat_sums[key])
+        band = _SUM_ROWS // _B  # block rows per chunk
+        chunks, at = np.unique(tile * n_chunks + by // band, return_inverse=True)
+        for c0 in range(0, chunks.size, _SUM_CHUNKS):
+            m = min(_SUM_CHUNKS, chunks.size - c0)
+            a, b = np.searchsorted(at, [c0, c0 + m])
+            buf = np.full((m, band, _B, _NB, _B), flat, np.float64)
+            buf[at[a:b] - c0, by[a:b] % band, :, bx[a:b], :] = blocks[a:b]
+            sums.flat[chunks[c0 : c0 + m]] = np.add.reduce(buf.reshape(m, per_chunk), axis=1)
+        # NumPy adds each chunk sum as (chunk + running): when both are
+        # NaN, the chunk's NaN (and its sign) wins
+        total = np.zeros(n)
+        for c in range(n_chunks):
+            total = sums[:, c] + total
+        return total.tolist()
+
+
 def _kernel_tiles(
-    points, z, h, weight_col, tail, fill_surface, reduce, cols, dtype=np.float64,
-    skip_empty_core=False,
+    points, z, h, weight_col, tail, fill_surface, reduce, dtype=np.float64, skip_empty_core=False,
 ) -> DataFrame:
-    """tile_kernel / tile_kernel_stats body: per tile, fill (if any)
-    -> kernel tail -> ``reduce(core)``, plus the synthesized rows of
-    fillable tiles that own no points."""
+    """tile_kernel / tile_kernel_stats body: per Arrow batch, the
+    kernel tail and ``reduce`` over its closed tiles, plus the
+    synthesized rows of fillable tiles that own no points. With a fill
+    surface each tile's halo grid is accumulated and filled first."""
 
-    def emit(grid, tx, ty):
+    def filled(items):
+        return tail.grids(((fill_surface.apply(g, tx, ty, z, h), tx, ty) for g, tx, ty in items), reduce)
+
+    def emit_batch(keys, starts, arrs):
         if fill_surface is not None:
-            grid = fill_surface.apply(grid, tx, ty, z, h)
-        return reduce(tail(grid, ty))
+            return filled(_tile_grids(keys, starts, arrs, z, h, weight_col, dtype))
+        return tail.points(keys, starts, arrs["_gk"], arrs.get(weight_col), dtype, reduce)
 
-    out = _per_tile(points, z, h, weight_col, cols, emit, dtype, skip_empty_core)
+    out = _per_tile(
+        points, z, h, weight_col, reduce.cols, dtype=dtype, skip_empty_core=skip_empty_core,
+        emit_batch=emit_batch,
+    )
     if fill_surface is None:
         return out
-    return out.unionByName(
-        _synth_filled_tiles(points, z, h, fill_surface, emit, f"{_TILE_KEY}, {cols}")
-    )
+    return out.unionByName(_synth_filled_tiles(points, z, h, fill_surface, filled, f"{_TILE_KEY}, {reduce.cols}"))
 
 
 def tile_kernel(
@@ -731,20 +1013,19 @@ def tile_kernel(
         # sparse tiles, fill wants to repair them), so refuse it.
         raise ValueError("skip_empty_core=True cannot be combined with fill_surface")
     return _kernel_tiles(
-        points, z, h, weight_col, tail, fill_surface,
-        lambda core: {"result": core.ravel()}, "result array<double>",
-        skip_empty_core=skip_empty_core,
+        points, z, h, weight_col, tail, fill_surface, _Result(), skip_empty_core=skip_empty_core,
     )
 
 
-def _synth_filled_tiles(points, z, h, fill_surface, emit, schema):
+def _synth_filled_tiles(points, z, h, fill_surface, filled, schema):
     """Kernel output for fillable tiles that own NO points (core or
     halo): such tiles have no shuffle rows, so the executor never sees
     them and the membrane would silently not materialize there (whole-tile
     enclosed voids). Candidates come from the broadcast surface
     (driver-enumerated, bounded), minus the tiles the point path
     already produced — deterministic, partition-independent. Each
-    runs the point path's ``emit`` on an all-zero float64 grid."""
+    runs the point path's ``filled`` step (fill, kernel tail, reduce)
+    on an all-zero float64 grid."""
     spark = points.sparkSession
     tks = fill_surface.fillable_tile_keys(z)
     if tks.size == 0:
@@ -758,11 +1039,8 @@ def _synth_filled_tiles(points, z, h, fill_surface, emit, schema):
 
     def fn_missing(it):
         for pdf in it:
-            rows = []
-            for tk in pdf["_tk"].astype("int64"):
-                tx, ty = int(tk) >> 32, int(tk) & _MASK32
-                rows.append({"z": z, "x": tx, "y": ty, **emit(np.zeros((w, w)), tx, ty)})
-            yield pd.DataFrame(rows)
+            tks = pdf["_tk"].astype("int64").tolist()
+            yield pd.DataFrame(list(filled((np.zeros((w, w)), tk >> 32, tk & _MASK32) for tk in tks)))
 
     return missing.mapInPandas(fn_missing, schema)
 
@@ -795,8 +1073,7 @@ def tile_kernel_stats(
     normalize_acctbal's oracle-only exact percentile)."""
     h, tail = _kernel_tail(kernel, z, halo, log_scale, metric_scale, kernel_params)
     return _kernel_tiles(
-        points, z, h, weight_col, tail, fill_surface,
-        lambda core: _tile_stats(core, lit_threshold), _STATS_COLS,
+        points, z, h, weight_col, tail, fill_surface, _Stats(lit_threshold),
         dtype=np.float32 if grid_dtype is None else grid_dtype,
     )
 

@@ -74,14 +74,12 @@ from .np_filters import (
 )
 from .tile_kernels import (
     _MASK32,
-    _STATS_COLS,
     _TILE_KEY,
+    _Stats,
     _accumulate_grid,
     _kernel_tail,
     _packed_tiles,
     _parent_tiles,
-    _tile_row,
-    _tile_stats,
     pack_grid,
     rasterize_tiles,
     unpack_grid,
@@ -409,6 +407,7 @@ def tile_kernel_stats_filled(
 
     # ---- kernel: point rows cogrouped with membrane pieces ----
     dt = np.float32 if grid_dtype is None else grid_dtype
+    stats = _Stats(lit_threshold)
 
     def run(key, pdf: pd.DataFrame, pc: pd.DataFrame) -> pd.DataFrame:
         tk = int(key[0])
@@ -421,10 +420,10 @@ def tile_kernel_stats_filled(
             grid = np.zeros((w, w))
         if len(pc):
             grid = _fill_tile(grid, tx, ty, z, h, bc_cls.value, zcls, zc, partial(_sample_patch, pc))
-        return _tile_row(z, tx, ty, _tile_stats(tail(grid, ty), lit_threshold))
+        return pd.DataFrame(list(tail.grids([(grid, tx, ty)], stats)))
 
     return (
         pts.groupBy("_tk")
         .cogroup(pieces.groupBy("tk"))
-        .applyInPandas(run, f"{_TILE_KEY}, {_STATS_COLS}")
+        .applyInPandas(run, f"{_TILE_KEY}, {stats.cols}")
     )

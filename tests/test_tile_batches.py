@@ -160,3 +160,58 @@ def test_tiny_arrow_batches_match_default(spark, points_df, op):
         spark.conf.set(key, old)
     assert tiny == default
     assert len(default) > 10
+
+
+def test_block_engine_across_small_arrow_batches(spark):
+    """97-record Arrow batches cut dense and sparse tiles across
+    batches; tile_kernel_stats (float32) and tile_kernel (float64),
+    with and without metric_scale and a weight column, equal the
+    NumPy kernel on the whole halo grids of rasterize_tiles."""
+    from fujishadergpu_spark.operators.tile_kernels import (
+        kernel_halo,
+        np_hillshade,
+        rasterize_tiles,
+        tile_kernel,
+        tile_kernel_stats,
+        tile_pixel_scales,
+        unpack_grid,
+    )
+
+    z = 6
+    rng = np.random.default_rng(12)
+    lat = np.concatenate([
+        rng.uniform(-60.0, 60.0, 300),  # sparse tiles
+        rng.uniform(32.0, 36.5, 2500),  # tile (56, 25) dense: the whole-grid route
+        35.0 + rng.uniform(0.0, 0.05, 40),  # a cluster
+    ])
+    lon = np.concatenate([rng.uniform(-180.0, 180.0, 300), rng.uniform(135.05, 140.55, 2500), 139.0 + rng.uniform(0.0, 0.05, 40)])
+    pts = spark.createDataFrame(
+        [(i, float(a), float(b), (i % 7) * 0.5 - 0.25) for i, (a, b) in enumerate(zip(lat, lon))],
+        "id long, lat double, lon double, w double",
+    )
+    h = kernel_halo("hillshade")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for weight_col in (None, "w"):
+        grids = {
+            (r["x"], r["y"]): unpack_grid(r["grid"], TILE_PX + 2 * h)
+            for r in rasterize_tiles(pts, z, h, weight_col).collect()
+        }
+        assert np.count_nonzero(grids[(56, 25)]) > 2000
+        old = spark.conf.get(key)
+        spark.conf.set(key, "97")
+        try:
+            for metric_scale in (False, True):
+                stats = tile_kernel_stats(pts, z, weight_col=weight_col, metric_scale=metric_scale).collect()
+                cores = tile_kernel(pts, z, weight_col=weight_col, metric_scale=metric_scale).collect()
+                assert {(s["x"], s["y"]) for s in stats} == set(grids) == {(c["x"], c["y"]) for c in cores}
+                for s, c in zip(stats, cores):
+                    params = {"pixel_scale": tile_pixel_scales(c["y"], z)} if metric_scale else {}
+                    with np.errstate(invalid="ignore", divide="ignore"):
+                        core = np_hillshade(np.log1p(grids[(c["x"], c["y"])]), **params)[h:-h, h:-h]
+                        core32 = np_hillshade(np.log1p(grids[(s["x"], s["y"])].astype(np.float32)), **params)[h:-h, h:-h]
+                    assert np.array_equal(np.asarray(c["result"]), core.ravel(), equal_nan=True)
+                    want = (float(core32.sum(dtype=np.float64)), float(core32.max()), int((core32 > 0.75).sum()))
+                    got = (s["shade_sum"], s["shade_max"], s["lit_pixels"])
+                    assert np.array_equal(np.array(got, float), np.array(want, float), equal_nan=True), (s, want)
+        finally:
+            spark.conf.set(key, old)

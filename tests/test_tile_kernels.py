@@ -208,75 +208,155 @@ def test_pyramid_unknown_agg_raises_at_plan_time(spark, points_df):
         build_pyramid(base, Z, 0, agg="max")
 
 
-def _window_grids(w: int, dtype) -> dict:
-    """Grids for the data-window tail: sparse shapes at every position
-    the window clips against, plus a dense, a NaN/negative and an
-    all-zero grid."""
+_MZ = 9  # zoom of the JVM-free engine matrix
+
+
+def _fixture_tiles(w: int, dense: bool) -> list:
+    """(name, local pixels (ly, lx)) per tile of the engine matrix, in
+    grid coordinates of a (w, w) halo grid: one point, points on every
+    grid edge and corner, halo-only points, a cluster, two far-apart
+    points, three scattered tiles whose slots overflow one canvas, a
+    tile whose rows all fall outside its grid (all zero), and a dense
+    tile that takes the whole-grid route."""
     rng = np.random.default_rng(7)
-    grids = {}
-    g = np.zeros((w, w), dtype)
-    g[w // 3, w // 5] = 1
-    grids["point"] = g
     last, mid = w - 1, w // 2
-    spots = {
-        "corner_nw": (0, 0), "corner_ne": (0, last), "corner_sw": (last, 0), "corner_se": (last, last),
-        "edge_n": (0, mid), "edge_s": (last, mid), "edge_w": (mid, 0), "edge_e": (mid, last),
-    }
-    for name, yx in spots.items():
-        g = np.zeros((w, w), dtype)
-        g[yx] = 3
-        grids[name] = g
-    g = np.zeros((w, w), dtype)
-    g[100:104, 60:63] = rng.integers(1, 9, (4, 3))
-    grids["cluster"] = g
-    grids["dense"] = rng.integers(0, 4, (w, w)).astype(dtype)
-    g = np.zeros((w, w), dtype)
-    g[5, 7], g[200, 30], g[w - 2, w - 3], g[40, 41] = np.nan, -0.5, -3.0, -0.0
-    grids["nan_negative"] = g
-    grids["zero"] = np.zeros((w, w), dtype)
-    return grids
+    h = (w - TILE_PX) // 2
+    tiles = [
+        ("point", [(w // 3, w // 5)]),
+        ("edges", [(0, 0), (0, last), (last, 0), (last, last), (0, mid), (last, mid), (mid, 0), (mid, last)]),
+        ("halo_only", [(h - 1, mid), (mid, h + TILE_PX), (0, 3), (h // 2, last - 1)]),
+        ("cluster", [(100 + a, 60 + b) for a in range(4) for b in range(3) for _ in range(1 + (a * b) % 3)]),
+        ("far_pair", [(h + 3, h + 4), (h + 250, h + 249)]),
+        *[(f"scatter{k}", list(zip(*rng.integers(0, w, (2, 160)).tolist()))) for k in range(3)],
+        ("outside", [(-5, 3), (w + 9, mid)]),
+    ]
+    if dense:
+        tiles.append(("dense", list(zip(*rng.integers(0, w, (2, 3000)).tolist()))))
+    return tiles
+
+
+def _fixture_rows(h: int, dense: bool, weighted: bool):
+    """The matrix fixtures as one Arrow batch's hand-over: tile keys,
+    row spans, packed ``_gk`` and weights (NaN, negative, -0.0 and zero
+    included), over four tile rows."""
+    w = TILE_PX + 2 * h
+    rng = np.random.default_rng(8)
+    keys, starts, gk, names = [], [], [], []
+    for j, (name, pix) in enumerate(_fixture_tiles(w, dense)):
+        tx, ty = 100 + j, 200 + j % 4
+        ly, lx = np.array(pix).T
+        keys.append((tx << 32) + ty)
+        starts.append(sum(map(len, gk)))
+        gk.append(((tx * TILE_PX - h + lx) << 32) + ty * TILE_PX - h + ly)
+        names.append(name)
+    gk = np.concatenate(gk)
+    weights = None
+    if weighted:
+        weights = rng.choice([np.nan, -1.5, -0.0, 0.0, 0.5, 2.25, 7.0], gk.size)
+        weights[starts[names.index("point")]] = 0.0  # a tile that sums to zero
+    return np.array(keys), np.array(starts), gk, weights, names
+
+
+def _bits(a) -> bytes:
+    return np.asarray(a).tobytes()
 
 
 @pytest.mark.parametrize("kernel", sorted(LOCAL_STENCIL_KERNELS) + ["blur"])
-def test_kernel_tail_data_window_bit_identical(kernel, monkeypatch):
-    """_kernel_tail runs a local stencil kernel on the grid's data
-    window and gives every other core pixel the kernel's flat value;
-    its output is bit-identical, dtype included, to the kernel run on
-    the whole halo grid, at both grid dtypes, with and without metric
-    pixel scales and log1p, and with a halo wider than the window's
-    dilation (data that never reaches the core). A kernel outside
-    LOCAL_STENCIL_KERNELS (blur) runs on the whole grid. No JVM."""
-    windows = []  # (window, grid side) per tail call
-    data_window = tile_kernels._data_window
-
-    def spy(grid, reach):
-        windows.append((data_window(grid, reach), grid.shape[0]))
-        return windows[-1][0]
-
-    monkeypatch.setattr(tile_kernels, "_data_window", spy)
+def test_kernel_tail_data_window_bit_identical(kernel):
+    """The kernel tail computes only over the 8x8 blocks that hold data
+    (one kernel call per canvas of slots) and keeps the whole-grid run
+    for dense tiles and for every kernel outside LOCAL_STENCIL_KERNELS
+    (blur). Over both grid dtypes, log_scale, metric_scale, counts and
+    weights, halos equal to and wider than the kernel's depth, and
+    both entry points (one Arrow batch of points; filled grids), every
+    stats column and tile_kernel's core equal, bit for bit, those of
+    the kernel on the whole halo grid. No JVM."""
     fn, _ = KERNELS[kernel]
-    z, tile_y = 9, 200
     for halo in (None, 8):
         h = kernel_halo(kernel) if halo is None else halo
-        w = TILE_PX + 2 * h
         for dtype in (np.float32, np.float64):
             for metric_scale in (False, True) if kernel in LOCAL_STENCIL_KERNELS else (False,):
-                params = {"pixel_scale": tile_pixel_scales(tile_y, z)} if metric_scale else {}
                 for log_scale in (True, False):
-                    _, tail = tile_kernels._kernel_tail(kernel, z, halo, log_scale, metric_scale, {})
-                    for name, grid in _window_grids(w, dtype).items():
-                        with np.errstate(invalid="ignore", divide="ignore"):
-                            got = tail(grid, tile_y)
-                            want = fn(np.log1p(grid) if log_scale else grid, **params)[h : h + TILE_PX, h : h + TILE_PX]
-                        case = (halo, np.dtype(dtype).name, metric_scale, log_scale, name)
-                        assert got.dtype == want.dtype, case
-                        assert np.array_equal(got, want, equal_nan=True), case
-    whole = [win == (0, n, 0, n) for win, n in windows]
-    if kernel in LOCAL_STENCIL_KERNELS:
-        assert ((0, 0, 0, 0), TILE_PX + 2 * kernel_halo(kernel)) in windows  # all-zero grid: no kernel run
-        assert sum(whole) < len(whole) // 2  # the sparse grids ran on a window
-    else:
-        assert all(whole)
+                    for weighted in (False, True):
+                        _check_engine_matrix(
+                            fn, kernel, halo, h, dtype, metric_scale, log_scale, weighted,
+                            dense=halo is None and not weighted,
+                        )
+
+
+def _check_engine_matrix(fn, kernel, halo, h, dtype, metric_scale, log_scale, weighted, dense):
+    keys, starts, gk, weights, names = _fixture_rows(h, dense, weighted)
+    _, tail = tile_kernels._kernel_tail(kernel, _MZ, halo, log_scale, metric_scale, {})
+    stats = tile_kernels._Stats(0.75)
+    ends = np.r_[starts[1:], gk.size]
+    want, grids = {}, []
+    with np.errstate(invalid="ignore", divide="ignore", over="ignore"):
+        for key, a, b in zip(keys.tolist(), starts, ends):
+            tx, ty = key >> 32, key & 0xFFFFFFFF
+            grid = tile_kernels._accumulate_grid(gk[a:b], None if weights is None else weights[a:b], tx, ty, _MZ, h, dtype)
+            params = {"pixel_scale": tile_pixel_scales(ty, _MZ)} if metric_scale else {}
+            core = tile_kernels._core(fn(np.log1p(grid) if log_scale else grid, **params), h)
+            want[(tx, ty)] = (core, tile_kernels._tile_stats(core, 0.75))
+            grids.append((grid, tx, ty))
+        # a filled grid may hold -0.0 and NaN pixels: both are data
+        grid = np.zeros_like(grids[0][0])
+        grid[h + 5, h + 7], grid[h + 40, h + 41], grid[2, h + 100] = np.nan, -0.0, -3.0
+        core = tile_kernels._core(fn(np.log1p(grid) if log_scale else grid, **params), h)
+        want[(1, ty)] = (core, tile_kernels._tile_stats(core, 0.75))
+        grids.append((grid, 1, ty))
+        got = {
+            "points_stats": list(tail.points(keys, starts, gk, weights, dtype, stats)),
+            "points_core": list(tail.points(keys, starts, gk, weights, dtype, tile_kernels._Result())),
+            "grids_stats": list(tail.grids(grids, stats)),
+            "grids_core": list(tail.grids(grids, tile_kernels._Result())),
+        }
+    case = (kernel, halo, np.dtype(dtype).name, metric_scale, log_scale, weighted)
+    for route, rows in got.items():
+        assert len(rows) == len(grids) - route.startswith("points"), (case, route)
+        for row in rows:
+            core, st = want[(row["x"], row["y"])]
+            where = (case, route, row["x"], names[row["x"] - 100] if row["x"] >= 100 else "signed")
+            assert row["z"] == _MZ
+            if route.endswith("core"):
+                assert row["result"].dtype == core.dtype, where
+                assert _bits(row["result"]) == _bits(core.ravel()), where
+            else:
+                for col in ("shade_sum", "shade_max", "lit_pixels"):
+                    assert _bits(row[col]) == _bits(st[col]), (where, col, row[col], st[col])
+
+
+def test_block_sum_folds_numpy_chunk_sums():
+    """shade_sum over blocks is the in-order fold of the 8,192-pixel
+    chunk sums, which is how NumPy buffers ``core.sum(dtype=float64)``
+    (np.getbufsize()): on random sparse float32 and float64 cores it
+    equals that sum bit for bit, NaN sign included, so a NumPy release
+    that buffers or adds differently fails here."""
+    rng = np.random.default_rng(3)
+    stats = tile_kernels._Stats(0.75)
+    nb = TILE_PX // 8
+    for trial in range(300):
+        dtype = (np.float32, np.float64)[trial % 2]
+        n = int(rng.integers(1, 6))
+        flat = dtype(rng.choice([0.0, 0.7071, rng.standard_normal()]))
+        counts = rng.integers(0, 40, n) if trial % 3 else rng.integers(0, nb * nb, n)
+        tile = np.repeat(np.arange(n), counts)
+        by, bx = [], []
+        for c in counts:
+            picked = rng.choice(nb * nb, c, replace=False)
+            picked.sort()
+            by.append(picked // nb)
+            bx.append(picked % nb)
+        by, bx = np.concatenate(by).astype(np.int64), np.concatenate(bx).astype(np.int64)
+        blocks = (rng.standard_normal((tile.size, 8, 8)) * 10.0 ** rng.uniform(-3, 3, (tile.size, 1, 1))).astype(dtype)
+        if trial % 5 == 0 and blocks.size:
+            # NaNs of both signs (a kernel makes -NaN, a NaN weight +NaN) and -0.0
+            blocks.flat[rng.integers(0, blocks.size, 6)] = [np.nan, -np.nan, np.nan, -np.nan, -0.0, -0.0]
+        sums = stats._sums(flat, tile, by, bx, blocks, n)
+        for j in range(n):
+            core = np.full((TILE_PX, TILE_PX), flat)
+            m = tile == j
+            core.reshape(nb, 8, nb, 8)[by[m], :, bx[m], :] = blocks[m]
+            assert _bits(sums[j]) == _bits(core.sum(dtype=np.float64)), (trial, j)
 
 
 def test_kernel_stats_float32_sparse_tiles_exact(spark):

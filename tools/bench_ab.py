@@ -19,8 +19,12 @@ Usage:
 --perfbench <workload> replaces the probe by the gated benchmark: each
 arm runs ``perfbench/run.py --workload <workload> --seed <cycle>
 --seconds 20 --trace 0`` from its own tree root, and the log keeps the
-run's result line. ``analyze`` then prints each pair's b/a ratio and
-each arm's median of pages_per_s, setup_s and worker_rss_mb.
+run's result line. ``analyze`` then prints each pair's b/a ratio,
+each arm's q1, median and q3 of pages_per_s, setup_s and
+worker_rss_mb, and per metric the gain rule's verdict for b over a:
+b wins (in the metric's better direction; ties count for neither) at
+least nine tenths of all pairs run, and the medians differ by more
+than arm a's interquartile range.
 
 The probe runs the focused headline queries (2 reps each) + the
 1M-page PIP pipeline (2 reps) with bench.py's warmup recipe; each
@@ -35,6 +39,7 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
@@ -163,19 +168,34 @@ def drive(tree_a: str, tree_b: str, cycles: int, log: str, workload: str | None 
     print("AB_DONE")
 
 
-def _med(xs):
-    s = sorted(xs)
-    n = len(s)
-    return s[n // 2] if n % 2 else (s[n // 2 - 1] + s[n // 2]) / 2
+# each gated metric and its better direction (+1: higher is better)
+PERFBENCH_METRICS = {"pages_per_s": 1, "setup_s": -1, "worker_rss_mb": -1}
 
 
-PERFBENCH_METRICS = ("pages_per_s", "setup_s", "worker_rss_mb")
+def _quartiles(xs: list[float]) -> tuple[float, float, float]:
+    if len(xs) < 2:
+        return xs[0], xs[0], xs[0]
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def gain_verdict(pairs: list[tuple[float, float] | None], better: int) -> dict:
+    """The gain rule for arm b over arm a on one metric: b wins at
+    least nine tenths of all pairs run (a pair with a missing run is
+    no win, a tie counts for neither), and the medians differ in the
+    better direction by more than arm a's interquartile range."""
+    done = [p for p in pairs if p]
+    wins = sum(better * (y - x) > 0 for x, y in done)
+    q1, med_a, q3 = _quartiles([x for x, _ in done])
+    diff = better * (statistics.median([y for _, y in done]) - med_a)
+    return {"wins": wins, "pairs": len(pairs), "diff": diff, "iqr_a": q3 - q1,
+            "gain": wins >= 0.9 * len(pairs) and diff > q3 - q1}
 
 
 def analyze_perfbench(rows: list[dict], a: str, b: str) -> None:
-    """Per pair: the b/a ratio of each metric; per arm: its median, the
-    runs whose every pass was correct, and the passes attempted and
-    failed."""
+    """Per pair: the b/a ratio of each metric; per arm: q1, median and
+    q3, the runs whose every pass was correct, and the passes
+    attempted and failed; per metric: the gain rule's verdict."""
     runs = defaultdict(dict)  # cycle -> arm -> metrics (None: no result)
     passes = defaultdict(lambda: [0, 0, 0])  # arm -> [correct runs, attempted, failed]
     for r in rows:
@@ -199,10 +219,18 @@ def analyze_perfbench(rows: list[dict], a: str, b: str) -> None:
         print(f"{c:>5} " + " ".join(cells))
     for arm in (a, b):
         ms = [v[arm] for v in runs.values() if v.get(arm)]
-        meds = ", ".join(f"{m} {_med([x[m] for x in ms]):.1f}" for m in PERFBENCH_METRICS) if ms else "no runs"
+        qs = ", ".join(
+            f"{m} {'/'.join(f'{q:.1f}' for q in _quartiles([x[m] for x in ms]))}" for m in PERFBENCH_METRICS
+        ) if ms else "no runs"
         cor, att, fail = passes[arm]
-        print(f"arm {arm} median over {len(ms)} runs: {meds}; "
+        print(f"arm {arm} q1/median/q3 over {len(ms)} runs: {qs}; "
               f"runs correct {cor}/{len(ms)}, passes attempted {att}, failed {fail}")
+    for m, better in PERFBENCH_METRICS.items():
+        pairs = [(v[a][m], v[b][m]) if v.get(a) and v.get(b) else None for _, v in sorted(runs.items())]
+        v = gain_verdict(pairs, better)
+        word = "higher" if better > 0 else "lower"
+        print(f"{m}: {b} {word} in {v['wins']}/{v['pairs']} pairs; median difference {v['diff']:+.1f} "
+              f"({word} is better) vs {a}'s IQR {v['iqr_a']:.1f}: {'GAIN' if v['gain'] else 'no gain'}")
 
 
 def analyze(logpath: str) -> None:
@@ -229,8 +257,8 @@ def analyze(logpath: str) -> None:
         xs = [p[0] for p in pairs]
         ys = [p[1] for p in pairs]
         ds = [round(y - x, 2) for x, y in pairs]
-        print(f"{name:24} {min(xs):8.2f} {_med(xs):8.2f} {min(ys):8.2f} {_med(ys):8.2f} "
-              f"{_med(ds):13.2f}  {ds}")
+        print(f"{name:24} {min(xs):8.2f} {statistics.median(xs):8.2f} {min(ys):8.2f} {statistics.median(ys):8.2f} "
+              f"{statistics.median(ds):13.2f}  {ds}")
 
 
 def main():
