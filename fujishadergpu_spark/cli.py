@@ -31,12 +31,10 @@ from pyspark.sql import functions as F
 from .functions import cells, geoparse
 from .operators.pip_join import pip_join
 from .operators.tile_kernels import tile_kernel_stats
-from .plans.lineage import LineageLog, run_stage_idempotent
+from .plans.lineage import LineageLog, bucket, read_parquet_or_none, run_stage_idempotent
 from .session import get_spark
 from .sources.pages import pages as gen_pages
 from .sources.polygons import polygons as gen_polygons
-
-N_BUCKETS = 64  # lineage partition-key buckets per stage
 
 
 def validate_fanout(
@@ -82,7 +80,7 @@ def run_pipeline(spark, pages_path: str, out_root: str, zoom: int = 8, run_id: s
         F.xxhash64("url").alias("id"), F.col("url"), "lat", "lon",
         cells.cell_of(F.col("lat"), F.col("lon"), 7).alias("cell_id"),
     )
-    pts_keyed = pts.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(N_BUCKETS)))
+    pts_keyed = pts.withColumn("bucket", bucket("url"))
     summary["points"] = run_stage_idempotent(
         spark, pts_keyed, "bucket", f"{out_root}/points", lineage, "points", run_id
     )
@@ -90,15 +88,13 @@ def run_pipeline(spark, pages_path: str, out_root: str, zoom: int = 8, run_id: s
     pts_back = spark.read.parquet(f"{out_root}/points")
     pol = gen_polygons(spark)
     joined = pip_join(pts_back, pol).select("id", "polygon_id", "lat", "lon")
-    joined_keyed = joined.withColumn("bucket", F.pmod(F.xxhash64("id"), F.lit(N_BUCKETS)))
+    joined_keyed = joined.withColumn("bucket", bucket("id"))
     summary["pip"] = run_stage_idempotent(
         spark, joined_keyed, "bucket", f"{out_root}/pip", lineage, "pip", run_id
     )
 
     tiles = tile_kernel_stats(pts_back, zoom, kernel="hillshade", log_scale=True)
-    tiles_keyed = tiles.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("x"), F.col("y")), F.lit(N_BUCKETS))
-    )
+    tiles_keyed = tiles.withColumn("bucket", bucket("x", "y"))
     summary["tiles"] = run_stage_idempotent(
         spark, tiles_keyed, "bucket", f"{out_root}/tiles", lineage, "tiles", run_id
     )
@@ -299,16 +295,10 @@ def run_render(
     # must propagate — silently recomputing percentile_approx would
     # quantize resumed tiles on a different scale than the committed
     # ones (the resume-boundary seams this persisted-stats contract
-    # exists to prevent; same narrow catch as plans/lineage.py)
-    from pyspark.errors import AnalysisException
-
+    # exists to prevent)
     def _read_stats(path):
-        try:
-            return spark.read.parquet(path).first()
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" in str(e) or "PATH_NOT_FOUND" in str(e):
-                return None
-            raise
+        stats = read_parquet_or_none(spark, path)
+        return None if stats is None else stats.first()
 
     srow = _read_stats(stats_path)
     for lp in legacy_stats_paths:
@@ -345,7 +335,7 @@ def run_render(
 
     enc_schema = "z int, x long, y long, " + ("radius double, " if has_radius else "") + "dn binary"
     encoded = t.mapInPandas(encode, enc_schema)
-    keyed = encoded.withColumn("bucket", F.pmod(F.xxhash64(F.col("x"), F.col("y")), F.lit(N_BUCKETS)))
+    keyed = encoded.withColumn("bucket", bucket("x", "y"))
     lineage = LineageLog(spark, f"{out_root}/_lineage")
     try:
         return run_stage_idempotent(
@@ -553,8 +543,8 @@ def main(argv=None):
         elif args.cmd == "clean-corpus":
             import json as _json
 
-            from .plans.clean_corpus import N_BUCKETS as _NB
             from .plans.clean_corpus import run_clean_corpus
+            from .plans.lineage import N_BUCKETS
 
             summary = run_clean_corpus(
                 spark, args.docs, args.out, args.run_id,
@@ -563,7 +553,7 @@ def main(argv=None):
                 default_rate=args.default_rate,
                 span_w=args.span_w, decontam_n=args.decontam_n,
                 pack_budget=args.pack_budget,
-                pack_groups=args.pack_groups or _NB,
+                pack_groups=args.pack_groups or N_BUCKETS,
                 ngram_rules=args.ngram_rules,
                 gopher_doc_rules=args.gopher_doc_rules,
                 norm_dedup=args.norm_dedup,

@@ -1187,99 +1187,45 @@ def _halo_gauss(sigma: float) -> int:
     return int(4.0 * max(float(sigma), 0.5) + 0.5) + 1
 
 
-# §2.D declared parameter surface: one defaults dict per kernel,
-# mirroring the reference's per-algorithm get_default_params()
-# (reference algorithms/_base.py:42-53; CLI parity test-enforced like
-# reference tests/test_registry_cli_sync.py). Callers (render CLI
-# --params, queries registry) validate against these names.
-EXT_KERNEL_DEFAULTS: dict[str, dict] = {
-    "blur": {"scale": 8.0},
-    "multiscale_terrain": {"scales": (2.0, 8.0, 32.0), "weights": None, "global_stats": None},
-    "openness": {"openness_type": "positive", "num_directions": 16, "max_distance": 32,
-                 "global_stats": None, "pixel_scale": (1.0, 1.0), "z_factor": 1.0},
-    "ambient_occlusion": {"num_samples": 16, "radius": 10.0, "intensity": 1.0, "global_stats": None},
-    "specular": {"roughness_scale": 20.0, "shininess": 10.0, "roughness_norm_scale": None,
-                 "light_azimuth": DEFAULT_AZIMUTH, "light_altitude": DEFAULT_ALTITUDE},
-    "atmospheric_scattering": {"scattering_strength": 0.5},
-    "npr_edges": {"edge_sigma": 1.0, "threshold_low": 0.2, "threshold_high": 0.5, "grad_stats": None},
-    "structure_tensor": {"radii": (2.0, 8.0, 32.0), "weights": None, "st_output": "coherence",
-                         "azimuth": DEFAULT_AZIMUTH, "derivative_sigma": 1.0, "global_stats": None},
-    "frangi": {"radii": (2.0, 4.0, 8.0, 16.0), "beta": 0.5, "feature_type": "both",
-               "global_stats": None, "agg": "mean", "weights": None},
-    "lic": {"length": 20, "lic_field": "flow", "composite": "hillshade", "flow_sigma": 1.5,
-            "azimuth": DEFAULT_AZIMUTH, "altitude": DEFAULT_ALTITUDE},
-    "phase_congruency": {"wavelengths": (4.0, 8.0, 16.0, 32.0), "sigma_onf": 0.55,
-                         "noise_k": 2.0, "feature_type": "both", "global_stats": None},
-    "tv_decomposition": {"tv_scale": 32.0, "iterations": 60, "fidelity": "l1",
-                         "component": "texture", "global_stats": None},
-    "scale_drift": {"scales": (2.0, 4.0, 8.0, 16.0), "weights": None,
-                    "drift_output": "magnitude", "global_stats": None},
-    "scale_space_surprise": {"scales": (2.0, 4.0, 8.0, 16.0), "enhancement": 2.0,
-                             "weights": None, "global_stats": None},
-    "multi_light_uncertainty": {"azimuths": (0.0, 90.0, 180.0, 270.0), "altitude": 45.0,
-                                "z_factor": 1.0, "uncertainty_weight": 0.7},
-    "visual_saliency": {"scales": (2.0, 4.0, 8.0, 16.0), "weights": None, "global_stats": None},
-    "fractal_anomaly": {"radii": (4.0, 8.0, 16.0, 32.0, 64.0), "weights": None,
-                        "global_stats": None, "relief_p10": None, "relief_p75": None,
-                        "smoothing_sigma": 1.2, "despeckle_threshold": 0.35,
-                        "despeckle_alpha_max": 0.30, "detail_boost": 0.35},
-}
-
 # name -> (kernel fn, halo(params)->int). Halo rules mirror the
 # reference's per-algorithm map_overlap depths
 # (reference core/tile_processor.py:207-383, each _impl process()).
+# ``p`` is the kernel's signature defaults with the caller's params
+# merged over them (tile_kernels.kernel_halo).
 EXT_KERNELS = {
-    "blur": (np_blur, lambda p: _halo_gauss(p.get("scale", 8.0))),
-    "multiscale_terrain": (
-        np_multiscale_terrain,
-        lambda p: _halo_gauss(max(p.get("scales", (2.0, 8.0, 32.0)))),
-    ),
-    "openness": (np_openness, lambda p: int(p.get("max_distance", 32)) + 1),
+    "blur": (np_blur, lambda p: _halo_gauss(p["scale"])),
+    "multiscale_terrain": (np_multiscale_terrain, lambda p: _halo_gauss(max(p["scales"]))),
+    "openness": (np_openness, lambda p: int(p["max_distance"]) + 1),
     "ambient_occlusion": (
-        np_ambient_occlusion,
-        lambda p: int(round(p.get("radius", 10.0))) + _halo_gauss(1.0) + 1,
+        np_ambient_occlusion, lambda p: int(round(p["radius"])) + _halo_gauss(1.0) + 1,
     ),
     "specular": (
-        np_specular,
-        lambda p: max(3, int(p.get("roughness_scale", 20.0))) // 2 + _halo_gauss(1.1) + 3,
+        np_specular, lambda p: max(3, int(p["roughness_scale"])) // 2 + _halo_gauss(1.1) + 3,
     ),
     "atmospheric_scattering": (np_atmospheric_scattering, lambda p: 2),
-    "npr_edges": (np_npr_edges, lambda p: _halo_gauss(p.get("edge_sigma", 1.0)) + 7),
+    "npr_edges": (np_npr_edges, lambda p: _halo_gauss(p["edge_sigma"]) + 7),
     "structure_tensor": (
-        np_structure_tensor,
-        lambda p: int(
-            2 * max(p.get("radii", (2.0, 8.0, 32.0)))
-            + 4 * p.get("derivative_sigma", 1.0)
-            + 4
-        ),
+        np_structure_tensor, lambda p: int(2 * max(p["radii"]) + 4 * p["derivative_sigma"] + 4),
     ),
-    "frangi": (np_frangi, lambda p: int(2 * max(p.get("radii", (2.0, 4.0, 8.0, 16.0))) + 6)),
-    "lic": (
-        np_lic,
-        lambda p: int(min(int(p.get("length", 20)), 120) + 4 * p.get("flow_sigma", 1.5) + 4),
-    ),
+    "frangi": (np_frangi, lambda p: int(2 * max(p["radii"]) + 6)),
+    "lic": (np_lic, lambda p: int(min(int(p["length"]), 120) + 4 * p["flow_sigma"] + 4)),
     "phase_congruency": (
-        np_phase_congruency,
-        lambda p: int(2 * max(_eff_pc_wavelengths(p.get("wavelengths", (4.0, 8.0, 16.0, 32.0)))) + 16),
+        np_phase_congruency, lambda p: int(2 * max(_eff_pc_wavelengths(p["wavelengths"])) + 16),
     ),
-    "tv_decomposition": (np_tv_decomposition, lambda p: int(min(int(p.get("iterations", 60)), 140)) + 2),
+    "tv_decomposition": (np_tv_decomposition, lambda p: int(min(int(p["iterations"]), 140)) + 2),
     "scale_drift": (
         np_scale_drift,
         lambda p: int(
-            4 * max(_eff_drift_scales(p.get("scales", (2.0, 4.0, 8.0, 16.0))))
-            + 4 * min(max(_eff_drift_scales(p.get("scales", (2.0, 4.0, 8.0, 16.0)))), 24.0)
+            4 * max(_eff_drift_scales(p["scales"]))
+            + 4 * min(max(_eff_drift_scales(p["scales"])), 24.0)
             + 4
         ),
     ),
     "scale_space_surprise": (
-        np_scale_space_surprise,
-        lambda p: _halo_gauss(max(_eff_surprise_scales(p.get("scales", (2.0, 4.0, 8.0, 16.0))))),
+        np_scale_space_surprise, lambda p: _halo_gauss(max(_eff_surprise_scales(p["scales"]))),
     ),
     "multi_light_uncertainty": (np_multi_light_uncertainty, lambda p: 2),
-    "visual_saliency": (
-        np_visual_saliency,
-        lambda p: int(5 * max(_eff_vs_scales(p.get("scales", (2.0, 4.0, 8.0, 16.0))))),
-    ),
+    "visual_saliency": (np_visual_saliency, lambda p: int(5 * max(_eff_vs_scales(p["scales"])))),
     # two chained gaussians at sigma=r/2 (trend, then residual energy)
     # -> support 2 * halo(r/2); the reference's 2r+16 rule under-covers
     # and is documented as approximate at MAX_DEPTH
@@ -1287,8 +1233,8 @@ EXT_KERNELS = {
     # exact so the seam test can be bit-exact.
     "fractal_anomaly": (
         np_fractal_anomaly,
-        lambda p: 2 * _halo_gauss(max(p.get("radii", (4.0, 8.0, 16.0, 32.0, 64.0))) / 2.0)
-        + _halo_gauss(p.get("smoothing_sigma", 1.2))
+        lambda p: 2 * _halo_gauss(max(p["radii"]) / 2.0)
+        + _halo_gauss(p["smoothing_sigma"])
         + 2,
     ),
 }

@@ -83,6 +83,12 @@ def polygon_cover(polygons: DataFrame, res: int, ring_col: str = "ring") -> Data
             lons.cast("string"),
         ),
     )
+    # cell_of wraps x, so a point at lon = 180 lands in column 0: a ring
+    # reaching the antimeridian covers column 0 too
+    xs = F.sequence(F.col("_x0"), F.col("_x1"))
+    xs = F.when(
+        F.array_max(lons) >= 180.0, F.array_union(xs, F.array(F.lit(0).cast("long")))
+    ).otherwise(xs)
     return (
         polygons.withColumns(
             {
@@ -92,7 +98,7 @@ def polygon_cover(polygons: DataFrame, res: int, ring_col: str = "ring") -> Data
                 "_y1": cy(F.array_max(lats)),
             }
         )
-        .withColumn("_cx", F.explode(F.sequence(F.col("_x0"), F.col("_x1"))))
+        .withColumn("_cx", F.explode(xs))
         .withColumn("_cy", F.explode(F.sequence(F.col("_y0"), F.col("_y1"))))
         .withColumn(
             "cell_id",

@@ -63,6 +63,7 @@ seam-free/backend-parity guarantees.
 
 from __future__ import annotations
 
+import inspect
 import math
 
 import numpy as np
@@ -507,26 +508,7 @@ def np_aspect(
     return np.degrees(np.arctan2(-gx, gy)) % 360.0
 
 
-from .np_kernels import EXT_KERNEL_DEFAULTS, EXT_KERNELS  # noqa: E402  (registry merge below)
-
-# §2.D declared per-kernel parameter defaults (reference
-# get_default_params contract); the local kernels' surfaces first
-KERNEL_DEFAULTS: dict[str, dict] = {
-    "hillshade": {"azimuth_deg": 315.0, "altitude_deg": 45.0,
-                  "pixel_scale": (1.0, 1.0), "z_factor": 1.0},
-    "slope": {"unit": "degree", "pixel_scale": (1.0, 1.0), "z_factor": 1.0},
-    "curvature": {"mode": "planform", "pixel_scale": (1.0, 1.0), "z_factor": 1.0},
-    "curvature_display": {"mode": "mean", "pixel_scale": (1.0, 1.0), "z_factor": 1.0},
-    "aspect": {"pixel_scale": (1.0, 1.0)},
-    **EXT_KERNEL_DEFAULTS,
-}
-
-# kernels that consume per-tile METRIC pixel scales (gradient spacing /
-# ray distances); tile_kernel(metric_scale=True) injects pixel_scale
-# per tile for exactly these (reference core/tile_processor.py:910-932)
-METRIC_SCALE_KERNELS = frozenset(
-    {"hillshade", "slope", "curvature", "curvature_display", "aspect", "openness"}
-)
+from .np_kernels import EXT_KERNELS  # noqa: E402  (registry merge below)
 
 # kernels whose output pixel reads only inputs within its halo depth r
 # (np.gradient stencils): _kernel_tail runs these on the grid's data
@@ -549,6 +531,23 @@ KERNELS = {
     # fractal_anomaly (reference algorithms/dask_registry.py:27-49)
     **EXT_KERNELS,
 }
+
+# §2.D declared per-kernel parameter defaults (reference
+# get_default_params contract): each kernel's keyword parameters, read
+# off its signature, so a surface cannot drift from the code it names
+KERNEL_DEFAULTS: dict[str, dict] = {
+    name: {
+        k: p.default
+        for k, p in list(inspect.signature(fn).parameters.items())[1:]
+        if p.kind is not p.VAR_KEYWORD
+    }
+    for name, (fn, _) in KERNELS.items()
+}
+
+# kernels that consume per-tile METRIC pixel scales (gradient spacing /
+# ray distances); tile_kernel(metric_scale=True) injects pixel_scale
+# per tile for exactly these (reference core/tile_processor.py:910-932)
+METRIC_SCALE_KERNELS = frozenset(k for k, d in KERNEL_DEFAULTS.items() if "pixel_scale" in d)
 
 
 def tile_pixel_scales(tile_y: int, z: int) -> tuple[float, float]:
@@ -582,7 +581,7 @@ def kernel_halo(kernel: str, params: dict | None = None) -> int:
     whose support exceeds that run coarsened via the multiscale
     overview path instead (reference Constants.MAX_DEPTH analogue)."""
     _, spec = KERNELS[kernel]
-    h = spec(params or {}) if callable(spec) else int(spec)
+    h = spec({**KERNEL_DEFAULTS[kernel], **(params or {})}) if callable(spec) else int(spec)
     return min(int(h), TILE_PX - 1)
 
 

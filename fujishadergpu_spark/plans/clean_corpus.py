@@ -5,7 +5,7 @@ The geo pipeline (cli.run_pipeline) made geoparse -> PIP -> tiles a
 first-class resumable job; this module gives the text family the same
 A18 treatment. Eight stages, chained through parquet, every stage
 written with plans/lineage.run_stage_idempotent (bucketed dynamic
-partition overwrite + lineage anti-join), so a killed run resumes
+partition overwrite + lineage done-key filter), so a killed run resumes
 idempotently at per-bucket granularity and a completed run re-invoked
 is a no-op:
 
@@ -57,9 +57,7 @@ from ..operators.packing import pack_sequences
 from ..operators.repetition import line_dedup, repetition_features
 from ..operators.sampling import stratified_sample
 from ..operators.spandedup import substring_dedup
-from .lineage import LineageLog, run_stage_idempotent
-
-N_BUCKETS = 64  # same resume granularity as cli.run_pipeline
+from .lineage import N_BUCKETS, LineageLog, bucket, read_parquet_or_none, run_stage_idempotent
 
 STAGES = (
     "pii",
@@ -97,7 +95,7 @@ DOC_STAGES = STAGES[:6]
 
 
 def _bucketed(df: DataFrame) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(N_BUCKETS)))
+    return df.withColumn("bucket", bucket("doc_id"))
 
 
 def run_clean_corpus(
@@ -234,18 +232,9 @@ def run_clean_corpus(
             spark, df, key_col, f"{out_root}/{name}", lineage, name, run_id
         )
         # a stage may legitimately have ZERO survivors (e.g. rate-0
-        # sampling): the write leaves only _SUCCESS, so readback can't
-        # infer a schema — feed downstream an empty typed frame. Any
-        # other read failure propagates (the lineage.py narrow-catch
-        # discipline).
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(f"{out_root}/{name}")
-        except AnalysisException as e:
-            if "UNABLE_TO_INFER_SCHEMA" in str(e) or "PATH_NOT_FOUND" in str(e):
-                return spark.createDataFrame([], "doc_id long, text string")
-            raise
+        # sampling): feed downstream an empty typed frame
+        out = read_parquet_or_none(spark, f"{out_root}/{name}")
+        return spark.createDataFrame([], "doc_id long, text string") if out is None else out
 
     raw = spark.read.parquet(docs_path)
 

@@ -9,14 +9,18 @@ by a logical key and appends one lineage row per completed key::
 
     run_id, stage, partition_key, row_count, bytes, status, ts
 
-Resume = anti-join the pending keys against completed lineage rows,
-process only the remainder, and overwrite-by-partition (Spark dynamic
+Resume = collect the stage's completed keys to the driver (at most
+MAX_KEYS), drop their rows with one literal NOT-IN filter, process
+only the remainder, and overwrite-by-partition (Spark dynamic
 partitionOverwriteMode) so replays are idempotent — a crashed run
 leaves either a complete partition + lineage row, or neither visible
-to the next run's anti-join. On an Iceberg catalog the same code
-writes via ``writeTo(...).overwritePartitions()``; the parquet path
-keeps the sandbox dependency-free while preserving the commit
-semantics this layer needs.
+to the next run's filter. The filter is a plain predicate on the key,
+so Catalyst pushes it below the upstream to the scan wherever the key
+is a function of scanned columns: a finished bucket is never
+recomputed. On an Iceberg catalog the same code writes via
+``writeTo(...).overwritePartitions()``; the parquet path keeps the
+sandbox dependency-free while preserving the commit semantics this
+layer needs.
 
 Metrics are computed by reading back the just-written partitions
 (validating the write, the reference's COG-validation gate analog,
@@ -30,13 +34,49 @@ import time
 import uuid
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "run_id string, stage string, partition_key string, "
     "row_count long, bytes long, status string, ts double"
 )
+
+N_BUCKETS = 64  # partition-key buckets of every hash-keyed stage
+# completed keys travel as a driver-side list and a literal IN-set in
+# the plan; a stage with more keys than this has outgrown per-key resume
+MAX_KEYS = 65_536
+
+
+def bucket(*cols) -> Column:
+    """A stage's partition key: a stable hash bucket of ``cols``
+    (10^12 rows / N_BUCKETS each resume unit)."""
+    return F.pmod(F.xxhash64(*cols), F.lit(N_BUCKETS))
+
+
+def read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
+    """``path`` read as Parquet, or None when nothing was written there:
+    the path is missing, or a write of zero rows left only _SUCCESS, so
+    no schema can be inferred. Any other failure (FS fault, corrupt
+    footer) propagates rather than masquerading as an empty result."""
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "UNABLE_TO_INFER_SCHEMA" in str(e) or "PATH_NOT_FOUND" in str(e):
+            return None
+        raise
+
+
+def _bounded_collect(df: DataFrame, what: str) -> list:
+    rows = df.limit(MAX_KEYS + 1).collect()
+    if len(rows) > MAX_KEYS:
+        raise ValueError(f"{what}: more than MAX_KEYS={MAX_KEYS} partition keys")
+    return rows
+
+
+def _pending(key: Column, done: list[str]) -> Column:
+    """True for a key outside ``done``; a NULL key stays pending."""
+    return ~F.coalesce(key.isin(done), F.lit(False))
 
 
 class LineageLog:
@@ -54,13 +94,16 @@ class LineageLog:
         except Exception:
             return self.spark.createDataFrame([], LINEAGE_SCHEMA)
 
-    def completed_keys(self, stage: str) -> DataFrame:
-        return (
+    def completed_keys(self, stage: str) -> list[str]:
+        """The stage's completed keys; ValueError past MAX_KEYS."""
+        done = (
             self.read()
             .filter((F.col("stage") == stage) & (F.col("status") == "ok"))
             .select("partition_key")
+            .dropna()
             .distinct()
         )
+        return [r[0] for r in _bounded_collect(done, f"stage {stage!r} completed keys")]
 
     def append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.path)
@@ -105,7 +148,7 @@ def run_stage_idempotent(
     duplicating rows.
 
     ``catalog_table`` (Iceberg/V2 path): the same commit semantics via
-    the DataFrameWriterV2 — first run ``createOrReplace()``, resumed
+    the DataFrameWriterV2 — first run ``create()``, resumed
     runs ``overwritePartitions()`` (BASELINE.json's Iceberg posture:
     the per-partition replace is an ATOMIC snapshot commit, so a
     killed run leaves either the previous snapshot or the complete new
@@ -114,15 +157,16 @@ def run_stage_idempotent(
     session (see ``iceberg_available``).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    # completed keys are read TWICE (anti-join + readback diff) but the
-    # lineage log is tiny; the expensive upstream ``df`` executes
-    # exactly ONCE — inside the write. (The previous shape pre-counted
-    # pending keys, materializing the whole upstream stage, then the
-    # write recomputed it: every pipeline stage ran twice.)
-    done = lineage.completed_keys(stage).localCheckpoint()
-    pending = df.withColumn("_pk", F.col(key_col).cast("string")).join(
-        done.withColumnRenamed("partition_key", "_pk"), "_pk", "left_anti"
-    )
+    skipped = {"run_id": run_id, "stage": stage, "keys_processed": 0, "skipped": True}
+    # one bounded list, read before anything is written; the expensive
+    # upstream ``df`` executes at most ONCE — inside the write — and
+    # only for the rows the pushed-down filter keeps
+    done = lineage.completed_keys(stage)
+    pending = df.withColumn("_pk", F.col(key_col).cast("string"))
+    # rebalanced by key, so each key's rows reach one write task (AQE
+    # splits an oversized key) and a stage writes about one file per
+    # key, not one per (upstream task, key) pair
+    pending = pending.filter(_pending(F.col("_pk"), done)).hint("rebalance", "_pk")
     if catalog_table is not None:
         if not iceberg_available(spark):
             raise RuntimeError(
@@ -157,55 +201,33 @@ def run_stage_idempotent(
             .partitionBy("_pk")
             .parquet(out_path)
         )
-        # validate-by-readback + metrics. Keys written THIS run =
-        # readback keys minus previously-completed keys (disk = old ∪
-        # new under dynamic overwrite) — derived from the cheap
-        # readback scan, never by re-executing the upstream.
-        # Partitions on disk are always job-complete (the committer
-        # publishes at job end), so a key from an earlier run that
-        # crashed between commit and lineage-append is correctly
-        # adopted here with its full row count.
-        try:
-            readback = spark.read.parquet(out_path)
-        except AnalysisException as e:
-            # empty first run: the write produced no partitions (only
-            # _SUCCESS), so schema inference fails — nothing to read
-            # back or log. Anything else (FS fault, corrupt footer)
-            # must propagate, not masquerade as a clean skip.
-            if "UNABLE_TO_INFER_SCHEMA" in str(e) or "PATH_NOT_FOUND" in str(e):
-                return {"run_id": run_id, "stage": stage, "keys_processed": 0, "skipped": True}
-            raise
-    written = readback.withColumn("_pk", F.col("_pk").cast("string")).join(
-        done.withColumnRenamed("partition_key", "_pk"), "_pk", "left_anti"
+        # an empty first run leaves only _SUCCESS: nothing to log
+        readback = read_parquet_or_none(spark, out_path)
+        if readback is None:
+            return skipped
+    # validate-by-readback + metrics. Keys written THIS run = readback
+    # keys minus the completed keys (disk = old ∪ new under dynamic
+    # overwrite), counted by one aggregate over the pruned readback,
+    # never by re-executing the upstream. Partitions on disk are always
+    # job-complete (the committer publishes at job end), so a key from
+    # an earlier run that crashed between commit and lineage-append is
+    # correctly adopted here with its full row count.
+    key = F.col("_pk").cast("string")  # partition inference may read _pk as int
+    counts = _bounded_collect(
+        readback.filter(_pending(key, done)).groupBy(key.alias("partition_key")).count(),
+        f"stage {stage!r} written keys",
     )
+    if not counts:
+        return skipped
     now = time.time()
-    metrics = (
-        written.groupBy("_pk")
-        .agg(F.count("*").alias("row_count"))
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(stage).alias("stage"),
-            F.col("_pk").alias("partition_key"),
-            "row_count",
-            F.lit(-1).cast("long").alias("bytes"),
-            F.lit("ok").alias("status"),
-            F.lit(now).alias("ts"),
-        )
-    ).cache()
-    n_keys = metrics.count()
-    if n_keys == 0:
-        metrics.unpersist()
-        return {"run_id": run_id, "stage": stage, "keys_processed": 0, "skipped": True}
-    # best-effort per-partition byte sizes (local/posix paths)
-    rows = metrics.collect()
     out = []
-    for r in rows:
+    for r in counts:
+        # best-effort per-partition byte sizes (local/posix paths)
         d = os.path.join(out_path, f"_pk={r['partition_key']}")
         b = _dir_bytes(d) if os.path.isdir(d) else -1
-        out.append((r["run_id"], r["stage"], r["partition_key"], r["row_count"], b, "ok", r["ts"]))
+        out.append((run_id, stage, r["partition_key"], r["count"], b, "ok", now))
     lineage.append(spark.createDataFrame(out, LINEAGE_SCHEMA))
-    metrics.unpersist()
-    return {"run_id": run_id, "stage": stage, "keys_processed": n_keys, "skipped": False}
+    return {"run_id": run_id, "stage": stage, "keys_processed": len(out), "skipped": False}
 
 
 def audit_stage(spark: SparkSession, out_path: str, lineage: LineageLog, stage: str) -> DataFrame:

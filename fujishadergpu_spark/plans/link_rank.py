@@ -4,7 +4,7 @@ r5 verdict #2's pattern — applied to the graph side).
 
 Five stages, chained through parquet, every stage written with
 plans/lineage.run_stage_idempotent (bucketed dynamic partition
-overwrite + lineage anti-join), so a killed run resumes idempotently
+overwrite + lineage done-key filter), so a killed run resumes idempotently
 at per-bucket granularity and a completed run re-invoked is a no-op:
 
     edges       normalize: distinct (src, dst), self-loops dropped
@@ -16,7 +16,7 @@ at per-bucket granularity and a completed run re-invoked is a no-op:
 Stage contract: ``edges`` is the ONE pass over the raw link input;
 every rank stage reads the edges parquet, never the original input,
 so a resumed run recomputes nothing upstream of the crash. Rank
-stages bucket their output by id hash (same N_BUCKETS resume
+stages bucket their output by id hash (same lineage.N_BUCKETS resume
 granularity as the geo and corpus pipelines).
 
 Why bucketed resume is SOUND for iterative ranks: every operator in
@@ -36,23 +36,20 @@ checkpoint/--cog-only design (reference core/tile_processor.py:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.bfs import seed_distance
 from ..operators.graphcore import normalize_edges
 from ..operators.hits import hits
 from ..operators.linkstats import link_stats
 from ..operators.pagerank import pagerank
-from .lineage import LineageLog, run_stage_idempotent
-
-N_BUCKETS = 64  # same resume granularity as cli.run_pipeline
+from .lineage import LineageLog, bucket, run_stage_idempotent
 
 
 STAGES = ("edges", "linkstats", "pagerank", "hits", "seed_distance")
 
 
 def _bucketed(df: DataFrame, key: str) -> DataFrame:
-    return df.withColumn("bucket", F.pmod(F.xxhash64(key), F.lit(N_BUCKETS)))
+    return df.withColumn("bucket", bucket(key))
 
 
 def run_link_rank(

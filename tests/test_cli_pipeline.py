@@ -184,3 +184,40 @@ def test_render_pools_central_window_when_sample_misses(spark, tmp_path):
     tiles = spark.read.parquet(f"{out}/tiles_slope_z5").collect()
     assert [(r["x"], r["y"]) for r in tiles] == [(28, 12)]
     assert len(np.unique(np.frombuffer(tiles[0]["dn"], dtype=np.uint8))) > 2
+
+
+@pytest.mark.parametrize("every", [3, 1])
+def test_pipeline_pages_without_coordinates(spark, tmp_path, every):
+    """Pages whose URL and text carry no coordinates (every ``every``-th
+    page; every=1 is all of them) geoparse to NULL lat/lon: the points
+    stage keeps them, PIP and tiles drop them, each stage's lineage
+    row counts sum to its readback count, and a second run processes
+    no key."""
+    src = str(tmp_path / "pages")
+    no_coords = F.pmod(F.regexp_extract("url", r"/p/(\d+)", 1).cast("long"), F.lit(every)) == 0
+    (
+        pages(spark, 600)
+        .withColumns({
+            "url": F.when(no_coords, F.regexp_replace("url", r"\?.*$", "")).otherwise(F.col("url")),
+            "text": F.when(no_coords, F.regexp_replace("text", r" near \([^)]*\)", ""))
+            .otherwise(F.col("text")),
+        })
+        .write.parquet(src)
+    )
+    out = str(tmp_path / "out")
+    s1 = run_pipeline(spark, src, out, zoom=5, run_id="r1")
+    assert not s1["points"]["skipped"]
+    pts = spark.read.parquet(f"{out}/points")
+    assert pts.count() == 600
+    assert pts.filter(F.col("lat").isNull()).count() == len(range(0, 600, every))
+    logged = {
+        r["stage"]: r["n"]
+        for r in spark.read.parquet(f"{out}/_lineage").groupBy("stage")
+        .agg(F.sum("row_count").alias("n")).collect()
+    }
+    for stage in ("points", "pip", "tiles"):
+        written = 0 if s1[stage]["skipped"] else spark.read.parquet(f"{out}/{stage}").count()
+        assert logged.get(stage, 0) == written, stage
+    assert s1["pip"]["skipped"] == s1["tiles"]["skipped"] == (every == 1)
+    s2 = run_pipeline(spark, src, out, zoom=5, run_id="r2")
+    assert all(s["keys_processed"] == 0 for s in s2.values()), s2

@@ -106,6 +106,21 @@ def test_kernel_halo_capped():
     assert kernel_halo("openness", {"max_distance": 5}) == 6
 
 
+def test_kernel_halo_at_defaults_pinned():
+    """The halo rules read their defaults off the kernel signatures;
+    at the defaults every kernel keeps the halo its rule had when the
+    defaults were restated as literals next to each rule."""
+    assert {k: kernel_halo(k) for k in KERNELS} == {
+        "hillshade": 1, "slope": 1, "curvature": 2, "curvature_display": 2,
+        "aspect": 1, "blur": 33, "multiscale_terrain": 129, "openness": 33,
+        "ambient_occlusion": 16, "specular": 18, "atmospheric_scattering": 2,
+        "npr_edges": 12, "structure_tensor": 72, "frangi": 38, "lic": 30,
+        "phase_congruency": 80, "tv_decomposition": 62, "scale_drift": 132,
+        "scale_space_surprise": 65, "multi_light_uncertainty": 2,
+        "visual_saliency": 80, "fractal_anomaly": 255,
+    }
+
+
 # ------------------------- analytic fixtures --------------------------
 
 

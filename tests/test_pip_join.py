@@ -170,3 +170,50 @@ def test_salted_plan_shape_smj_on_salt_key(spark, points_df):
     assert "_salt" in plan
     assert "BroadcastHashJoin" not in plan
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+
+
+def test_pip_degenerate_points_match_oracle(spark):
+    """NULL, NaN, out-of-range, pole and antimeridian points against
+    the brute-force ray cast, with rings that touch both poles and both
+    sides of the antimeridian. A NULL coordinate has no cell; a NaN one
+    casts to cell 0 in Spark, and the ray cast rejects it there; an
+    out-of-range point lands in a clamped or wrapped cell and matches
+    nothing; a point at lon = 180 wraps to column 0, which a ring
+    reaching the antimeridian must also cover."""
+    from fujishadergpu_spark.sources.polygons import RING_SCHEMA
+
+    def rect(x0, y0, x1, y1):
+        return [(x0, y0), (x1, y0), (x1, y1), (x0, y1)]
+
+    nan = float("nan")
+    rows = [
+        (35.0, 139.0), (0.5, 0.5),  # ordinary points
+        (None, 139.0), (35.0, None), (None, None),  # NULL coordinates
+        (nan, 10.0), (10.0, nan), (nan, nan),  # NaN coordinates
+        (95.0, 20.0), (-91.0, -30.0), (0.0, 200.0), (1.0, -190.0), (0.5, 360.5),  # out of range
+        (90.0, 0.0), (-90.0, 0.0), (85.0, 5.0), (-85.0, 5.0),  # poles
+        (5.0, 180.0), (5.0, -180.0), (90.0, 180.0), (-90.0, -180.0),  # antimeridian
+    ]
+    rings = polygon_rows() + [
+        (1000, "north_cap", "edge", rect(-10.0, 80.0, 10.0, 90.0)),
+        (1001, "south_cap", "edge", rect(-10.0, -90.0, 10.0, -80.0)),
+        (1002, "east_edge", "edge", rect(170.0, 0.0, 180.0, 10.0)),
+        (1003, "west_edge", "edge", rect(-180.0, 0.0, -170.0, 10.0)),
+    ]
+    pol = spark.createDataFrame(
+        [(pid, n, k, [{"lon": x, "lat": y} for x, y in r]) for pid, n, k, r in rings], RING_SCHEMA
+    )
+    pts = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(rows)], "id long, lat double, lon double"
+    )
+    lat = np.array([nan if a is None else a for a, _ in rows])
+    lon = np.array([nan if b is None else b for _, b in rows])
+    exp = {
+        (int(i), pid) for pid, _, _, ring in rings
+        for i in np.flatnonzero(raycast_oracle(lon, lat, ring))
+    }
+    # every degenerate class that can match does: both caps, both edges
+    assert {pid for _, pid in exp} >= {1000, 1001, 1002, 1003}
+    for res in (None, 3, 6):
+        got = set(map(tuple, pip_join(pts, pol, res=res).select("id", "polygon_id").collect()))
+        assert got == exp, res
